@@ -223,8 +223,6 @@ object Analytics {
   /** Degree-ordered orientation of a canonical simple edge set: each edge
     * becomes (a, b, db) with rank(a) < rank(b) under rank = (degree, id),
     * carrying b's degree so wedge pairs can be ordered without a re-join. */
-  private def orientEdges(e: DataFrame): DataFrame = orientEdges(e, degreesOf(e))
-
   private def orientEdges(e: DataFrame, deg: DataFrame): DataFrame = {
     // both degree attaches project deg IDENTICALLY so their broadcast
     // exchanges canonicalize to ONE build per call (ReuseExchange — kTruss
@@ -279,55 +277,46 @@ object Analytics {
     * at round end; lineage truncates via lazy checkpoint + the round's own
     * convergence count. */
   def kTruss(g: PropertyGraph, k: Int, maxRounds: Int = 5): DataFrame = {
-    val (result, converged) = kTrussConverged(g, k, maxRounds)
-    if (!converged)
-      System.err.println(
-        s"[graft] kTruss(k=$k): maxRounds=$maxRounds elapsed with removals still occurring — " +
-          "result is a SUPERSET of the true k-truss; raise maxRounds or use kTrussConverged")
+    val (result, outcome) = kTrussOutcome(g, k, maxRounds)
+    Fixpoint.warnIfExhausted(s"kTruss(k=$k)", outcome,
+      "result is a SUPERSET of the true k-truss; raise maxRounds or use kTrussConverged")
     result
   }
 
   /** kTruss with an explicit convergence flag: (surviving edges, converged).
-    *
-    * `reuseRanks` (default true) freezes the orientation order at the
-    * ROUND-0 degrees: any total order yields each triangle exactly once and
-    * support counts are orientation-independent, so correctness is
-    * untouched — but every later round skips its degree aggregate and the
-    * two rank-attach joins run against one persisted frame instead of a
-    * fresh shuffle. Peeling removes few edges per round, so the wedge-bound
-    * quality of the frozen order barely degrades. */
-  def kTrussConverged(g: PropertyGraph, k: Int, maxRounds: Int = 5,
-      reuseRanks: Boolean = true): (DataFrame, Boolean) = {
+    * The orientation order is frozen at the ROUND-0 degrees: any total order
+    * yields each triangle exactly once and support counts are
+    * orientation-independent, so correctness is untouched — but every later
+    * round skips its degree aggregate and the two rank-attach joins run
+    * against one persisted frame instead of a fresh shuffle. Peeling removes
+    * few edges per round, so the wedge-bound quality of the frozen order
+    * barely degrades. */
+  def kTrussConverged(g: PropertyGraph, k: Int, maxRounds: Int = 5): (DataFrame, Boolean) = {
+    val (result, outcome) = kTrussOutcome(g, k, maxRounds)
+    (result, outcome.converged)
+  }
+
+  private def kTrussOutcome(g: PropertyGraph, k: Int, maxRounds: Int): (DataFrame, Outcome) = {
     require(k >= 3, s"kTruss needs k >= 3 (k=2 keeps every edge), got $k")
-    var e = simpleEdges(g).transform(roundBarrier)
-    var cur = e.count()
-    var round = 0
-    var removed = true
+    val e0 = simpleEdges(g).transform(roundBarrier)
+    var cur = e0.count()
     // deg0 is vertex-sized: count it once (the count also materializes the
     // persist) and broadcast-hint the rank-attach joins while it fits —
     // the checkpointed e frame hides stats from AQE, so without the hint
     // round 1 plans both rank attaches as shuffle joins
-    val maxBcast = broadcastMaxRows(g)
-    def hint(df: DataFrame, n: Long): DataFrame = if (n <= maxBcast) broadcast(df) else df
-    // the oriented frame is EDGE-shaped and hinted at two concurrent attach
-    // sites — gate it on the tighter edge-row cap (see broadcastMaxEdgeRows)
-    val maxBcastE = broadcastMaxEdgeRows(g)
-    def hintE(df: DataFrame, n: Long): DataFrame = if (n <= maxBcastE) broadcast(df) else df
-    val deg0 = if (reuseRanks)
-      Some(degreesOf(e).persist(StorageLevel.MEMORY_AND_DISK)) else None
-    val deg0Hinted = deg0.map(d => hint(d, d.count()))
-    val rlog = new RoundLog(g.spark, "ktruss")
-    while (round < maxRounds && removed && cur > 0) {
-      val oriented = (deg0Hinted match {
-        case Some(d) => orientEdges(e, d)
-        case None => orientEdges(e)
-      }).persist(StorageLevel.MEMORY_AND_DISK)
+    val deg0 = degreesOf(e0).persist(StorageLevel.MEMORY_AND_DISK)
+    val deg0Hinted = hint(deg0, deg0.count())
+    var oriented: DataFrame = null
+    Fixpoint.run("ktruss", maxRounds, e0, residual0 = cur, owned = Seq(deg0)) { (e, _) =>
+      oriented = orientEdges(e, deg0Hinted).persist(StorageLevel.MEMORY_AND_DISK)
       // support(edge) = triangles containing it: explode each instance into
       // its three canonical edges (orientation is by rank, so re-canonicalize
       // by id before counting). The oriented frame is edge-count-sized (cur
       // rows, maintained by the loop), so the wedge/closure joins broadcast
-      // it while it fits — the wedge frame then never exchanges.
-      val sup = triangleInstancesFrom(oriented, d => hintE(d, cur))
+      // it while it fits — the wedge frame then never exchanges. It is
+      // EDGE-shaped and hinted at two concurrent attach sites, so it is
+      // gated on the tighter edge-row cap.
+      val sup = triangleInstancesFrom(oriented, d => hint(d, cur, edgeShaped = true))
         .select(explode(array(
           struct(col("a").as("x"), col("b").as("y")),
           struct(col("a").as("x"), col("c").as("y")),
@@ -335,20 +324,16 @@ object Analytics {
         .select(least(col("p.x"), col("p.y")).as("u"),
           greatest(col("p.x"), col("p.y")).as("v"))
         .groupBy(col("u"), col("v")).agg(count(lit(1)).as("__sup"))
-      val next = e.join(sup, Seq("u", "v"), "left")
+      e.join(sup, Seq("u", "v"), "left")
         .filter(coalesce(col("__sup"), lit(0L)) >= (k - 2).toLong)
         .select(col("u"), col("v"))
-        .transform(roundBarrier)
+    } { next =>
       val n = next.count() // materializes the round; doubles as convergence
       oriented.unpersist(false)
-      removed = n < cur
+      val removed = cur - n
       cur = n
-      e = next
-      round += 1
-      rlog.tick(round)
+      if (n == 0L) 0L else removed
     }
-    deg0.foreach(_.unpersist(false))
-    (e, !removed || cur == 0L)
   }
 
   /** Edge embeddedness — the per-edge triangle count (support): how many
@@ -613,20 +598,17 @@ object Analytics {
     // rounds) but materialization rides the next action over the frame — the
     // count below, or the next round's — instead of costing a dedicated
     // per-round job (eager localCheckpoint runs its own count internally).
-    var labels = ids.select(col("id"), col("id").as("l")).transform(roundBarrier)
-    val bcast = labels.count() <= 10000000L
-    def hint(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    (1 to rounds).foreach { _ =>
-      val freq = und.join(hint(labels), und("dst") === labels("id"))
+    val labels0 = ids.select(col("id"), col("id").as("l")).transform(roundBarrier)
+    val vCount = labels0.count()
+    val labels = Fixpoint.fixedRounds("lpa", rounds, labels0, owned = Seq(und)) { (labels, _) =>
+      val freq = und.join(hint(labels, vCount), und("dst") === labels("id"))
         .groupBy(und("src").as("id"), col("l"))
         .agg(count(lit(1)).as("__c"))
       val adopted = freq.groupBy(col("id"))
         .agg(max_by(col("l"), struct(col("__c"), (-col("l")).as("__nl"))).as("__a"))
-      labels = labels.join(adopted, Seq("id"), "left")
+      labels.join(adopted, Seq("id"), "left")
         .select(col("id"), coalesce(col("__a"), col("l")).as("l"))
-        .transform(roundBarrier)
     }
-    und.unpersist(false)
     labels.select(col("id"), col("l").as("community"))
   }
 
@@ -1093,28 +1075,22 @@ object Analytics {
     // per-level frames are bounded by |distinct sources| · |V| (checkpointed
     // frames hide size stats from AQE, so the hints are load-bearing)
     val vBound = sources.distinct.size.toLong * g.vertices.count()
-    val maxBcast = broadcastMaxRows(g)
-    def hint(df: DataFrame): DataFrame = if (vBound <= maxBcast) broadcast(df) else df
     // forward BFS, batched: (s, id, d) — absent sources drop at the seed
     var dist = sources.distinct.toDF("s")
       .join(g.vertices.select(col("id")), col("s") === col("id"), "left_semi")
       .select(col("s"), col("s").as("id"), lit(0L).as("d"))
       .transform(roundBarrier)
-    var frontier = dist
-    var lvl = 1L
-    var go = frontier.count() > 0
-    if (!go) { e.unpersist(false); return empty }
-    val rlog = new RoundLog(g.spark, "betweenness_bfs")
-    while (lvl <= maxIter && go) {
-      val next = e.join(hint(frontier.select(col("s"), col("id").as("src"))), Seq("src"))
+    val seeded = dist.count()
+    if (seeded == 0L) { e.unpersist(false); return empty }
+    Fixpoint.run("betweenness_bfs", maxIter, dist, residual0 = seeded) { (frontier, lvl) =>
+      e.join(hint(frontier.select(col("s"), col("id").as("src")), vBound), Seq("src"))
         .select(col("s"), col("dst").as("id")).distinct()
-        .join(hint(dist.select(col("s"), col("id"))), Seq("s", "id"), "left_anti")
-        .select(col("s"), col("id"), lit(lvl).as("d"))
-        .transform(roundBarrier)
-      go = next.count() > 0
-      if (go) { dist = dist.unionByName(next); frontier = next }
-      lvl += 1
-      rlog.tick(lvl.toInt)
+        .join(hint(dist.select(col("s"), col("id")), vBound), Seq("s", "id"), "left_anti")
+        .select(col("s"), col("id"), lit(lvl.toLong).as("d"))
+    } { next =>
+      val n = next.count()
+      if (n > 0) dist = dist.unionByName(next)
+      n
     }
     dist = dist.localCheckpoint(true)
     val maxD = dist.agg(max(col("d"))).head.getLong(0)
@@ -1128,9 +1104,9 @@ object Analytics {
       .select(col("s"), col("id"), lit(1L).as("sigma")).transform(roundBarrier))
     (1L to maxD).foreach { r =>
       val lv = e.join(hint(layers.last.select(col("s"), col("id").as("src"),
-          col("sigma"))), Seq("src"))
+          col("sigma")), vBound), Seq("src"))
         .select(col("s"), col("dst").as("id"), col("sigma"))
-        .join(hint(dist.filter(col("d") === r).select(col("s"), col("id"))),
+        .join(hint(dist.filter(col("d") === r).select(col("s"), col("id")), vBound),
           Seq("s", "id"), "left_semi")
         .groupBy(col("s"), col("id")).agg(sum(col("sigma")).as("sigma"))
         .transform(roundBarrier)
@@ -1146,18 +1122,18 @@ object Analytics {
     while (r >= 0) {
       val nxt = layers((r + 1).toInt)
         .select(col("s"), col("id").as("dst"), col("sigma").as("__sw"))
-        .join(hint(delta.select(col("s"), col("id").as("dst"), col("delta").as("__dw"))),
-          Seq("s", "dst"))
+        .join(hint(delta.select(col("s"), col("id").as("dst"), col("delta").as("__dw")),
+          vBound), Seq("s", "dst"))
       val lvlS = layers(r.toInt)
         .select(col("s"), col("id").as("src"), col("sigma").as("__sv"))
-      val contrib = e.join(hint(nxt), Seq("dst")).join(hint(lvlS), Seq("s", "src"))
+      val contrib = e.join(hint(nxt, vBound), Seq("dst")).join(hint(lvlS, vBound), Seq("s", "src"))
         .select(col("s"), col("src").as("id"),
           round(round(col("__sv").cast("double") / col("__sw").cast("double"), 9)
               .cast(DecimalType(13, 12)) * (lit(1).cast(dec) + col("__dw")), 6)
             .cast(dec).as("c"))
         .groupBy(col("s"), col("id")).agg(sum(col("c")).as("__s"))
       delta = layers(r.toInt).select(col("s"), col("id"))
-        .join(hint(contrib), Seq("s", "id"), "left")
+        .join(hint(contrib, vBound), Seq("s", "id"), "left")
         .select(col("s"), col("id"),
           coalesce(col("__s").cast(dec), zero).as("delta"))
         .transform(roundBarrier)
@@ -1449,30 +1425,24 @@ object Analytics {
       .unionAll(g.edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = g.vertices.select(col("id"), col("id").as("l")).transform(roundBarrier)
-    // one cheap count decides the regime for the whole run (threshold is a
-    // conf so the shuffle-join regime — the 100× branch — is rehearsable
-    // in tests without a 10M-vertex fixture)
-    val bcastLabels = labels.count() <= broadcastMaxRows(g)
-    def hint(df: DataFrame): DataFrame = if (bcastLabels) broadcast(df) else df
+    val labels0 = g.vertices.select(col("id"), col("id").as("l")).transform(roundBarrier)
     // Early exit at the fixed point: min-label propagation is MONOTONE
     // (labels only ever decrease), so the EXACT decimal label-sum strictly
-    // decreases until convergence — equal consecutive sums ⇒ every remaining
-    // round is a no-op. The check is one tiny agg per round over the
+    // decreases until convergence — an unchanged sum ⇒ every remaining round
+    // is a no-op. The sum rides each round's one action over the
     // already-checkpointed (id, label) frame; each round it skips saves a
-    // full keyed shuffle of the vertex set (what a wasted superstep costs
-    // at 100 TB). decimal(38,0), not long: a big-id × big-vertex-count sum
+    // full keyed shuffle of the vertex set (what a wasted superstep costs at
+    // 100 TB). decimal(38,0), not long: a big-id × big-vertex-count sum
     // overflows int64, and an overflow wraparound could fake convergence.
-    var prevSum: java.math.BigDecimal = null
-    var round = 0
-    var converged = false
-    val rlog = new RoundLog(g.spark, "cc")
-    while (round < iterations && !converged) {
-      val nb = und.join(hint(labels), und("dst") === labels("id"))
+    // The setup action yields the vertex count (one cheap count decides the
+    // broadcast regime for the whole run) and the round-0 sum together.
+    val setup = labels0.agg(count(lit(1)), sum(col("l").cast("decimal(38,0)"))).head
+    val vCount = setup.getLong(0)
+    var prevSum = if (setup.isNullAt(1)) java.math.BigDecimal.ZERO else setup.getDecimal(1)
+    val (labels, _) = Fixpoint.run("cc", iterations, labels0, owned = Seq(und)) { (labels, _) =>
+      val nb = und.join(hint(labels, vCount), und("dst") === labels("id"))
         .select(und("src").as("id"), col("l").as("nl"))
         .groupBy(col("id")).agg(min(col("nl")).as("nl"))
-      // see shortestHopsExact: double self-reference per round ⇒ eager
-      // lineage truncation keeps the plan constant-size
       val stepped = labels.join(nb, Seq("id"), "left")
         .select(col("id"), least(col("l"), col("nl")).as("l"))
       // pointer jump: follow the label through the PREVIOUS round's
@@ -1488,20 +1458,17 @@ object Analytics {
       // (ReuseExchange) and the m2 self-join job disappears (the old form
       // built m, m-renamed AND m2 as three broadcast relations per round).
       def labP = labels.select(col("id").as("__j"), col("l").as("__jl"))
-      val j1 = stepped.join(hint(labP), col("l") === col("__j"), "left")
+      val j1 = stepped.join(hint(labP, vCount), col("l") === col("__j"), "left")
         .select(col("id"), least(col("l"), col("__jl")).as("l"))
-      val jumped = j1.join(hint(labP), col("l") === col("__j"), "left")
+      j1.join(hint(labP, vCount), col("l") === col("__j"), "left")
         .select(col("id"), least(col("l"), col("__jl")).as("l"))
-      // lazy checkpoint: the convergence agg on the next line is the round's
-      // action and materializes it — eager would pay a second vertex-set pass
-      labels = jumped.transform(roundBarrier)
-      val s = labels.agg(sum(col("l").cast("decimal(38,0)")).as("s")).head.getDecimal(0)
-      converged = prevSum != null && s != null && s.compareTo(prevSum) == 0
+    } { labels =>
+      // the round's one action; it also materializes the lazy barrier
+      val s = decSig(labels, "l")
+      val residual = Fixpoint.sigChange(prevSum, s)
       prevSum = s
-      round += 1
-      rlog.tick(round)
+      residual
     }
-    und.unpersist(false) // final labels frame is checkpointed
     labels.select(col("id"), col("l").as("component"))
   }
 
@@ -1521,22 +1488,18 @@ object Analytics {
     val e = g.edges.select(col("src"), col("dst"))
       .repartition(col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val spark = g.spark
     var alive = g.vertices.select(col("id")).transform(roundBarrier)
     var aliveCount = alive.count()
-    val maxBcast = broadcastMaxRows(g)
-    def hint(df: DataFrame, n: Long): DataFrame = if (n <= maxBcast) broadcast(df) else df
     var layers = Vector.empty[DataFrame]
-    var round = 0
-    var peeled = true
-    while (round < maxRounds && peeled && aliveCount > 0) {
+    val (_, outcome) = Fixpoint.run("topo", maxRounds, alive, residual0 = aliveCount,
+        owned = Seq(e)) { (_, round) =>
       // dsts that still have an ALIVE in-neighbor cannot peel this round
       val blocked = e
         .join(hint(alive.select(col("id").as("__s")), aliveCount), col("src") === col("__s"), "left_semi")
         .select(col("dst").as("id")).distinct()
-      val layerR = alive.join(blocked, Seq("id"), "left_anti")
-        .select(col("id"), lit(round.toLong).as("layer"))
-        .transform(roundBarrier)
+      alive.join(blocked, Seq("id"), "left_anti")
+        .select(col("id"), lit(round - 1L).as("layer"))
+    } { layerR =>
       val n = layerR.count()
       if (n > 0) {
         layers = layers :+ layerR
@@ -1544,14 +1507,11 @@ object Analytics {
           .transform(roundBarrier)
         aliveCount -= n
       }
-      peeled = n > 0
-      round += 1
+      // a round that peels nothing leaves exactly the cyclic survivors
+      if (n == 0) 0L else aliveCount
     }
-    if (aliveCount > 0 && peeled)
-      System.err.println(
-        s"[graft] topologicalLayers: maxRounds=$maxRounds elapsed with $aliveCount vertices " +
-          "unpeeled — they are reported layer=-1 but may be a deep DAG tail, not a cycle")
-    e.unpersist(false)
+    Fixpoint.warnIfExhausted("topologicalLayers", outcome,
+      "unpeeled vertices are reported layer=-1 but may be a deep DAG tail, not a cycle")
     val cyclic = alive.select(col("id"), lit(-1L).as("layer"))
     (layers :+ cyclic).reduce(_ unionByName _)
   }
@@ -1718,18 +1678,21 @@ object Analytics {
     * vertex id — the same shuffle profile as one BSP superstep; lazy
     * lineage truncation keeps the plan constant-size across rounds. */
   def kCore(g: PropertyGraph, k: Int, maxRounds: Int = 10): DataFrame = {
-    val (result, converged) = kCoreConverged(g, k, maxRounds)
+    val (result, outcome) = kCoreOutcome(g, k, maxRounds)
     // fail loudly (not silently superset): direct API callers get a signal
     // when peeling ran out of rounds, matching the oracle's NOT_CONVERGED stance
-    if (!converged)
-      System.err.println(
-        s"[graft] kCore(k=$k): maxRounds=$maxRounds elapsed with removals still occurring — " +
-          "result is a SUPERSET of the true k-core; raise maxRounds or use kCoreConverged")
+    Fixpoint.warnIfExhausted(s"kCore(k=$k)", outcome,
+      "result is a SUPERSET of the true k-core; raise maxRounds or use kCoreConverged")
     result
   }
 
   /** kCore with an explicit convergence flag: (survivors, converged). */
   def kCoreConverged(g: PropertyGraph, k: Int, maxRounds: Int = 10): (DataFrame, Boolean) = {
+    val (result, outcome) = kCoreOutcome(g, k, maxRounds)
+    (result, outcome.converged)
+  }
+
+  private def kCoreOutcome(g: PropertyGraph, k: Int, maxRounds: Int): (DataFrame, Outcome) = {
     // DECREMENTAL peeling (r18, guide §2.4 — process only the delta): the
     // r17 form re-counted EVERY live edge every round (two alive-set
     // semi-joins + a full groupBy(a) per round). Peeling is monotone: a
@@ -1748,59 +1711,65 @@ object Analytics {
     val vids = g.vertices.select(col("id"))
     // maxRounds = 0 ran zero peeling rounds in the re-counting form: every
     // vertex survives, unconverged — keep that contract (the decremental
-    // loop below folds the first threshold cut into its first round)
-    if (maxRounds <= 0) return (vids, false)
+    // loop below folds the first threshold cut into its first round; no
+    // round ran, so the residual is only "some peeling may remain")
+    if (maxRounds <= 0) return (vids, BudgetExhausted(0, 1L))
     var aliveCount = vids.count()
-    val maxBcast = broadcastMaxRows(g)
-    def hint(df: DataFrame, n: Long): DataFrame = if (n <= maxBcast) broadcast(df) else df
     val und = g.edges.select(col("src").as("a"), col("dst").as("b"))
       .unionAll(g.edges.select(col("dst").as("a"), col("src").as("b")))
       .repartition(col("a"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // degree state: one row per vertex with >= 1 ghost-filtered edge;
-    // isolated vertices never appear — exactly the re-counting form's
-    // groupBy(a) universe, so they are removed in round 1 there and here.
-    // The ghost filter (endpoints absent from g.vertices) applies HERE, not
-    // on the persisted und: a ghost-b edge then never contributes to any
-    // degree, and in the decrement rounds it can never match (removals are
-    // drawn from the degree state, which has no ghost rows), while a
-    // ghost-a row has no state row for a loss to land on — so the raw und
-    // is probe-safe and its persist does not wait on the two vertex
-    // broadcasts (measured: filtering und itself cost ~0.2-0.3 s of setup
-    // at sf0.1, BENCH_AB.md r18).
-    var deg = und
-      .join(hint(vids.select(col("id").as("a")), aliveCount), Seq("a"), "left_semi")
-      .join(hint(vids.select(col("id").as("b")), aliveCount), Seq("b"), "left_semi")
-      .groupBy(col("a")).agg(count(lit(1)).as("__d"))
-      .transform(roundBarrier) // lazy: the round's count materializes it
-    var removedLast = deg.filter(col("__d") < k).select(col("a").as("b"))
-    var alive = deg.filter(col("__d") >= k)
-    var round = 0
-    var removed = true
-    var removedCount = aliveCount // bound for the first removedLast hint
-    val rlog = new RoundLog(g.spark, "kcore")
-    while (round < maxRounds && removed) {
-      if (round > 0) {
+    // degree state (a, __d, __n): __d = ghost-filtered degree, __n = RAW
+    // und degree (ghost neighbors included). One row per vertex with >= 1
+    // und edge; isolated vertices never appear and, like vertices whose
+    // only neighbors are ghosts (__d = 0), are removed in round 1 — the
+    // re-counting form's round-1 cut. The ghost filter applies HERE, not
+    // on the persisted und: a ghost-b edge then never contributes to __d,
+    // and in the decrement rounds it can never match (removals are drawn
+    // from the degree state, which has no ghost rows), while a ghost-a row
+    // has no state row for a loss to land on — so the raw und is
+    // probe-safe and its persist does not wait on the vertex broadcast
+    // (measured: filtering und itself cost ~0.2-0.3 s of setup at sf0.1,
+    // BENCH_AB.md r18). Both vertex probes are flagged left joins that
+    // project vids identically up to names, so their broadcast exchanges
+    // canonicalize to one build (ReuseExchange); a semi-join probe is
+    // pruned to a different projection and costs a second build.
+    def vP(key: String, flag: String) =
+      hint(vids.select(col("id").as(key), col("id").as(flag)), aliveCount)
+    val deg0 = und
+      .join(vP("a", "__va"), Seq("a"), "left")
+      .join(vP("b", "__vb"), Seq("b"), "left")
+      .groupBy(col("a"))
+      .agg(max(col("__va")).as("__va"), count(col("__vb")).as("__d"), count(lit(1)).as("__n"))
+      .filter(col("__va").isNotNull)
+      .select(col("a"), col("__d"), col("__n"))
+      .transform(roundBarrier) // lazy: round 1's count materializes it
+    var removedCount = 0L
+    // Σ raw degree of the last removal batch: `lost` holds at most one row
+    // per und edge into the batch, ghost and already-peeled endpoints
+    // included, so this — not the alive count — bounds its rows
+    var removedEdges = 0L
+    val (deg, outcome) = Fixpoint.run("kcore", maxRounds, deg0, owned = Seq(und)) { (deg, round) =>
+      if (round == 1) deg // round 1 is the threshold cut on the setup state
+      else {
         val lost = und
-          .join(hint(removedLast, removedCount), Seq("b"))
+          .join(hint(deg.filter(col("__d") < k).select(col("a").as("b")), removedCount), Seq("b"))
           .groupBy(col("a")).agg(count(lit(1)).as("__l"))
-        deg = alive.join(hint(lost, aliveCount), Seq("a"), "left")
-          .select(col("a"), (col("__d") - coalesce(col("__l"), lit(0L))).as("__d"))
-          .transform(roundBarrier)
-        removedLast = deg.filter(col("__d") < k).select(col("a").as("b"))
-        alive = deg.filter(col("__d") >= k)
+        deg.filter(col("__d") >= k).join(hint(lost, removedEdges), Seq("a"), "left")
+          .select(col("a"), (col("__d") - coalesce(col("__l"), lit(0L))).as("__d"), col("__n"))
       }
+    } { deg =>
       // peeling is monotone ⇒ count equality ≡ set equality; the count is
       // the round's ONE action and materializes the lazy barrier
-      val nextCount = alive.count()
-      removed = nextCount < aliveCount
+      val r = deg.agg(count(when(col("__d") >= k, lit(1))),
+        sum(when(col("__d") < k, col("__n")))).head
+      val nextCount = r.getLong(0)
+      removedEdges = if (r.isNullAt(1)) 0L else r.getLong(1)
       removedCount = aliveCount - nextCount
       aliveCount = nextCount
-      round += 1
-      rlog.tick(round)
+      removedCount
     }
-    und.unpersist(false)
-    (alive.select(col("a").as("id")), !removed)
+    (deg.filter(col("__d") >= k).select(col("a").as("id")), outcome)
   }
 
   /** CORENESS — the per-vertex core number (the largest k such that the
@@ -1826,16 +1795,19 @@ object Analytics {
     * layout pays. Convergence detection rides the per-round action: Σc is
     * monotone non-increasing, so an unchanged sum IS the fixed point. */
   def coreness(g: PropertyGraph, maxRounds: Int = 10): DataFrame = {
-    val (result, converged) = corenessConverged(g, maxRounds)
-    if (!converged)
-      System.err.println(
-        s"[graft] coreness: maxRounds=$maxRounds elapsed before the h-index fixpoint — " +
-          "values are an UPPER BOUND on the true core numbers; raise maxRounds")
+    val (result, outcome) = corenessOutcome(g, maxRounds)
+    Fixpoint.warnIfExhausted("coreness", outcome,
+      "values are an UPPER BOUND on the true core numbers; raise maxRounds")
     result
   }
 
   /** [[coreness]] with an explicit convergence flag: ((id, core), converged). */
   def corenessConverged(g: PropertyGraph, maxRounds: Int = 10): (DataFrame, Boolean) = {
+    val (result, outcome) = corenessOutcome(g, maxRounds)
+    (result, outcome.converged)
+  }
+
+  private def corenessOutcome(g: PropertyGraph, maxRounds: Int): (DataFrame, Outcome) = {
     // partition-once, iterate (see kCoreConverged): laid out by the
     // WINDOW/AGGREGATION key `a`, so in the broadcast regime the per-round
     // plan exchanges NO edge-sized frame at all — the frontier/c/h frames
@@ -1852,41 +1824,29 @@ object Analytics {
       .repartition(col("a"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val ids = g.vertices.select(col("id"))
-    var c = ids.join(und.groupBy(col("a")).agg(count(lit(1)).as("__c"))
+    val c0 = ids.join(und.groupBy(col("a")).agg(count(lit(1)).as("__c"))
         .select(col("a").as("id"), col("__c")), Seq("id"), "left")
       .select(col("id"), coalesce(col("__c"), lit(0L)).as("core"))
       .transform(roundBarrier)
-    // one static gate for every vertex-sized per-round frame (c, h, frontier,
-    // affected are all <= |V| rows)
-    val vCount = c.count()
-    val maxBcast = broadcastMaxRows(g)
-    def hint(df: DataFrame, n: Long): DataFrame = if (n <= maxBcast) broadcast(df) else df
-    def sig(df: DataFrame): Long = {
-      val r = df.agg(sum(col("core"))).head
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    var prevSig = sig(c)
+    // one setup action: |V| (one static gate for every vertex-sized
+    // per-round frame — c, h, frontier, affected are all <= |V| rows) and
+    // the round-0 Σcore signature
+    val setup = c0.agg(count(lit(1)), sum(col("core"))).head
+    val vCount = setup.getLong(0)
+    var prevSig = if (setup.isNullAt(1)) 0L else setup.getLong(1)
     // round-0 core = degree, so Σcore = Σdeg = und's exact row count — the
     // adaptive-delta volume gate needs no dedicated count action
     val undRows = prevSig
-    var round = 0
-    var changed = prevSig > 0L
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("a")).orderBy(col("__cb").desc, col("b").asc)
-    // delta restriction (conf-gated, default on): h(a) depends only on the
-    // neighbors' cores, so a vertex recomputes ONLY when some neighbor
-    // changed last round. The h-index iteration resolves most of the graph
-    // in the first rounds and then nibbles at a shrinking frontier —
-    // without the delta, every tail round re-windows the full adjacency
-    // for a handful of updates.
-    val useDelta = g.spark.conf.getOption("spark.graft.coreness.delta")
-      .forall(_.toBoolean)
-    // ADAPTIVE delta (r18, guide §1.2 "the distributed algorithm" + §2.4):
-    // the delta machinery costs two broadcast builds, a distinct and a
-    // second pass over the persisted adjacency per round — which only pays
-    // when the SAVED work (the window sort over the unaffected adjacency)
-    // is larger than that fixed cost. Two data-driven gates, no extra
-    // actions for either:
+    // ADAPTIVE delta restriction (r18, guide §1.2 "the distributed
+    // algorithm" + §2.4): h(a) depends only on the neighbors' cores, so a
+    // vertex need recompute ONLY when some neighbor changed last round. The
+    // delta machinery costs two broadcast builds, a distinct and a second
+    // pass over the persisted adjacency per round — which only pays when
+    // the SAVED work (the window sort over the unaffected adjacency) is
+    // larger than that fixed cost. Two data-driven gates, no extra actions
+    // for either:
     //  - edge volume: below `deltaMinEdges` und rows a full-adjacency
     //    window round is sub-second on any modern node and the machinery
     //    always loses (measured at sf0.1, 1.2M und rows: never-delta 8.3 s
@@ -1905,87 +1865,47 @@ object Analytics {
     val deltaMinEdges = g.spark.conf
       .get("spark.graft.coreness.deltaMinEdges", "10000000").toLong
     var frontierCount = vCount
-    // h-index kernel selector (spark.graft.coreness.hindex = window |
-    // histogram). `histogram` is the SORT-FREE form: h = max over t of
-    // min(t, N≥t), computed from a per-vertex core-value histogram —
-    // groupBy(a, t) is map-side combinable (the window form must ship the
-    // full (a, b, c_b) adjacency into a per-group sort), and neighbor cores
-    // clamp at c(a) first (exact: the iteration is monotone non-increasing,
-    // so h ≤ c(a) already), collapsing every value ≥ c(a) into one bucket —
-    // a vertex's histogram is ≤ min(degree, c(a))+1 rows, typically a few
-    // dozen once early rounds shrink cores. Worst case (supernode in round
-    // 1 with all-distinct neighbor degrees) the collect_list is
-    // degree-sized — the window form stays the spill-safe fallback.
-    val useHistogram = g.spark.conf
-      .get("spark.graft.coreness.hindex", "window") == "histogram"
-    var frontier = c.select(col("id")) // round 1: everything is "changed"
-    val rlog = new RoundLog(g.spark, "coreness")
-    while (round < maxRounds && changed) {
+    // the loop state is (id, core, __chg): __chg marks last round's changes
+    val (state, outcome) = Fixpoint.run("coreness", maxRounds, c0, residual0 = prevSig,
+        owned = Seq(und)) { (state, round) =>
+      val c = state.select(col("id"), col("core"))
       // und is SYMMETRIC, so "vertices with a changed neighbor" can read the
       // b side after a semi-join on a — keyed on the persisted layout, the
       // edge frame never moves (the b-keyed form exchanged |E| rows here).
-      // Round 1 skips the delta machinery outright: the frontier is every
-      // vertex, so affected ⊇ every edge endpoint and base ≡ und exactly
+      // Round 1 skips the delta machinery outright: every vertex is
+      // "changed", so affected ⊇ every edge endpoint and base ≡ und exactly
       // (h rows for ids outside c drop at the next-join either way) — the
       // shortcut saves two broadcast builds + a distinct in the round that
       // touches the most data.
       def affected = und
-        .join(hint(frontier.select(col("id").as("a")), vCount), Seq("a"), "left_semi")
+        .join(hint(state.filter(col("__chg")).select(col("id").as("a")), vCount),
+          Seq("a"), "left_semi")
         .select(col("b").as("a")).distinct()
-      val base = if (useDelta && round > 0 && undRows >= deltaMinEdges &&
+      val base = if (round > 1 && undRows >= deltaMinEdges &&
           frontierCount <= (deltaFrac * vCount).toLong)
         und.join(hint(affected, vCount), Seq("a"), "left_semi") else und
-      val withCb = base
+      val h = base
         .join(hint(c.select(col("id").as("b"), col("core").as("__cb")), vCount), Seq("b"))
-      val h = if (useHistogram) {
-        // h off the DESCENDING CUMULATIVE COUNT (r18): after the (a, __t)
-        // pre-aggregate, cum(t) = #neighbors with clamped value >= t, and
-        // h = max over observed t of min(t, cum(t)) — restricting the max
-        // to OBSERVED t is exact (between observed values cum is constant,
-        // so min(τ, cum) is maximized at the larger observed endpoint).
-        // Replaces r17's collect_list + sort_array + aggregate-HOF: the
-        // cumulative window sorts the (a, t) HISTOGRAM frame — at most
-        // min(degree, c(a))+1 rows per vertex vs the window kernel's full
-        // (a, b) adjacency — and WindowExec spills gracefully where
-        // collect_list held a degree-sized array per hub in round 1 (the
-        // reason the window kernel was the spill-safe default). All three
-        // aggregates/windows key on `a`, the persisted layout: zero
-        // exchanges in the broadcast regime.
-        val wh = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("a")).orderBy(col("__t").desc)
-        withCb
-          .join(hint(c.select(col("id").as("a"), col("core").as("__ca")), vCount), Seq("a"))
-          .select(col("a"), least(col("__cb"), col("__ca")).as("__t"))
-          .groupBy(col("a"), col("__t")).agg(count(lit(1)).as("__n"))
-          .select(col("a"), col("__t"), sum(col("__n")).over(wh).as("__cum"))
-          .groupBy(col("a")).agg(max(least(col("__t"), col("__cum"))).as("__c"))
-      } else
-        withCb
-          .select(col("a"), col("b"), col("__cb"))
-          .withColumn("__rn", row_number().over(w).cast("long"))
-          .groupBy(col("a")).agg(max(least(col("__cb"), col("__rn"))).as("__c"))
+        .select(col("a"), col("b"), col("__cb"))
+        .withColumn("__rn", row_number().over(w).cast("long"))
+        .groupBy(col("a")).agg(max(least(col("__cb"), col("__rn"))).as("__c"))
       // untouched vertices KEEP their core (their h inputs are unchanged —
       // recomputing would yield the identical value, so skipping is exact)
-      val next = c.join(hint(h.select(col("a").as("id"), col("__c")), vCount),
-          Seq("id"), "left")
+      c.join(hint(h.select(col("a").as("id"), col("__c")), vCount), Seq("id"), "left")
         .select(col("id"), coalesce(col("__c"), col("core")).as("core"),
           (col("__c").isNotNull && col("__c") =!= col("core")).as("__chg"))
-        .transform(roundBarrier)
+    } { next =>
       // ONE action materializes the round: the monotone Σcore signature
       // (equal sum = fixed point) plus the changed count — next round's
       // frontier size for the adaptive delta gate, at zero extra jobs
       val r = next.agg(sum(col("core")), count(when(col("__chg"), lit(1)))).head
       val s = if (r.isNullAt(0)) 0L else r.getLong(0)
       frontierCount = if (r.isNullAt(1)) 0L else r.getLong(1)
-      changed = s != prevSig
+      val residual = math.abs(prevSig - s)
       prevSig = s
-      frontier = next.filter(col("__chg")).select(col("id"))
-      c = next.select(col("id"), col("core"))
-      round += 1
-      rlog.tick(round)
+      residual
     }
-    und.unpersist(false)
-    (c, !changed)
+    (state.select(col("id"), col("core")), outcome)
   }
 
   /** STRONGLY connected components — the directed twin of
@@ -2023,16 +1943,15 @@ object Analytics {
       maxTrim: Int = 8, maxInner: Int = 8): DataFrame = {
     var alive = g.vertices.select(col("id")).transform(roundBarrier)
     var aliveCount = alive.count()
+    val vCount = aliveCount
     // broadcast-regime gate (see connectedComponentsExact): every per-round
-    // frame here — alive, f, rb, the degree state — is bounded by the
-    // CURRENT aliveCount, which the loop maintains anyway; checkpointed
-    // frames hide size stats from AQE, so the hints are load-bearing. In the
-    // broadcast regime no |E|-sized frame is exchanged after the phase
-    // layouts (ea by dst for the coloring's groupBy(dst), eaC by src for the
-    // backward flood's groupBy(src)); past the cap every join degrades to
-    // the per-round |E| exchange any layout pays.
-    val maxBcast = broadcastMaxRows(g)
-    def hint(df: DataFrame, n: Long): DataFrame = if (n <= maxBcast) broadcast(df) else df
+    // frame here — alive, f, rb — is bounded by the CURRENT aliveCount,
+    // which the loop maintains anyway; checkpointed frames hide size stats
+    // from AQE, so the hints are load-bearing. In the broadcast regime no
+    // |E|-sized frame is exchanged after the phase layouts (ea by dst for
+    // the coloring's groupBy(dst), eaC by src for the backward flood's
+    // groupBy(src)); past the cap every join degrades to the per-round |E|
+    // exchange any layout pays.
     // ghost endpoints (absent from g.vertices) drop ONCE at setup — the old
     // per-trim-round alive semi-joins were the only thing dropping them
     val ed = g.edges.select(col("src"), col("dst"))
@@ -2055,15 +1974,25 @@ object Analytics {
       .select(col("e.id").as("id"), col("e.__o").as("__o"), col("e.__i").as("__i"))
       .groupBy(col("id")).agg(sum(col("__o")).as("__o"), sum(col("__i")).as("__i"))
       .transform(roundBarrier)
-    var removedLast: DataFrame = null // removals not yet folded into degs
-    var removedCount = 0L
-    def applyRemovals(): Unit = if (removedCount > 0) {
+    // removals not yet folded into degs. Every removal batch (trim peels,
+    // resolved SCCs) ACCUMULATES here until the next trim round folds it
+    // in — a trim loop that stops at its budget leaves its last peel
+    // pending, and the resolution that follows must add to it, not replace
+    // it, or those decrements are lost for every later outer round.
+    var pending: DataFrame = null
+    var pendingCount = 0L
+    def remove(ids: DataFrame, n: Long): Unit = if (n > 0) {
+      pending = if (pending == null) ids else pending.unionByName(ids)
+      pendingCount += n
+    }
+    def applyRemovals(degs: DataFrame): DataFrame = if (pending == null) degs else {
       // one pass over ed: an edge with a removed endpoint contributes a loss
       // to its (possibly surviving) other endpoint. The probe and the degs
       // anti-join below project the removal frame IDENTICALLY so their
       // broadcast exchanges canonicalize to one — built once per round
       // (ReuseExchange), not once per reference.
-      def rP = removedLast.select(col("id").as("__r"))
+      val (removed, n) = (pending, pendingCount)
+      def rP = removed.select(col("id").as("__r"))
       val lost = ed.select(explode(array(
           struct(col("src").as("id"), col("dst").as("__other"),
             lit(1L).as("__lo"), lit(0L).as("__li")),
@@ -2071,46 +2000,44 @@ object Analytics {
             lit(0L).as("__lo"), lit(1L).as("__li")))).as("e"))
         .select(col("e.id").as("id"), col("e.__other").as("__other"),
           col("e.__lo").as("__lo"), col("e.__li").as("__li"))
-        .join(hint(rP, removedCount), col("__other") === col("__r"), "left_semi")
+        .join(hint(rP, n), col("__other") === col("__r"), "left_semi")
         .groupBy(col("id")).agg(sum(col("__lo")).as("__lo"), sum(col("__li")).as("__li"))
-      degs = degs
-        .join(hint(rP, removedCount), col("id") === col("__r"), "left_anti")
-        .join(hint(lost, aliveCount), Seq("id"), "left")
+      pending = null
+      pendingCount = 0L
+      // lost's ids are ed endpoints, and ed is ghost-filtered, so |V| bounds
+      // its rows in every round (the shrinking alive count does not: a late
+      // round that peels a hub emits one row per ORIGINAL neighbor)
+      degs
+        .join(hint(rP, n), col("id") === col("__r"), "left_anti")
+        .join(hint(lost, vCount), Seq("id"), "left")
         .select(col("id"),
           (col("__o") - coalesce(col("__lo"), lit(0L))).as("__o"),
           (col("__i") - coalesce(col("__li"), lit(0L))).as("__i"))
-        .transform(roundBarrier)
-      removedLast = null
-      removedCount = 0L
     }
     var out = Vector.empty[DataFrame]
     var outer = 0
-    while (outer < maxOuter && aliveCount > 0) {
-      var t = 0
-      var trimmed = true
-      val rlogTrim = new RoundLog(g.spark, s"scc_trim_o$outer")
-      while (t < maxTrim && trimmed) {
-        applyRemovals() // fold pending trim peels / resolved SCCs into degs
+    var halted = false
+    while (outer < maxOuter && aliveCount > 0 && !halted) {
+      degs = Fixpoint.run(s"scc_trim_o$outer", maxTrim, degs, residual0 = aliveCount) {
+        (degs, _) => applyRemovals(degs) // fold pending peels / resolved SCCs
+      } { degs =>
         // degs rows are exactly the alive vertices with >= 1 alive edge, so
         // the survivor set reads straight off the carried state (isolated
         // or fully-peeled-neighborhood vertices simply have no row / fail
         // the filter — same universe the old ends aggregate produced)
-        val keep = degs.filter(col("__o") >= 1L && col("__i") >= 1L)
-          .select(col("id"))
+        val keep = degs.filter(col("__o") >= 1L && col("__i") >= 1L).select(col("id"))
         val keepCount = keep.count() // materializes applyRemovals' barrier
-        trimmed = keepCount < aliveCount
-        if (trimmed) {
-          val removedNow = alive.join(hint(keep, keepCount), Seq("id"), "left_anti")
+        val peeledCount = aliveCount - keepCount
+        if (peeledCount > 0) {
+          val peeled = alive.join(hint(keep, keepCount), Seq("id"), "left_anti")
             .transform(roundBarrier)
-          out = out :+ removedNow.select(col("id"), col("id").as("scc"))
-          removedLast = removedNow
-          removedCount = aliveCount - keepCount
+          out = out :+ peeled.select(col("id"), col("id").as("scc"))
+          remove(peeled, peeledCount)
         }
         alive = keep
         aliveCount = keepCount
-        t += 1
-        rlogTrim.tick(t)
-      }
+        peeledCount
+      }._1
       if (aliveCount > 0) {
         // laid out by the coloring's aggregation key (dst): with f broadcast,
         // the join preserves this layout and groupBy(dst) needs no exchange
@@ -2119,12 +2046,9 @@ object Analytics {
           .join(hint(alive.select(col("id").as("dst")), aliveCount), Seq("dst"), "left_semi")
           .repartition(col("dst"))
           .persist(StorageLevel.MEMORY_AND_DISK)
-        var f = alive.select(col("id"), col("id").as("f")).transform(roundBarrier)
-        var fSig = decSig(f, "f")
-        var i = 0
-        var fChanged = true
-        val rlogColor = new RoundLog(g.spark, s"scc_color_o$outer")
-        while (i < maxInner && fChanged) {
+        val f0 = alive.select(col("id"), col("id").as("f")).transform(roundBarrier)
+        var fSig = decSig(f0, "f")
+        val (f, colored) = Fixpoint.run(s"scc_color_o$outer", maxInner, f0) { (f, _) =>
           // the message probe and the pointer jump project f IDENTICALLY so
           // their broadcast exchanges canonicalize to ONE build per round
           // (ReuseExchange) — r17 built f twice per round under two shapes
@@ -2142,16 +2066,14 @@ object Analytics {
           // forward-reaches v. Cuts the flood from diameter rounds to
           // ~log(diameter) — one vertex-sized join per round, measured on
           // the directed-cycle fixture in SCALE.md (round growth +1/10×).
-          val jumped = stepped
+          stepped
             .join(hint(fP, aliveCount), col("f") === col("__j"), "left")
             .select(col("id"), least(col("f"), coalesce(col("__l"), col("f"))).as("f"))
-            .transform(roundBarrier)
-          val s = decSig(jumped, "f") // min-label is monotone non-increasing
-          fChanged = s.compareTo(fSig) != 0
+        } { f =>
+          val s = decSig(f, "f") // min-label is monotone non-increasing
+          val residual = Fixpoint.sigChange(fSig, s)
           fSig = s
-          f = jumped
-          i += 1
-          rlogColor.tick(i)
+          residual
         }
         // Backward phase as a MIN-LABEL flood, not a boolean reach flag:
         // b(v) = min id reachable FROM v inside v's color. Every id in
@@ -2197,13 +2119,11 @@ object Analytics {
           (if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0),
             if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
         }
-        var rb = f.select(col("id"), col("id").as("b"), col("id").as("s"))
+        val rb0 = f.select(col("id"), col("id").as("b"), col("id").as("s"))
           .transform(roundBarrier)
-        var (rSigB, rSigS) = sigBS(rb)
-        var j = 0
-        var rChanged = true
-        val rlogBw = new RoundLog(g.spark, s"scc_bw_o$outer")
-        while (j < maxInner && rChanged) {
+        var (rSigB, rSigS) = sigBS(rb0)
+        val (rb, flooded) = Fixpoint.run(s"scc_bw_o$outer", maxInner, rb0,
+            owned = Seq(eaC)) { (rb, _) =>
           // the message probe and BOTH pointer jumps project rb IDENTICALLY
           // so the three broadcast exchanges canonicalize to ONE build per
           // round (ReuseExchange) — r17 built rb three times per round
@@ -2225,36 +2145,32 @@ object Analytics {
             .select(col("id"),
               least(col("b"), coalesce(col("__jb"), col("b"))).as("b"),
               greatest(col("s"), coalesce(col("__js"), col("s"))).as("s"))
-          val viaB = viaS
+          viaS
             .join(hint(rbP, aliveCount), col("b") === col("__j"), "left")
             .select(col("id"),
               least(col("b"), coalesce(col("__jb"), col("b"))).as("b"),
               greatest(col("s"), coalesce(col("__js"), col("s"))).as("s"))
-            .transform(roundBarrier)
+        } { rb =>
           // joint fixpoint: b monotone non-increasing, s non-decreasing —
           // the horizon is transitively closed only when BOTH stabilize
-          val (sb, ss) = sigBS(viaB)
-          rChanged = sb.compareTo(rSigB) != 0 || ss.compareTo(rSigS) != 0
+          val (sb, ss) = sigBS(rb)
+          val residual = math.max(Fixpoint.sigChange(rSigB, sb), Fixpoint.sigChange(rSigS, ss))
           rSigB = sb
           rSigS = ss
-          rb = viaB
-          j += 1
-          rlogBw.tick(j)
+          residual
         }
-        eaC.unpersist(false)
         // FW-BW resolution is only sound when BOTH floods reached their
         // fixpoint: a lagging coloring can crown false pivots (a long cycle
         // would retire its minimum as a singleton, silently SPLITTING the
         // SCC), and a lagging backward flood would retire a partial SCC.
         // When either budget ran out mid-flood, resolve NOTHING — the
-        // survivors come back scc = NULL with the loud warning below.
-        if (fChanged || rChanged) {
-          System.err.println(
-            s"[graft] stronglyConnectedComponents: maxInner=$maxInner elapsed before the " +
-              s"${if (fChanged) "coloring" else "backward"} flood converged — skipping " +
-              "resolution this round (unresolved vertices are reported scc = NULL); " +
-              "raise maxInner")
-          outer = maxOuter // no further outer round can do better on this alive set
+        // survivors come back scc = NULL with the loud warning below, and
+        // no further outer round can do better on this alive set.
+        if (!colored.converged || !flooded.converged) {
+          val (phase, o) = if (!colored.converged) ("coloring", colored) else ("backward", flooded)
+          Fixpoint.warnIfExhausted(s"stronglyConnectedComponents $phase flood", o,
+            "skipping resolution (unresolved vertices are reported scc = NULL); raise maxInner")
+          halted = true
         } else {
           // v ∈ SCC(pivot) ⟺ pivot reaches v (f(v) = pivot) AND v reaches
           // the pivot within the color (b(v) = pivot = f(v))
@@ -2271,21 +2187,20 @@ object Analytics {
             .transform(roundBarrier)
           aliveCount = alive.count()
           // resolved SCCs are removals for the carried trim degree state:
-          // the next outer round's trim folds them in via applyRemovals
-          removedLast = resolved.select(col("id"))
-          removedCount = prevAlive - aliveCount
+          // the next outer round's trim folds them in with any peel its
+          // predecessor left pending
+          remove(resolved.select(col("id")), prevAlive - aliveCount)
         }
         ea.unpersist(false)
       }
       outer += 1
     }
-    if (aliveCount > 0) {
-      System.err.println(
-        s"[graft] stronglyConnectedComponents: maxOuter=$maxOuter rounds elapsed with " +
-          s"$aliveCount vertices unresolved — they are reported scc = NULL")
-      out = out :+ alive.select(col("id"), lit(null).cast("long").as("scc"))
-    }
     ed.unpersist(false)
+    val outcome = if (aliveCount > 0) BudgetExhausted(outer, aliveCount) else Converged(outer)
+    Fixpoint.record("scc", outcome)
+    Fixpoint.warnIfExhausted("stronglyConnectedComponents", outcome,
+      "unresolved vertices are reported scc = NULL")
+    if (aliveCount > 0) out = out :+ alive.select(col("id"), lit(null).cast("long").as("scc"))
     if (out.isEmpty)
       g.vertices.select(col("id"), lit(null).cast("long").as("scc")).limit(0)
     else out.reduce(_ unionByName _)
@@ -2318,38 +2233,31 @@ object Analytics {
       .persist(StorageLevel.MEMORY_AND_DISK)
     var alive = g.vertices.select(col("id")).transform(roundBarrier)
     var out = Vector.empty[DataFrame]
-    var round = 1L
-    var matchedSome = true
-    while (round <= maxRounds && matchedSome) {
-      val na = ne
-        .join(alive.select(col("id").as("x")), Seq("x"), "left_semi")
-        .join(alive.select(col("id").as("y")), Seq("y"), "left_semi")
-      val prop = na.groupBy(col("x")).agg(min(col("y")).as("p"))
-      val m = prop.as("a")
+    def aliveEdges = ne
+      .join(alive.select(col("id").as("x")), Seq("x"), "left_semi")
+      .join(alive.select(col("id").as("y")), Seq("y"), "left_semi")
+    val (_, outcome) = Fixpoint.run("matching", maxRounds, alive) { (_, round) =>
+      val prop = aliveEdges.groupBy(col("x")).agg(min(col("y")).as("p"))
+      prop.as("a")
         .join(prop.as("b"), col("b.x") === col("a.p") && col("b.p") === col("a.x"))
         .filter(col("a.x") < col("a.p"))
-        .select(col("a.x").as("u"), col("a.p").as("v"), lit(round).as("round"))
-        .transform(roundBarrier)
+        .select(col("a.x").as("u"), col("a.p").as("v"), lit(round.toLong).as("round"))
+    } { m =>
       val nMatched = m.count()
-      matchedSome = nMatched > 0
-      if (matchedSome) {
+      if (nMatched > 0) {
         out = out :+ m
         val gone = m.select(col("u").as("id")).unionAll(m.select(col("v").as("id")))
         alive = alive.join(gone, Seq("id"), "left_anti").transform(roundBarrier)
         alive.count()
       }
-      round += 1L
+      nMatched
     }
     // budget elapsed while still matching is only a problem if an edge
     // between two UNMATCHED vertices actually remains (the final round may
     // have saturated the graph exactly at the budget)
-    if (matchedSome && ne
-        .join(alive.select(col("id").as("x")), Seq("x"), "left_semi")
-        .join(alive.select(col("id").as("y")), Seq("y"), "left_semi")
-        .limit(1).count() > 0)
-      System.err.println(
-        s"[graft] maximalMatching: maxRounds=$maxRounds elapsed while pairs were still " +
-          "forming — the matching may not be maximal; raise maxRounds")
+    if (!outcome.converged && aliveEdges.limit(1).count() > 0)
+      Fixpoint.warnIfExhausted("maximalMatching", outcome,
+        "the matching may not be maximal; raise maxRounds")
     ne.unpersist(false)
     if (out.isEmpty) {
       val spark = g.spark
@@ -2435,13 +2343,8 @@ object Analytics {
     // edge layout untouched, so the per-round |E| work is the one map-side-
     // combinable min-selection aggregate
     val vCount = comp.count()
-    val maxBcast = broadcastMaxRows(g)
-    def hint(df: DataFrame, n: Long): DataFrame = if (n <= maxBcast) broadcast(df) else df
     var out = Vector.empty[DataFrame]
-    var outer = 0
-    var merging = true
-    val rlog = new RoundLog(g.spark, "msf")
-    while (outer < maxOuter && merging) {
+    val (_, outcome) = Fixpoint.run("msf", maxOuter, comp) { (_, _) =>
       // both rank attaches project comp IDENTICALLY so their broadcast
       // exchanges canonicalize to ONE build per round (ReuseExchange) — the
       // intermediate select renames the first attach out of the way (r18;
@@ -2460,16 +2363,15 @@ object Analytics {
       // row set project to exactly the previous (u, v, w) selection
       val cand = ec.select(explode(array(col("cu"), col("cv"))).as("comp"),
         col("w"), col("u"), col("v"), col("cu"), col("cv"))
-      val sel = cand.groupBy(col("comp"))
+      cand.groupBy(col("comp"))
         .agg(min(struct(col("w"), col("u"), col("v"),
           col("cu"), col("cv"))).as("m"))
         .select(col("m.u").as("u"), col("m.v").as("v"), col("m.w").as("w"),
           col("m.cu").as("cu"), col("m.cv").as("cv"))
         .distinct()
-        .transform(roundBarrier)
+    } { sel =>
       val nSel = sel.count()
-      merging = nSel > 0
-      if (merging) {
+      if (nSel > 0) {
         out = out :+ sel.select(col("u"), col("v"), col("w"))
         // Label merge over the SELECTION pairs — one row per merging
         // component, far below edge scale. Dual regime shared with the
@@ -2483,25 +2385,23 @@ object Analytics {
           .transform(roundBarrier)
         val lblMap = classMergeMapping(und, 2L * nSel, maxInner,
           "minimumSpanningForest")
+        // no dedicated materialization: the next round's count (or the
+        // caller's action on the final frame) materializes the lazy barrier
         comp = comp.join(lblMap, Seq("c"), "left")
           .select(col("id"), coalesce(col("l"), col("c")).as("c"))
           .transform(roundBarrier)
-        // no dedicated materialization: the next round's sel.count() (or the
-        // caller's action on the final frame) materializes the lazy barrier
       }
-      outer += 1
-      rlog.tick(outer)
+      nSel
     }
     // "budget elapsed" alone is not evidence of incompleteness (the final
     // round may have finished the forest exactly at the budget): warn only
     // if a component-crossing edge actually remains
-    if (merging && ed
+    if (!outcome.converged && ed
         .join(comp.select(col("id").as("u"), col("c").as("cu")), Seq("u"))
         .join(comp.select(col("id").as("v"), col("c").as("cv")), Seq("v"))
         .filter(col("cu") =!= col("cv")).limit(1).count() > 0)
-      System.err.println(
-        s"[graft] minimumSpanningForest: maxOuter=$maxOuter rounds elapsed while components " +
-          "were still merging — the forest is incomplete; raise maxOuter")
+      Fixpoint.warnIfExhausted("minimumSpanningForest", outcome,
+        "the forest is incomplete; raise maxOuter")
     ed.unpersist(false)
     if (out.isEmpty) Seq.empty[(Long, Long, Long)].toDF("u", "v", "w")
     else out.reduce(_ unionByName _)
@@ -2543,15 +2443,14 @@ object Analytics {
     val h = pmod(conv(substring(md5(concat_ws(":", lit(salt),
       col("id").cast("string"))), 21, 12), 16, 10).cast("long"), lit(1L << 48))
     val deg = und.groupBy(col("a")).agg(count(lit(1)).as("__d"))
-    var state = g.vertices.select(col("id"), h.as("h"))
+    val state0 = g.vertices.select(col("id"), h.as("h"))
       .join(deg.select(col("a").as("id"), col("__d")), Seq("id"), "left")
       .select(col("id"),
         floor(log2(coalesce(col("__d"), lit(0L)) + 1L)).cast("long").as("db"),
         col("h"), lit(null).cast("long").as("color"))
       .transform(roundBarrier)
-    var round = 0
-    var uncN = state.filter(col("color").isNull).count()
-    while (round < maxRounds && uncN > 0) {
+    val (state, outcome) = Fixpoint.run("coloring", maxRounds, state0,
+        residual0 = state0.filter(col("color").isNull).count(), owned = Seq(und)) { (state, _) =>
       val unc = state.filter(col("color").isNull)
         .select(col("id"), col("db"), col("h"))
       val dominated = und
@@ -2573,19 +2472,13 @@ object Analytics {
             array().cast("array<long>"))).cast("long")),
             i => !array_contains(coalesce(col("__cs"), array().cast("array<long>")), i)),
           1).as("__mex"))
-      state = state
+      state
         .join(mexed.select(col("id"), col("__mex")), Seq("id"), "left")
         .select(col("id"), col("db"), col("h"),
           coalesce(col("color"), col("__mex")).as("color"))
-        .transform(roundBarrier)
-      uncN = state.filter(col("color").isNull).count()
-      round += 1
-    }
-    if (uncN > 0)
-      System.err.println(
-        s"[graft] greedyColoring: maxRounds=$maxRounds elapsed with $uncN vertices " +
-          "uncolored — they are reported color = NULL")
-    und.unpersist(false)
+    } { state => state.filter(col("color").isNull).count() } // uncolored left
+    Fixpoint.warnIfExhausted("greedyColoring", outcome,
+      "uncolored vertices are reported color = NULL")
     state.select(col("id"), col("color"))
   }
 
@@ -2713,41 +2606,6 @@ object Analytics {
     org.apache.spark.sql.GraftSqlBridge.resetStats(ck)
   }
 
-  /** Conf-gated per-round telemetry for the iterative kernels: with
-    * `spark.graft.bench.roundLog=true` every round prints one stderr line
-    * `[graft-rounds] op=<op> round=<n> wall_ms=<t>` — wall time SINCE the
-    * previous tick, measured around the round's one action. Lets kernel
-    * A/Bs (tools/AbCoreness-style) and scaling runs attribute wall time
-    * and ROUND COUNTS to specific phases instead of end-to-end only.
-    * Off by default: one conf read per loop entry, zero per-round cost. */
-  private[graft] final class RoundLog(spark: SparkSession, op: String) {
-    private val enabled =
-      spark.conf.get("spark.graft.bench.roundLog", "false").toBoolean
-    private var t0 = System.nanoTime()
-    private def jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    private var j0 = if (enabled) jobs else 0
-    def tick(round: Int): Unit = if (enabled) {
-      val now = System.nanoTime()
-      val j1 = jobs
-      // rdds = block-manager-registered persistent RDD count: a monotone
-      // ramp here means retired round frames are NOT being reclaimed
-      // (round-17 shuffle-envelope diagnosis)
-      val threads = {
-        import scala.jdk.CollectionConverters._
-        Thread.getAllStackTraces.keySet.asScala
-      }
-      val cleaner = threads.find(_.getName == "Spark Context Cleaner")
-        .map(t => s"${t.getState}").getOrElse("DEAD")
-      System.err.println(
-        f"[graft-rounds] op=$op round=$round wall_ms=${(now - t0) / 1e6}%.1f jobs=${j1 - j0} " +
-          s"rdds=${spark.sparkContext.getPersistentRDDs.size} cleaner=$cleaner " +
-          s"threads=${threads.size} bcast=${threads.count(_.getName.contains("broadcast"))} " +
-          s"stage=${threads.count(_.getName.contains("QueryStage"))}")
-      t0 = now
-      j0 = j1
-    }
-  }
-
   /** DUAL-REGIME min-label class merge over an undirected, distinct pair
     * frame `und` (cols a, b), shared by [[minimumSpanningForest]]'s label
     * merge and the streaming
@@ -2804,11 +2662,9 @@ object Analytics {
       val pairs = und.collect().map(r => (r.getLong(0), r.getLong(1)))
       broadcast(minLabelUnionFind(pairs).toSeq.toDF("c", "l"))
     } else {
-      var l0 = und.select(col("a").as("c")).distinct()
+      val l0 = und.select(col("a").as("c")).distinct()
         .select(col("c"), col("c").as("l")).transform(roundBarrier)
       var sig = decSig(l0, "l")
-      var i = 0
-      var changed = true
       // Pointer-doubling reach is 2^i, so 64 rounds cover any merge chain a
       // Long id space can encode. strict callers persist the result (e.g.
       // streaming checkpoint state, where a lagged label is never revisited
@@ -2816,35 +2672,33 @@ object Analytics {
       // than commit divergent labels; non-strict one-shot callers keep the
       // maxInner budget and the warn-and-continue contract.
       val roundBudget = if (strict) math.max(maxInner, 64) else maxInner
-      while (i < roundBudget && changed) {
-        val m2 = und.join(l0.select(col("c").as("b"), col("l").as("__lb")), Seq("b"))
+      val (labels, outcome) = Fixpoint.run("class_merge", roundBudget, l0) { (cur, _) =>
+        val m2 = und.join(cur.select(col("c").as("b"), col("l").as("__lb")), Seq("b"))
           .groupBy(col("a")).agg(min(col("__lb")).as("__ln"))
         // the l(l(c)) POINTER-DOUBLING term makes reach grow exponentially
         // per round (chains of merge pairs would otherwise need diameter
         // rounds — the regime-equivalence requirement: this branch must
         // land on the same fixpoint the driver union-find computes
         // exactly, within the budget)
-        val nl = l0
+        cur
           .join(m2.select(col("a").as("c"), col("__ln")), Seq("c"), "left")
-          .join(l0.select(col("c").as("__lc"), col("l").as("__ll")),
+          .join(cur.select(col("c").as("__lc"), col("l").as("__ll")),
             col("l") === col("__lc"), "left")
           .select(col("c"), least(col("l"),
             coalesce(col("__ln"), col("l")),
             coalesce(col("__ll"), col("l"))).as("l"))
-          .transform(roundBarrier)
+      } { nl =>
         val s = decSig(nl, "l")
-        changed = s.compareTo(sig) != 0
+        val residual = Fixpoint.sigChange(sig, s)
         sig = s
-        l0 = nl
-        i += 1
+        residual
       }
-      if (changed) {
-        val msg = s"[graft] $caller: round budget $roundBudget elapsed " +
-          "before the label flood converged — merged class labels lag the fixpoint"
-        if (strict) throw new IllegalStateException(msg)
-        else System.err.println(msg)
-      }
-      l0.select(col("c"), col("l"))
+      val note = "merged class labels lag the fixpoint"
+      if (strict && !outcome.converged) throw new IllegalStateException(
+        s"[graft] $caller: round budget $roundBudget elapsed " +
+          "before the label flood converged — " + note)
+      Fixpoint.warnIfExhausted(caller, outcome, note)
+      labels.select(col("c"), col("l"))
     }
   }
 
@@ -2870,26 +2724,28 @@ object Analytics {
       .toSet[Long].iterator.map(c => c -> find(c)).toMap
   }
 
-  /** Vertex-frame broadcast regime for the iterative jobs: frames at or
-    * under this many rows are hinted into broadcast joins (checkpointing
-    * hides stats from AQE, so the hint is load-bearing). Past it the joins
-    * degrade to one exchange per round — the floor any orientation has. */
-  private def broadcastMaxRows(g: PropertyGraph): Long =
-    g.spark.conf.get("spark.graft.broadcast.maxRows", "10000000").toLong
-
-  /** EDGE-frame broadcast regime (`spark.graft.broadcast.maxEdgeRows`,
-    * default maxRows/4): [[broadcastMaxRows]]'s 10M-row envelope is
-    * calibrated for 16-byte vertex frames; edge-shaped build sides (kTruss's
-    * oriented (a, b, db) frame) are 24+ bytes per row AND are hinted at TWO
-    * attach sites per round, so near the vertex cap they would hold two
-    * concurrent several-hundred-MB broadcast relations — the forced-
-    * broadcast OOM class the hubAntiJoin note warns about. The /4 default
+  /** The one broadcast hint of the iterative kernels: broadcast `df` when
+    * `rows` — a caller-proved UPPER BOUND on its row count, passed at every
+    * call — is within the regime cap. Checkpointed frames hide size stats
+    * from AQE, so for them the hint is load-bearing; past the cap the join
+    * degrades to one exchange per round, the floor any orientation has.
+    *
+    * Vertex-shaped frames use `spark.graft.broadcast.maxRows` (default 10M
+    * rows of ~16 bytes). EDGE-shaped build sides (`edgeShaped`, e.g.
+    * kTruss's oriented (a, b, db) frame) are 24+ bytes per row AND are
+    * hinted at two attach sites per round, so near the vertex cap they
+    * would hold two concurrent several-hundred-MB broadcast relations —
+    * the forced-broadcast OOM class the hubAntiJoin note warns about; they
+    * use `spark.graft.broadcast.maxEdgeRows` (default maxRows/4), which
     * keeps the worst-case concurrent edge-broadcast bytes at or under one
-    * vertex-cap relation; past it the wedge/closure joins degrade to the
-    * pre-r17 shuffle regime. */
-  private def broadcastMaxEdgeRows(g: PropertyGraph): Long =
-    g.spark.conf.get("spark.graft.broadcast.maxEdgeRows",
-      (broadcastMaxRows(g) / 4L).toString).toLong
+    * vertex-cap relation. */
+  private def hint(df: DataFrame, rows: Long, edgeShaped: Boolean = false): DataFrame = {
+    val conf = df.sparkSession.conf
+    val maxRows = conf.get("spark.graft.broadcast.maxRows", "10000000").toLong
+    val cap = if (edgeShaped) conf.get("spark.graft.broadcast.maxEdgeRows",
+      (maxRows / 4L).toString).toLong else maxRows
+    if (rows <= cap) broadcast(df) else df
+  }
 
   /** Anti-join `df` against a hub id set WITHOUT a forced broadcast hint:
     * #hubs <= 2|E|/maxHubDegree is usually tiny but DATA-DEPENDENT-unbounded

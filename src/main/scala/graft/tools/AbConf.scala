@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * the driver contract): alternates `AB_CONF` between `AB_A` and `AB_B` for
   * `AB_ROUNDS` rounds around `AB_QUERY` (warmup once per side first), prints
   * per-side reps, minima and the result row count (a cheap parity signal —
-  * full parity stays with the oracle checks). Generalizes AbCoreness to any
+  * full parity stays with the oracle checks). Works for any
   * session-conf-switched code path. */
 object AbConf {
   def main(args: Array[String]): Unit = {

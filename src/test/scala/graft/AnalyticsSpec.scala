@@ -720,26 +720,34 @@ class AnalyticsSpec extends AnyFunSuite {
       graft.data.PropertyGraph(graft.core.GraphSchema(), v, e2), maxRounds = 8)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m2 === m)
-    // the sort-free histogram h-index kernel is round-for-round identical
-    // to the window kernel (same monotone recurrence, different plan shape)
-    spark.conf.set("spark.graft.coreness.hindex", "histogram")
+    // the adaptive delta restriction (recompute only vertices with a changed
+    // neighbor) is exact: with its volume gate opened it lands on the same
+    // core numbers as the full-window rounds, on a denser random graph too —
+    // with a 10-vertex tail whose core-1 front creeps in one vertex per
+    // round, so later rounds run on a small frontier
+    val rv = (1L to 70L).map(id => (id, "v")).toDF("id", "label")
+    val re = ((1L to 400L).map(i =>
+      (i, math.abs(i * 2654435761L % 60L) + 1L, math.abs(i * 40503L % 60L) + 1L)) ++
+      (60L until 70L).map(i => (1000L + i, i, i + 1)))
+      .map { case (i, a, b) => (i, a, b, "e") }.toDF("id", "src", "dst", "label")
+    val rg = graft.data.PropertyGraph(graft.core.GraphSchema(), rv, re)
+    def cores(gr: graft.data.PropertyGraph) = {
+      val (res, conv) = Analytics.corenessConverged(gr, maxRounds = 12)
+      assert(conv)
+      res.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val full = cores(rg)
     try {
-      val (resH, convH) = Analytics.corenessConverged(g, maxRounds = 8)
-      assert(convH)
-      assert(resH.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === m)
-      // and on a denser random graph, both kernels agree vertex-for-vertex
-      val rv = (1L to 60L).map(id => (id, "v")).toDF("id", "label")
-      val re = (1L to 400L).map(i =>
-        (i, math.abs(i * 2654435761L % 60L) + 1L,
-          math.abs(i * 40503L % 60L) + 1L, "e")).toDF("id", "src", "dst", "label")
-      val rg = graft.data.PropertyGraph(graft.core.GraphSchema(), rv, re)
-      val hH = Analytics.coreness(rg, maxRounds = 12)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      spark.conf.unset("spark.graft.coreness.hindex")
-      val hW = Analytics.coreness(rg, maxRounds = 12)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(hH === hW)
-    } finally spark.conf.unset("spark.graft.coreness.hindex")
+      spark.conf.set("spark.graft.coreness.deltaMinEdges", "0")
+      assert(cores(rg) === full, "delta path (frontier-gated) differs")
+      assert(cores(g) === m)
+      spark.conf.set("spark.graft.coreness.deltaFrontierFrac", "1.0")
+      assert(cores(rg) === full, "delta path (every round from 2) differs")
+      assert(cores(g) === m)
+    } finally {
+      spark.conf.unset("spark.graft.coreness.deltaMinEdges")
+      spark.conf.unset("spark.graft.coreness.deltaFrontierFrac")
+    }
   }
 
   test("guards: absent sigma source, negative-id sentinel alias, walk id bounds") {

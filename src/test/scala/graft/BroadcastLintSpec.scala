@@ -100,20 +100,12 @@ class BroadcastLintSpec extends AnyFunSuite {
       "category-cardinality: degree histogram, one row per distinct degree"),
     Allow("olap/Analytics.scala", "val ek = grid.crossJoin(broadcast(eh)).filter(col(\"m\") > col(\"k\"))",
       "category-cardinality: min-degree histogram, one row per distinct degree"),
-    Allow("olap/Analytics.scala", "def hint(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df",
-      "count-gated: caller gates bcast on spark.graft.broadcast.maxRows"),
+    Allow("olap/Analytics.scala", "if (rows <= cap) broadcast(df) else df",
+      "count-gated: the iterative kernels' one hint helper; every call passes an explicit row bound `rows` (an upper bound on the frame's rows proved at the call site) and the hint applies only when rows <= spark.graft.broadcast.maxRows, or <= spark.graft.broadcast.maxEdgeRows for edge-shaped frames"),
     Allow("olap/Analytics.scala", "ids.join(raw, Seq(\"id\"), \"left\").crossJoin(broadcast(m))",
       "one-row aggregate (max norm)"),
     Allow("olap/Analytics.scala", ".crossJoin(broadcast(sources.toDF(\"source\")))",
       "caller-bounded: pivot/source vertex list"),
-    Allow("olap/Analytics.scala", "def hint(df: DataFrame): DataFrame = if (bcastLabels) broadcast(df) else df",
-      "count-gated: caller gates bcastLabels on spark.graft.broadcast.maxRows"),
-    Allow("olap/Analytics.scala", "def hint(df: DataFrame, n: Long): DataFrame = if (n <= maxBcast) broadcast(df) else df",
-      "count-gated: explicit n <= maxBcast guard at every call"),
-    Allow("olap/Analytics.scala", "def hintE(df: DataFrame, n: Long): DataFrame = if (n <= maxBcastE) broadcast(df) else df",
-      "count-gated: kTruss EDGE-shaped oriented frame, n <= spark.graft.broadcast.maxEdgeRows (tighter byte envelope than the vertex cap; two concurrent attach sites per round)"),
-    Allow("olap/Analytics.scala", "def hint(df: DataFrame): DataFrame = if (vBound <= maxBcast) broadcast(df) else df",
-      "count-gated: betweennessSampled per-level frames <= |distinct sources| * |V| = vBound, gated on maxBcast"),
     Allow("olap/Analytics.scala", ".crossJoin(broadcast(mTot))",
       "one-row aggregate (total edge count)"),
     Allow("olap/Analytics.scala", "broadcast(minLabelUnionFind(pairs).toSeq.toDF(\"c\", \"l\"))",
