@@ -4,7 +4,7 @@ import graft.data.PropertyGraph
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.graphx.{Edge => GxEdge, Graph => GxGraph, VertexId, PartitionStrategy}
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType}
 import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics — the OLAP layer the reference runs through its
@@ -780,7 +780,7 @@ object Analytics {
       g.edges.select(col("src"), col("dst"))
     }
     val ids = graft.core.PlanCache.cached(g.spark,
-      graft.core.PlanCache.key("hits-ids", g.vertices)) {
+      graft.core.PlanCache.key("pagerank-ids", g.vertices)) {
       g.vertices.select(col("id"))
     }
     def normalized(raw: DataFrame, valCol: String, outCol: String): DataFrame = {
@@ -847,12 +847,12 @@ object Analytics {
     ranks.filter(col("r") > 0L).select(col("id"), col("r").as("rank_ppr"))
   }
 
-  /** Synchronous Bellman-Ford hop-distance from `source` — `maxIter` full
+  /** Synchronous Bellman-Ford hop-distance from `source` — `maxIter`
     * relaxation rounds (≡ Pregel min-combiner after maxIter supersteps,
     * reference tt/olap/ShortestDistanceVertexProgram.java:26-146). Integer
     * distances, so exactly oracle-checkable. Only reached vertices are
-    * returned. Scale: per round one edges⨝frontier join + min-combine — the
-    * frontier is the only growing state. */
+    * returned. Scale: per round one edges⨝frontier join + min-combine over
+    * the rows that changed last round ([[relax]]). */
   def shortestHopsExact(g: PropertyGraph, source: Long, maxIter: Int = 8): DataFrame =
     shortestDistanceExact(g, source, lit(1L), maxIter)
 
@@ -865,49 +865,15 @@ object Analytics {
     * other Brandes half, is NOT engine-portable and is deliberately left
     * out). Returns (id, distance, sigma); σ(source) = 1.
     *
-    * Two phases: the exact BFS distances ([[shortestHopsExact]]), then one
-    * layer-synchronous pass — σ of layer r is the edge-join sum of σ over
-    * layer r−1 predecessors (σ(v) = Σ_{u→v, d(u)+1=d(v)} σ(u)), `layers`
-    * rounds of one edges⨝layer join + one map-side-combinable integer sum
-    * each, the same shuffle profile as the BFS itself. */
+    * Two phases: the exact BFS distances ([[relax]]), then [[pathLayers]] —
+    * σ of layer r is the edge-join sum of σ over layer r−1 predecessors
+    * (σ(v) = Σ_{u→v, d(u)+1=d(v)} σ(u)), one edges⨝layer join + one
+    * map-side-combinable integer sum per level, the BFS's shuffle profile. */
   def shortestPathCounts(g: PropertyGraph, source: Long,
       maxIter: Int = 8): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val dist = shortestHopsExact(g, source, maxIter)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // absent source ⇒ empty BFS ⇒ max(distance) is SQL NULL: return the
-    // empty sigma frame instead of NPE-ing on the aggregate read
-    val maxRow = dist.agg(max(col("distance"))).head
-    if (maxRow.isNullAt(0)) {
-      dist.unpersist(false)
-      return Seq.empty[(Long, Long, Long)].toDF("id", "distance", "sigma")
-    }
-    val maxD = maxRow.getLong(0)
-    val e = g.edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    var sigma = dist.filter(col("distance") === 0L)
-      .select(col("id"), col("distance"), lit(1L).as("sigma"))
-      .transform(roundBarrier)
-    var prevLayer = sigma
-    var r = 1L
-    while (r <= maxD) {
-      val layerR = dist.filter(col("distance") === r)
-      val next = e
-        .join(prevLayer.select(col("id").as("src"), col("sigma").as("__s")), Seq("src"))
-        .join(layerR.select(col("id").as("dst")), Seq("dst"))
-        .groupBy(col("dst")).agg(sum(col("__s")).as("sigma"))
-        .select(col("dst").as("id"), lit(r).as("distance"), col("sigma"))
-        .transform(roundBarrier)
-      next.count() // materialize the lazy barrier: the layer is reused next
-                   // round AND must survive the unpersists below
-      sigma = sigma.unionByName(next)
-      prevLayer = next
-      r += 1L
-    }
-    sigma.count() // settle the layer-0 checkpoint too before dropping inputs
-    e.unpersist(false)
-    dist.unpersist(false)
-    sigma
+    val (e, layers, _) = forward(g, Seq(source), maxIter)
+    releasing(e)(layers.reduce(_ unionByName _)
+      .select(col("id"), col("distance"), col("sigma")))
   }
 
   /** STRESS centrality contribution from one source — τ(v) = the number of
@@ -918,275 +884,162 @@ object Analytics {
     * stress keeps the raw counts, so the whole computation stays in exact
     * BIGINT sums and the SQL oracle matches hash-exact.
     *
-    * τ(v) = σ(v)·g(v): σ from [[shortestPathCounts]] (prefix counts), and
+    * τ(v) = σ(v)·g(v): σ from [[pathLayers]] (prefix counts), and
     * g(v) = Σ_{w: v→w, d(w)=d(v)+1} (1 + g(w)) — the number of
     * d-respecting path SUFFIXES leaving v, computed in one backward sweep
-    * over the BFS DAG (deepest layer first, g = 0 there). Every shortest
-    * s→t path through v factors uniquely into a prefix (σ) and a suffix
-    * (g), hence the product. τ(source) is reported 0 (endpoints are not
-    * interior — Brandes' δ(s)=0 convention). Parallel edges count distinct
-    * paths, matching σ's multiplicity.
+    * over the BFS DAG ([[sweepBack]], deepest layer first, g = 0 there).
+    * Every shortest s→t path through v factors uniquely into a prefix (σ)
+    * and a suffix (g), hence the product. τ(source) is reported 0 (endpoints
+    * are not interior — Brandes' δ(s)=0 convention). Parallel edges count
+    * distinct paths, matching σ's multiplicity.
     *
     * Returns (id, distance, sigma, stress) for reached vertices. Counts can
     * overflow Long on adversarially path-rich graphs (like σ itself — the
     * oracle's BIGINT wraps are not mirrored, DuckDB raises instead), so
-    * treat astronomically-path-dense graphs with sampling. Per round: one
-    * edges⨝layer join + one map-side-combinable integer sum — the same
-    * shuffle profile as the σ forward pass, run in reverse. */
+    * treat astronomically-path-dense graphs with sampling. */
   def stressCentrality(g: PropertyGraph, source: Long,
-      maxIter: Int = 8): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val sp = shortestPathCounts(g, source, maxIter)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val maxRow = sp.agg(max(col("distance"))).head
-    if (maxRow.isNullAt(0)) {
-      sp.unpersist(false)
-      return Seq.empty[(Long, Long, Long, Long)].toDF("id", "distance", "sigma", "stress")
-    }
-    val maxD = maxRow.getLong(0)
-    val e = g.edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    var gCur = sp.filter(col("distance") === maxD)
-      .select(col("id"), lit(0L).as("__g")).transform(roundBarrier)
-    var acc = Vector(gCur)
-    var r = maxD - 1L
-    while (r >= 0L) {
-      val layerR = sp.filter(col("distance") === r).select(col("id"))
-      val contrib = e
-        .join(gCur.select(col("id").as("dst"), col("__g").as("__gn")), Seq("dst"))
-        .groupBy(col("src")).agg(sum(col("__gn") + 1L).as("__s"))
-      val next = layerR
-        .join(contrib.select(col("src").as("id"), col("__s")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__s"), lit(0L)).as("__g"))
-        .transform(roundBarrier)
-      next.count() // materialize: reused next round and below
-      acc = acc :+ next
-      gCur = next
-      r -= 1L
-    }
-    val gAll = acc.reduce(_ unionByName _)
-    val out = sp.join(gAll, Seq("id"))
+      maxIter: Int = 8): DataFrame =
+    swept(g, Seq(source), maxIter, LongType)((_, _, gw) => gw + 1L)
       .select(col("id"), col("distance"), col("sigma"),
         when(col("distance") === 0L, lit(0L))
-          .otherwise(col("sigma") * col("__g")).as("stress"))
-    out.count() // settle before dropping inputs
-    e.unpersist(false)
-    sp.unpersist(false)
-    out
-  }
+          .otherwise(col("sigma") * col("g")).as("stress"))
 
   /** Brandes BETWEENNESS dependency from one source (Brandes 2001): δ_s(v)
     * = Σ_{w ∈ succ(v)} (σ_v/σ_w)·(1 + δ_s(w)), accumulated over the BFS DAG
-    * deepest layer first — the fractional sibling of [[stressCentrality]].
-    * The fraction is what makes textbook betweenness non-portable across
-    * engines; here each ratio σ_v/σ_w is a 9-dp-pinned double (absorbing
-    * last-ulp division differences) cast to DECIMAL(13,12) — it is ≤ 1 by
-    * construction — each product against (1 + δ_w) is EXACT in DECIMAL
-    * (scales sized to stay inside 38 digits) and then pinned to 6 dp, and
-    * every sum is DECIMAL — so the result is bit-identical on any engine
-    * that mirrors the formula, at the cost of ~1e-6 drift from the real-
-    * valued δ (irrelevant for ranking). Returns (id, distance, sigma,
-    * delta) for reached vertices; δ(source) is computed but conventionally
-    * NOT added to betweenness (Brandes' w ≠ s rule — [[betweennessSampled]]
-    * drops it).
+    * deepest layer first — the fractional sibling of [[stressCentrality]],
+    * with the engine-portable per-edge term of [[dependency]]. Returns
+    * (id, distance, sigma, delta) for reached vertices; δ(source) is
+    * computed but conventionally NOT added to betweenness (Brandes' w ≠ s
+    * rule — [[betweennessSampled]] drops it).
     *
-    * Scale: σ comes from [[shortestPathCounts]]; the backward sweep is one
+    * Scale: the [[stressCentrality]] profile — σ layers forward, one
     * edges⨝next-layer join + one map-side-combinable DECIMAL sum per level
-    * — the stress profile in reverse. σ overflows past ~2⁵³ distinguishable
-    * doubles on adversarially path-dense graphs (same caveat as stress):
-    * sample sources, don't run all-pairs. */
+    * back. σ overflows past ~2⁵³ distinguishable doubles on adversarially
+    * path-dense graphs (same caveat as stress): sample sources, don't run
+    * all-pairs. */
   def betweennessContribution(g: PropertyGraph, source: Long,
-      maxIter: Int = 8): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val dec = DecimalType(21, 6)
-    val zero = lit(java.math.BigDecimal.ZERO).cast(dec)
-    val sp = shortestPathCounts(g, source, maxIter).persist(StorageLevel.MEMORY_AND_DISK)
-    val maxRow = sp.agg(max(col("distance"))).head
-    if (maxRow.isNullAt(0)) {
-      sp.unpersist(false)
-      return Seq.empty[(Long, Long, Long, java.math.BigDecimal)]
-        .toDF("id", "distance", "sigma", "delta")
-        .select(col("id"), col("distance"), col("sigma"), col("delta").cast(dec))
-    }
-    val maxD = maxRow.getLong(0)
-    val e = g.edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    var delta = sp.filter(col("distance") === maxD)
-      .select(col("id"), zero.as("delta")).transform(roundBarrier)
-    var acc = delta
-    var r = maxD - 1
-    while (r >= 0) {
-      val nxt = sp.filter(col("distance") === r + 1)
-        .select(col("id").as("dst"), col("sigma").as("__sw"))
-        .join(delta.select(col("id").as("dst"), col("delta").as("__dw")), Seq("dst"))
-      val lvl = sp.filter(col("distance") === r)
-        .select(col("id").as("src"), col("sigma").as("__sv"))
-      // ratio ≤ 1 (σ_v divides into σ_w's predecessor sum), so DECIMAL(13,12)
-      // holds it and the product against (1+δ) stays exact inside 38 digits
-      val contrib = e.join(nxt, Seq("dst")).join(lvl, Seq("src"))
-        .select(col("src").as("id"),
-          round(round(col("__sv").cast("double") / col("__sw").cast("double"), 9)
-              .cast(DecimalType(13, 12)) * (lit(1).cast(dec) + col("__dw")), 6)
-            .cast(dec).as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("__s"))
-      delta = sp.filter(col("distance") === r).select(col("id"))
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"), coalesce(col("__s").cast(dec), zero).as("delta"))
-        .transform(roundBarrier)
-      delta.count() // materialize: reused next level and in the union below
-      acc = acc.unionByName(delta)
-      r -= 1
-    }
-    val out = sp.join(acc, Seq("id"))
-      .select(col("id"), col("distance"), col("sigma"), col("delta"))
-    out.count() // settle before dropping inputs
-    e.unpersist(false)
-    sp.unpersist(false)
-    out
-  }
+      maxIter: Int = 8): DataFrame =
+    swept(g, Seq(source), maxIter, Dependency)(dependency)
+      .select(col("id"), col("distance"), col("sigma"), col("g").as("delta"))
 
   /** Sampled betweenness centrality — Σ over the sampled sources of the
     * Brandes dependency, endpoints excluded (the standard estimator:
-    * Brandes & Pich 2007 pivot sampling; exact when `sources` = V).
+    * Brandes & Pich 2007 pivot sampling; exact when `sources` = V). A
+    * repeated source is sampled once.
     *
     * ALL pivots run in ONE (source, id)-keyed frame — the 100 TB shape:
     * per BFS level the batch pays one edges⨝frontier join + one aggregate
     * for EVERY source together, so adding pivots widens rows instead of
     * multiplying Spark jobs (a per-source loop was measured 3× slower at
     * 3 pivots from job overhead alone, and the gap grows with the sample).
-    * Arithmetic is identical to [[betweennessContribution]] — per-source
-    * 9-dp σ ratios, width-checked DECIMAL products/sums — so the result
-    * matches the per-source sweep bit-for-bit. */
+    * The code path is [[betweennessContribution]]'s, so the result matches
+    * the per-source sweep bit-for-bit. */
   def betweennessSampled(g: PropertyGraph, sources: Seq[Long],
       maxIter: Int = 8): DataFrame = {
     require(sources.nonEmpty, "betweennessSampled: need at least one source")
-    val spark = g.spark
-    import spark.implicits._
-    val dec = DecimalType(21, 6)
-    val zero = lit(java.math.BigDecimal.ZERO).cast(dec)
-    val empty = Seq.empty[(Long, Double)].toDF("id", "betweenness")
-    // laid out ONCE by the forward key; in the broadcast regime (every
-    // per-level frame is <= |sources|·|V| rows and gated below) no phase
-    // exchanges the edge frame again — broadcast joins stream it in place
-    // and the per-level aggregates ship map-combined vertex-sized frames
-    val e = g.edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // per-level frames are bounded by |distinct sources| · |V| (checkpointed
-    // frames hide size stats from AQE, so the hints are load-bearing)
-    val vBound = sources.distinct.size.toLong * g.vertices.count()
-    // forward BFS, batched: (s, id, d) — absent sources drop at the seed
-    var dist = sources.distinct.toDF("s")
-      .join(g.vertices.select(col("id")), col("s") === col("id"), "left_semi")
-      .select(col("s"), col("s").as("id"), lit(0L).as("d"))
-      .transform(roundBarrier)
-    val seeded = dist.count()
-    if (seeded == 0L) { e.unpersist(false); return empty }
-    Fixpoint.run("betweenness_bfs", maxIter, dist, residual0 = seeded) { (frontier, lvl) =>
-      e.join(hint(frontier.select(col("s"), col("id").as("src")), vBound), Seq("src"))
-        .select(col("s"), col("dst").as("id")).distinct()
-        .join(hint(dist.select(col("s"), col("id")), vBound), Seq("s", "id"), "left_anti")
-        .select(col("s"), col("id"), lit(lvl.toLong).as("d"))
-    } { next =>
-      val n = next.count()
-      if (n > 0) dist = dist.unionByName(next)
-      n
-    }
-    dist = dist.localCheckpoint(true)
-    val maxD = dist.agg(max(col("d"))).head.getLong(0)
-    // σ forward, one layer frame per level (the backward sweep needs two
-    // adjacent levels at a time). No per-level action: each lazy checkpoint
-    // materializes inside the NEXT level's job (the logical plan is already
-    // truncated at the barrier, so neither Catalyst nor the stats bridge
-    // ever sees a compounded chain) — r17 measured the per-level count()s
-    // as pure job-scheduling overhead at bench scale.
-    var layers = Vector(dist.filter(col("d") === 0L)
-      .select(col("s"), col("id"), lit(1L).as("sigma")).transform(roundBarrier))
-    (1L to maxD).foreach { r =>
-      val lv = e.join(hint(layers.last.select(col("s"), col("id").as("src"),
-          col("sigma")), vBound), Seq("src"))
+    swept(g, sources, maxIter, Dependency)(dependency)
+      .filter(col("id") =!= col("s"))
+      .groupBy(col("id"))
+      .agg(round(sum(col("g")).cast("double"), 6).as("betweenness"))
+  }
+
+  /** Brandes' per-edge dependency term (σv/σw)·(1 + δw), engine-portable:
+    * the ratio is a 9-dp-pinned double (absorbing last-ulp division
+    * differences) cast to DECIMAL(13,12) — it is ≤ 1 by construction — the
+    * product against (1 + δw) is EXACT in DECIMAL (scales sized to stay
+    * inside 38 digits) and then pinned to 6 dp, and every sum is DECIMAL —
+    * so the result is bit-identical on any engine that mirrors the formula,
+    * at the cost of ~1e-6 drift from the real-valued δ (irrelevant for
+    * ranking). */
+  private val Dependency = DecimalType(21, 6)
+  private def dependency(sv: Column, sw: Column, dw: Column): Column =
+    round(round(sv.cast("double") / sw.cast("double"), 9).cast(DecimalType(13, 12)) *
+      (lit(1).cast(Dependency) + dw), 6).cast(Dependency)
+
+  /** The forward half of the σ family: BFS distances from the distinct
+    * `sources` ([[relax]]) cut into σ layers ([[pathLayers]]). Returns the
+    * persisted edge frame (released by [[releasing]] once the caller's
+    * output is settled), the layers and their row bounds. */
+  private def forward(g: PropertyGraph, sources: Seq[Long],
+      maxIter: Int): (DataFrame, Vector[DataFrame], Vector[Long]) = {
+    val e = bfsEdges(g, g.edges.select(col("src"), col("dst")))
+    val (dist, sizes) = relax("sigma_bfs", g, e, sources, maxIter)
+    (e, pathLayers(e, dist, sizes), sizes)
+  }
+
+  /** Per-level σ frames (s, id, distance, sigma) over unit-weight [[relax]]
+    * distances: level r sums σ over its level r−1 predecessors. Each level
+    * is a lazy barrier with no action of its own — it materializes inside
+    * the next level's job (the plan is already truncated, so no chain
+    * compounds) and the caller's one action settles the rest; `sizes(r)`
+    * is level r's row count, so the broadcast hints cost no count. */
+  private def pathLayers(e: DataFrame, dist: DataFrame,
+      sizes: Vector[Long]): Vector[DataFrame] = {
+    val layer0 = dist.filter(col("d") === 0L)
+      .select(col("s"), col("id"), lit(0L).as("distance"), lit(1L).as("sigma"))
+    (1 until sizes.size).takeWhile(sizes(_) > 0).foldLeft(Vector(layer0)) { (layers, r) =>
+      val prev = layers.last.select(col("s"), col("id").as("src"), col("sigma"))
+      layers :+ e.join(hint(prev, sizes(r - 1)), Seq("src"))
         .select(col("s"), col("dst").as("id"), col("sigma"))
-        .join(hint(dist.filter(col("d") === r).select(col("s"), col("id")), vBound),
+        .join(hint(dist.filter(col("d") === r).select(col("s"), col("id")), sizes(r)),
           Seq("s", "id"), "left_semi")
         .groupBy(col("s"), col("id")).agg(sum(col("sigma")).as("sigma"))
+        .select(col("s"), col("id"), lit(r.toLong).as("distance"), col("sigma"))
         .transform(roundBarrier)
-      layers = layers :+ lv
     }
-    // backward δ sweep: deepest layer (per source, implicitly — a source
-    // shallower than maxD just has no rows there) seeds 0; each level pulls
-    // round(round9(σv/σw)·(1+δw), 6) from its successors
-    var delta = layers(maxD.toInt).select(col("s"), col("id"), zero.as("delta"))
-      .transform(roundBarrier)
-    var acc = delta
-    var r = maxD - 1
-    while (r >= 0) {
-      val nxt = layers((r + 1).toInt)
-        .select(col("s"), col("id").as("dst"), col("sigma").as("__sw"))
-        .join(hint(delta.select(col("s"), col("id").as("dst"), col("delta").as("__dw")),
-          vBound), Seq("s", "dst"))
-      val lvlS = layers(r.toInt)
-        .select(col("s"), col("id").as("src"), col("sigma").as("__sv"))
-      val contrib = e.join(hint(nxt, vBound), Seq("dst")).join(hint(lvlS, vBound), Seq("s", "src"))
-        .select(col("s"), col("src").as("id"),
-          round(round(col("__sv").cast("double") / col("__sw").cast("double"), 9)
-              .cast(DecimalType(13, 12)) * (lit(1).cast(dec) + col("__dw")), 6)
-            .cast(dec).as("c"))
-        .groupBy(col("s"), col("id")).agg(sum(col("c")).as("__s"))
-      delta = layers(r.toInt).select(col("s"), col("id"))
-        .join(hint(contrib, vBound), Seq("s", "id"), "left")
-        .select(col("s"), col("id"),
-          coalesce(col("__s").cast(dec), zero).as("delta"))
+  }
+
+  /** One deepest-first sweep over [[pathLayers]]: the deepest level seeds
+    * g = 0; level r sums `contrib(σv, σw, gw)` over its edges v→w into level
+    * r+1, and a vertex with none gets 0. Values are typed `dt`. Returns
+    * (s, id, distance, sigma, g) for every level. */
+  private def sweepBack(e: DataFrame, layers: Vector[DataFrame], sizes: Vector[Long],
+      dt: DataType)(contrib: (Column, Column, Column) => Column): DataFrame = {
+    val zero = lit(0).cast(dt)
+    layers.indices.init.reverse.foldLeft(Vector(layers.last.withColumn("g", zero))) { (done, r) =>
+      val next = done.last.select(col("s"), col("id").as("dst"),
+        col("sigma").as("__sw"), col("g").as("__gw"))
+      val here = layers(r).select(col("s"), col("id").as("src"), col("sigma").as("__sv"))
+      val c = e.join(hint(next, sizes(r + 1)), Seq("dst"))
+        .join(hint(here, sizes(r)), Seq("s", "src"))
+        .groupBy(col("s"), col("src").as("id"))
+        .agg(sum(contrib(col("__sv"), col("__sw"), col("__gw"))).as("__c"))
+      done :+ layers(r).join(hint(c, sizes(r)), Seq("s", "id"), "left")
+        .select(col("s"), col("id"), col("distance"), col("sigma"),
+          coalesce(col("__c"), zero).cast(dt).as("g"))
         .transform(roundBarrier)
-      acc = acc.unionByName(delta)
-      r -= 1
-    }
-    val out = acc.filter(col("id") =!= col("s"))
-      .groupBy(col("id"))
-      .agg(round(sum(col("delta")).cast("double"), 6).as("betweenness"))
-    out.count() // settle before dropping the edge cache
-    e.unpersist(false)
-    out
+    }.reduce(_ unionByName _)
+  }
+
+  /** [[forward]] then [[sweepBack]], settled, edge frame released. */
+  private def swept(g: PropertyGraph, sources: Seq[Long], maxIter: Int, dt: DataType)(
+      contrib: (Column, Column, Column) => Column): DataFrame = {
+    val (e, layers, sizes) = forward(g, sources, maxIter)
+    releasing(e)(sweepBack(e, layers, sizes, dt)(contrib))
   }
 
   /** Unweighted shortest-path TREE from `source`: (id, distance, pred),
     * pred = the MINIMUM-id optimal predecessor — the deterministic choice,
-    * so every engine (and the SQL oracle, which derives preds from final
-    * distances: min src with dist(src) = dist(v) − 1 and an edge to v)
-    * reconstructs the identical paths. This is the relational form of
-    * TinkerPop's ShortestPathVertexProgram output (the reference runs that
-    * program through its SparkGraphComputer integration): the tree IS every
-    * shortest path, materialized as one pointer per vertex instead of one
-    * array per path.
+    * so every engine (and the SQL oracle) reconstructs the identical paths.
+    * This is the relational form of TinkerPop's ShortestPathVertexProgram
+    * output (the reference runs that program through its SparkGraphComputer
+    * integration): the tree IS every shortest path, materialized as one
+    * pointer per vertex instead of one array per path.
     *
-    * Per round: one edges⨝frontier join collapsed map-side by the min-pred
-    * aggregate (constant-width shuffle), lazy per-round lineage barriers;
-    * BFS settles each vertex at its true level, so the first-reach
-    * candidates are exactly the optimal predecessors. Terminates on an
-    * empty frontier (one count per round — the round's action, which also
-    * materializes the barrier) or after `maxIter` rounds. */
+    * The distances come from [[relax]]; pred is then derived the oracle's
+    * way, as the min src with d(src) = d(v) − 1 and an edge to v — one
+    * edges⨝distances pass collapsed map-side by the min aggregate. */
   def shortestPathTree(g: PropertyGraph, source: Long, maxIter: Int = 8): DataFrame = {
-    val e = g.edges.select(col("src"), col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = g.vertices.select(col("id"),
-      when(col("id") === source, lit(0L)).as("d"),
-      lit(null).cast("long").as("pred")).transform(roundBarrier)
-    var round = 0L
-    var frontierN = 1L
-    while (round < maxIter && frontierN > 0) {
-      val frontier = dist.filter(col("d") === round).select(col("id").as("__fid"))
-      val cand = e.join(frontier, e("src") === col("__fid"))
-        .groupBy(col("dst")).agg(min(col("src")).as("__np"))
-        .select(col("dst").as("id"), col("__np"))
-      dist = dist.join(cand, Seq("id"), "left")
-        .select(col("id"),
-          when(col("d").isNotNull, col("d"))
-            .otherwise(when(col("__np").isNotNull, lit(round + 1L))).as("d"),
-          when(col("d").isNotNull, col("pred")).otherwise(col("__np")).as("pred"))
-        .transform(roundBarrier)
-      round += 1
-      frontierN = dist.filter(col("d") === round).count()
-    }
-    e.unpersist(false)
-    dist.filter(col("d").isNotNull).select(col("id"), col("d").as("distance"), col("pred"))
+    val e = bfsEdges(g, g.edges.select(col("src"), col("dst")))
+    val (dist, sizes) = relax("sssp_tree", g, e, Seq(source), maxIter)
+    val reached = sizes.sum // the seed bound plus one improvement per reached row
+    val pred = e
+      .join(hint(dist.select(col("id").as("src"), col("d").as("__ds")), reached), Seq("src"))
+      .join(hint(dist.select(col("id").as("dst"), col("d").as("__dd")), reached), Seq("dst"))
+      .filter(col("__dd") === col("__ds") + 1L)
+      .groupBy(col("dst").as("id")).agg(min(col("src")).as("pred"))
+    releasing(e)(dist.join(pred, Seq("id"), "left")
+      .select(col("id"), col("d").as("distance"), col("pred")).transform(roundBarrier))
   }
 
   /** Sampled harmonic (closeness) centrality — Σ over sampled sources of
@@ -1197,10 +1050,9 @@ object Analytics {
     * hash-exact; divide by 10¹² for the float value) plus `reached` (how
     * many sampled sources see v; v itself excluded — 1/0 is not a term).
     *
-    * One multi-source BFS: state (id, source, d) carries the source tag, so
-    * each round is ONE edges⨝frontier join regardless of |sources| — k·|V|
-    * state, the price of k samples, with the same lazy-barrier + per-round
-    * materializing action as [[shortestDistanceExact]]. */
+    * One multi-source BFS ([[relax]]): state (source, id, d) carries the
+    * source tag, so each round is ONE edges⨝frontier join regardless of
+    * |sources|, over at most k·|V| reached rows — the price of k samples. */
   def harmonicCentrality(g: PropertyGraph, sources: Seq[Long],
       maxIter: Int = 6): DataFrame =
     multiSourceBfs(g, sources, maxIter, "harmonicCentrality")
@@ -1219,8 +1071,8 @@ object Analytics {
     * on disconnected graphs — harmonic degrades gracefully when some
     * sources cannot reach v, while closeness's Σd silently drops the
     * missing pairs (the `reached` column makes that visible). Shares the
-    * one-BFS-for-k-sources engine: k·|V| state, one edges⨝frontier join
-    * per round regardless of |sources|. */
+    * one-BFS-for-k-sources engine: one edges⨝frontier join per round
+    * regardless of |sources|. */
   def closenessCentrality(g: PropertyGraph, sources: Seq[Long],
       maxIter: Int = 6): DataFrame =
     multiSourceBfs(g, sources, maxIter, "closenessCentrality")
@@ -1284,49 +1136,23 @@ object Analytics {
     colors.unionByName(odd)
   }
 
-  /** Multi-source BFS to fixpoint (or `maxIter`) — directed by default,
-    * both-orientation expansion with `undirected`: one (id, source,
-    * d) row per REACHED pair. State carries the source tag, so each round is
-    * ONE edges⨝frontier join regardless of |sources| — k·|V| state, the
-    * price of k samples, with the same lazy-barrier + per-round
-    * materializing action as [[shortestDistanceExact]]; the per-round action
-    * doubles as the monotone convergence signature (unchanged (reached, Σd)
-    * ⇒ fixed point, which equals the oracle's fixed-round result). */
+  /** Multi-source BFS on [[relax]] — directed by default, both-orientation
+    * expansion with `undirected`: one (id, source, d) row per REACHED pair,
+    * one edges⨝frontier join per round regardless of |sources|. A repeated
+    * source counts once per repetition, as in the oracle's VALUES list. */
   private def multiSourceBfs(g: PropertyGraph, sources: Seq[Long],
       maxIter: Int, opName: String, undirected: Boolean = false): DataFrame = {
     require(sources.nonEmpty, s"$opName needs at least one source")
     val spark = g.spark
     import spark.implicits._
-    val dir0 = g.edges.select(col("src"), col("dst"))
-    val e = (if (undirected)
-        dir0.unionAll(g.edges.select(col("dst").as("src"), col("src").as("dst")))
-      else dir0).persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = g.vertices.select(col("id"))
-      .crossJoin(broadcast(sources.toDF("source")))
-      .select(col("id"), col("source"),
-        when(col("id") === col("source"), lit(0L)).as("d"))
-      .transform(roundBarrier)
-    var prev: (Long, java.math.BigDecimal) = null
-    var round = 0
-    var converged = false
-    while (round < maxIter && !converged) {
-      val reach = dist.filter(col("d").isNotNull)
-      val relaxed = e.join(reach, e("src") === reach("id"))
-        .select(col("dst").as("id"), col("source"), (col("d") + 1L).as("nd"))
-        .groupBy(col("id"), col("source")).agg(min(col("nd")).as("nd"))
-      dist = dist.join(relaxed, Seq("id", "source"), "left")
-        .select(col("id"), col("source"), least(col("d"), col("nd")).as("d"))
-        .transform(roundBarrier)
-      val r = dist.filter(col("d").isNotNull)
-        .agg(count(lit(1)).as("n"), sum(col("d").cast("decimal(38,0)")).as("s")).head
-      val sig = (r.getLong(0), r.getDecimal(1))
-      converged = prev != null && sig._1 == prev._1 && sig._2 != null &&
-        prev._2 != null && sig._2.compareTo(prev._2) == 0
-      prev = sig
-      round += 1
-    }
-    e.unpersist(false)
-    dist.filter(col("d").isNotNull)
+    val fwd = g.edges.select(col("src"), col("dst"))
+    val e = bfsEdges(g, if (undirected)
+      fwd.unionAll(g.edges.select(col("dst").as("src"), col("src").as("dst"))) else fwd)
+    val (dist, _) = relax(opName, g, e, sources, maxIter)
+    e.unpersist(false) // dist is the last round's settled checkpoint
+    val bfs = dist.select(col("id"), col("s").as("source"), col("d"))
+    if (sources.distinct.size == sources.size) bfs
+    else bfs.join(broadcast(sources.toDF("source")), Seq("source"))
   }
 
   /** Materialize the source→v id chain for EVERY vertex of a
@@ -1355,49 +1181,68 @@ object Analytics {
   /** Weighted single-source shortest distance in exact integer arithmetic —
     * [[shortestHopsExact]] generalized with a per-edge integer `weight`
     * column (the reference's ShortestDistanceVertexProgram reads its edge
-    * `distance` property the same way; weights must be non-negative for
-    * Bellman-Ford's monotone early exit to hold). Per round: one
-    * edges⨝frontier join + min-combine; the same monotone (reached-count,
-    * distance-sum) convergence signature. */
+    * `distance` property the same way). Runs on [[relax]]; an edge whose
+    * weight is NULL never relaxes anything, so it is dropped up front. */
   def shortestDistanceExact(g: PropertyGraph, source: Long, weight: Column,
       maxIter: Int = 8): DataFrame = {
-    val e = g.edges.select(col("src"), col("dst"), weight.cast("long").as("__w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var dist = g.vertices.select(col("id"))
-      .select(col("id"), when(col("id") === source, lit(0L)).as("d"))
+    val e = bfsEdges(g, g.edges.select(col("src"), col("dst"), weight.cast("long").as("__w"))
+      .filter(col("__w").isNotNull))
+    val (dist, _) = relax("sssp", g, e, Seq(source), maxIter, col("__w"))
+    e.unpersist(false) // dist is the last round's settled checkpoint
+    dist.select(col("id"), col("d").as("distance"))
+  }
+
+  /** The one frontier loop of the shortest-path family: synchronous
+    * Bellman-Ford from the distinct `sources` present in `g`, on
+    * [[Fixpoint.run]] and keyed (s, id), so one join per round serves every
+    * source. State is the reached rows only, each flagged when its d changed
+    * in the last round. Round k relaxes just the flagged rows: an unchanged
+    * row's relaxation already landed in round k−1, so d_k equals a full
+    * relaxation's for any weights. The residual is the number of rows the
+    * round improved; 0 is the exact fixpoint. `e` holds (src, dst) plus the
+    * columns `w` reads, ghost endpoints already dropped ([[bfsEdges]]).
+    *
+    * Returns the reached (s, id, d) rows and the improved-row count of every
+    * round, index 0 holding the seed bound. Each count is the next round's
+    * exact frontier size, so the frontier hint needs no action of its own;
+    * for unit weights, entry r is the number of rows at distance r. */
+  private def relax(op: String, g: PropertyGraph, e: DataFrame, sources: Seq[Long],
+      maxIter: Int, w: Column = lit(1L)): (DataFrame, Vector[Long]) = {
+    val srcs = sources.distinct
+    var sizes = Vector(srcs.size.toLong)
+    val seeds = g.vertices.filter(col("id").isin(srcs: _*))
+      .select(col("id").as("s"), col("id"), lit(0L).as("d"), lit(true).as("__ch"))
       .transform(roundBarrier)
-    // Early exit: the (reached-count, exact distance-sum) pair is a monotone
-    // state signature — reached only grows, and for a fixed reached set
-    // distances only shrink — so an unchanged pair ⇒ fixed point reached and
-    // the remaining relaxation rounds are no-ops (same trick as
-    // connectedComponentsExact; one tiny agg per round).
-    var prev: (Long, java.math.BigDecimal) = null
-    var round = 0
-    var converged = false
-    while (round < maxIter && !converged) {
-      val relaxed = e.join(dist.filter(col("d").isNotNull), e("src") === dist("id"))
-        .select(col("dst").as("id"), (col("d") + col("__w")).as("nd"))
-        .groupBy(col("id")).agg(min(col("nd")).as("nd"))
-      // each round references the previous frontier TWICE (base + messages);
-      // a LAZY localCheckpoint truncates the lineage so the plan stays
-      // constant-size instead of doubling per round (2^maxIter analysis
-      // blowup) — the materialize-per-superstep every BSP engine performs.
-      // Lazy, not eager: the convergence agg just below is this round's
-      // action and materializes the checkpoint as it runs — eager would pay
-      // a SECOND full pass per round purely to persist.
-      dist = dist.join(relaxed, Seq("id"), "left")
-        .select(col("id"), least(col("d"), col("nd")).as("d"))
-        .transform(roundBarrier)
-      val r = dist.filter(col("d").isNotNull)
-        .agg(count(lit(1)).as("n"), sum(col("d").cast("decimal(38,0)")).as("s")).head
-      val sig = (r.getLong(0), r.getDecimal(1))
-      converged = prev != null && sig._1 == prev._1 && sig._2 != null &&
-        prev._2 != null && sig._2.compareTo(prev._2) == 0
-      prev = sig
-      round += 1
+    val (dist, _) = Fixpoint.run(op, maxIter, seeds) { (st, _) =>
+      val frontier = st.filter(col("__ch"))
+        .select(col("s"), col("id").as("src"), col("d").as("__f"))
+      val offers = e.join(hint(frontier, sizes.last), Seq("src"))
+        .select(col("s"), col("dst").as("id"), (col("__f") + w).as("d"),
+          lit(null).cast("long").as("__o"))
+      st.select(col("s"), col("id"), col("d"), col("d").as("__o")).unionByName(offers)
+        .groupBy(col("s"), col("id")).agg(min(col("d")).as("d"), min(col("__o")).as("__o"))
+        .select(col("s"), col("id"), col("d"),
+          (col("__o").isNull || col("d") < col("__o")).as("__ch"))
+    } { st =>
+      sizes :+= st.filter(col("__ch")).count()
+      sizes.last
     }
-    e.unpersist(false) // final dist is checkpointed; the edge cache is done
-    dist.filter(col("d").isNotNull).select(col("id"), col("d").as("distance"))
+    (dist.select(col("s"), col("id"), col("d")), sizes)
+  }
+
+  /** The shortest-path family's edge frame, persisted for its rounds. Ghost
+    * `dst` endpoints (absent from the vertex table) are dropped here, once:
+    * the SQL oracles relax over `vg`, which never holds them. */
+  private def bfsEdges(g: PropertyGraph, e: DataFrame): DataFrame =
+    e.join(g.vertices.select(col("id").as("dst")), Seq("dst"), "left_semi")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Runs `out`'s one action, which settles every lazy barrier in its plan,
+    * then releases the edge frame those rounds read. */
+  private def releasing(e: DataFrame)(out: DataFrame): DataFrame = {
+    out.count()
+    e.unpersist(false)
+    out
   }
 
   /** Connected components by synchronous min-label propagation PLUS pointer
@@ -1538,6 +1383,36 @@ object Analytics {
     ids
   }
 
+  /** The walk family's hash draw: the ⌊h mod deg⌋ + 1-th candidate, h = the
+    * low-48-bit md5 of "salt:walk:vertex:step" — one expression, so the
+    * first- and second-order walks and their oracles cannot drift apart. */
+  private def walkPick(salt: String, walk: Column, at: Column, step: Int,
+      deg: Column): Column =
+    pmod(conv(substring(md5(concat_ws(":", lit(salt), walk.cast("string"),
+      at.cast("string"), lit(step.toString))), 21, 12), 16, 10).cast("long"), deg) + 1L
+
+  /** The walk family's loop on [[Fixpoint.run]]: up to `steps` hops from the
+    * (walk, seed) starts; `hop(frontier, step)` draws each walk's next
+    * vertex, and the count of the checkpointed hop — the round's one action —
+    * ends the loop early once every walk has stopped. `carry` columns ride
+    * the frontier but not the output; `nbr` is released on exit. Returns
+    * (walk, seed, step, id), one row per visited position. */
+  private def walkLoop(op: String, seeds: Seq[Long], walksPerSeed: Int, steps: Int,
+      nbr: DataFrame, carry: Column*)(hop: (DataFrame, Int) => DataFrame): DataFrame = {
+    val spark = nbr.sparkSession
+    import spark.implicits._
+    val starts = walkIds(seeds, walksPerSeed, op)
+    val init = starts.toDF("walk", "seed")
+      .select(Seq(col("walk"), col("seed"), lit(0L).as("step"), col("seed").as("id")) ++ carry: _*)
+      .transform(roundBarrier)
+    var out = Vector(init)
+    Fixpoint.run(op, steps, init, residual0 = starts.size, owned = Seq(nbr))(hop) { f =>
+      out :+= f
+      f.count()
+    }
+    out.map(_.select(col("walk"), col("seed"), col("step"), col("id"))).reduce(_ unionByName _)
+  }
+
   /** Deterministic hash-seeded RANDOM WALKS — the graph-sampling primitive
     * behind DeepWalk/node2vec-style embedding pipelines and GNN neighbor
     * sampling: `walksPerSeed` walks of `steps` hops from every seed, each
@@ -1560,38 +1435,17 @@ object Analytics {
       walksPerSeed: Int = 1, salt: String = ""): DataFrame = {
     require(seeds.nonEmpty, "randomWalks needs at least one seed")
     require(steps >= 0 && walksPerSeed >= 1, "randomWalks: steps >= 0, walksPerSeed >= 1")
-    val spark = g.spark
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("dst").asc)
+    val bySrc = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
     val nbr = g.edges.select(col("src"), col("dst")).distinct()
-      .withColumn("rk", row_number().over(w))
-      .withColumn("deg", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
+      .withColumn("rk", row_number().over(bySrc.orderBy(col("dst").asc)))
+      .withColumn("deg", count(lit(1)).over(bySrc))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val starts = walkIds(seeds, walksPerSeed, "randomWalks").toDF("walk", "seed")
-    var frontier = starts.select(col("walk"), col("seed"),
-      lit(0L).as("step"), col("seed").as("id")).transform(roundBarrier)
-    var out = Vector(frontier)
-    var step = 1L
-    var alive = frontier.count()
-    while (step <= steps && alive > 0) {
+    walkLoop("randomWalks", seeds, walksPerSeed, steps, nbr) { (frontier, step) =>
       // join picks the hash-ranked neighbor; sinks (no nbr row) drop out
-      val stepped = frontier
-        .join(nbr, frontier("id") === nbr("src"))
-        .withColumn("__pick", pmod(conv(substring(md5(concat_ws(":", lit(salt),
-          col("walk").cast("string"), frontier("id").cast("string"),
-          lit(step.toString))), 21, 12), 16, 10).cast("long"), col("deg")) + 1L)
-        .filter(col("rk") === col("__pick"))
-        .select(col("walk"), col("seed"), lit(step).as("step"), col("dst").as("id"))
-        .transform(roundBarrier)
-      alive = stepped.count()
-      out = out :+ stepped
-      frontier = stepped
-      step += 1L
+      frontier.join(nbr, frontier("id") === nbr("src"))
+        .filter(col("rk") === walkPick(salt, col("walk"), frontier("id"), step, col("deg")))
+        .select(col("walk"), col("seed"), lit(step.toLong).as("step"), col("dst").as("id"))
     }
-    nbr.unpersist(false)
-    out.reduce(_ unionByName _)
   }
 
   /** NON-BACKTRACKING walks — the second-order variant of [[randomWalks]]
@@ -1610,40 +1464,19 @@ object Analytics {
     require(seeds.nonEmpty, "nonBacktrackingWalks needs at least one seed")
     require(steps >= 0 && walksPerSeed >= 1,
       "nonBacktrackingWalks: steps >= 0, walksPerSeed >= 1")
-    val spark = g.spark
-    import spark.implicits._
-    val nbrBase = g.edges.select(col("src"), col("dst")).distinct()
+    val nbr = g.edges.select(col("src"), col("dst")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val starts = walkIds(seeds, walksPerSeed, "nonBacktrackingWalks").toDF("walk", "seed")
-    var frontier = starts.select(col("walk"), col("seed"),
-      lit(0L).as("step"), col("seed").as("id"), lit(null).cast("long").as("prev"))
-      .transform(roundBarrier)
-    var out = Vector(frontier.drop("prev"))
-    var step = 1L
-    var alive = frontier.count()
-    while (step <= steps && alive > 0) {
-      val cand = frontier.join(nbrBase, frontier("id") === nbrBase("src"))
+    val byWalk = org.apache.spark.sql.expressions.Window.partitionBy(col("walk"))
+    walkLoop("nonBacktrackingWalks", seeds, walksPerSeed, steps, nbr,
+        lit(null).cast("long").as("prev")) { (frontier, step) =>
+      frontier.join(nbr, frontier("id") === nbr("src"))
         .filter(col("prev").isNull || col("dst") =!= col("prev"))
-      val wRank = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("walk")).orderBy(col("dst").asc)
-      val wCnt = org.apache.spark.sql.expressions.Window.partitionBy(col("walk"))
-      val stepped = cand
-        .withColumn("__rk", row_number().over(wRank))
-        .withColumn("__deg", count(lit(1)).over(wCnt))
-        .withColumn("__pick", pmod(conv(substring(md5(concat_ws(":", lit(salt),
-          col("walk").cast("string"), frontier("id").cast("string"),
-          lit(step.toString))), 21, 12), 16, 10).cast("long"), col("__deg")) + 1L)
-        .filter(col("__rk") === col("__pick"))
-        .select(col("walk"), col("seed"), lit(step).as("step"),
+        .withColumn("__rk", row_number().over(byWalk.orderBy(col("dst").asc)))
+        .withColumn("__deg", count(lit(1)).over(byWalk))
+        .filter(col("__rk") === walkPick(salt, col("walk"), frontier("id"), step, col("__deg")))
+        .select(col("walk"), col("seed"), lit(step.toLong).as("step"),
           col("dst").as("id"), frontier("id").as("prev"))
-        .transform(roundBarrier)
-      alive = stepped.count()
-      out = out :+ stepped.drop("prev")
-      frontier = stepped
-      step += 1L
     }
-    nbrBase.unpersist(false)
-    out.reduce(_ unionByName _)
   }
 
   /** Skip-gram (center, context) co-occurrence pairs from a walk frame —

@@ -332,6 +332,22 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(row.getAs[Long]("reached") === dist.size.toLong)
   }
 
+  test("source multiplicity: a repeated BFS source counts twice, a betweenness pivot once") {
+    val s = GraphOfTheGods.ids("hercules")
+    def hist(srcs: Seq[Long]) = Analytics.hopHistogram(gods, srcs, maxIter = 6).collect()
+      .map(r => (r.getAs[Long]("source"), r.getAs[Long]("d")) -> r.getAs[Long]("n_at_d")).toMap
+    assert(hist(Seq(s, s)) === hist(Seq(s)).map { case (k, n) => k -> 2 * n })
+    def harmonic(srcs: Seq[Long]) = Analytics.harmonicCentrality(gods, srcs, maxIter = 6)
+      .collect().map(r => r.getAs[Long]("id") ->
+        (r.getAs[Long]("harmonic_x1e12"), r.getAs[Long]("reached"))).toMap
+    val once = harmonic(Seq(s))
+    assert(once.nonEmpty)
+    assert(harmonic(Seq(s, s)) === once.map { case (id, (h, n)) => id -> ((2 * h, 2 * n)) })
+    def btw(srcs: Seq[Long]) = Analytics.betweennessSampled(gods, srcs, maxIter = 6)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(btw(Seq(s, s)) === btw(Seq(s)))
+  }
+
   test("closenessCentrality: per-vertex distance sum equals summed per-source BFS") {
     val srcs = Seq(GraphOfTheGods.ids("hercules"), GraphOfTheGods.ids("jupiter"))
     val got = Analytics.closenessCentrality(gods, srcs, maxIter = 6).collect()

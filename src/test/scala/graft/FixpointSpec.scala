@@ -94,7 +94,11 @@ class FixpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     ("matching", b => Analytics.maximalMatching(chain(8), maxRounds = b),
       _ => Analytics.maximalMatching(chain(8)), 5),
     ("coloring", b => Analytics.greedyColoring(chain(12), maxRounds = b),
-      _ => Analytics.greedyColoring(chain(12)), 3)
+      _ => Analytics.greedyColoring(chain(12)), 3),
+    ("sssp", b => Analytics.shortestHopsExact(chain(16), 1L, maxIter = b),
+      _ => Analytics.shortestHopsExact(chain(16), 1L, maxIter = 20), 16),
+    ("randomWalks", b => Analytics.randomWalks(chain(8), Seq(1L), steps = b),
+      _ => Analytics.randomWalks(chain(8), Seq(1L), steps = 10), 8)
   )
 
   for ((op, budgetOne, ample, rounds) <- cases)

@@ -165,17 +165,26 @@ class Round12OpsSpec extends AnyFunSuite {
   test("betweennessContribution ≡ batched betweennessSampled per source") {
     // the per-source sweep and the batched frame share the exact recipe —
     // pin it so a precision tweak to one cannot silently diverge the other
+    def both(g: graft.data.PropertyGraph, src: Long, maxIter: Int) = {
+      val single = Analytics.betweennessContribution(g, src, maxIter)
+        .filter(col("id") =!= src)
+        .select(col("id"), round(col("delta").cast("double"), 6).as("betweenness"))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val batched = Analytics.betweennessSampled(g, Seq(src), maxIter)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      (single, batched)
+    }
     val rnd = new scala.util.Random(11)
     val es = (1 to 60).map(i => (i.toLong, rnd.nextInt(20).toLong, rnd.nextInt(20).toLong))
       .filter { case (_, a, b) => a != b }
-    val g = graphOf(0L until 20L, es)
-    val single = Analytics.betweennessContribution(g, 3L, maxIter = 6)
-      .filter(col("id") =!= 3L)
-      .select(col("id"), round(col("delta").cast("double"), 6).as("betweenness"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val batched = Analytics.betweennessSampled(g, Seq(3L), maxIter = 6)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val (single, batched) = both(graphOf(0L until 20L, es), 3L, 6)
     assert(single === batched)
+    // a ghost endpoint: 9 has no vertex row, so 0→1→9→2 ends at 1 — the
+    // oracle's BFS over the vertex table never routes a path through 9
+    val ghost = graphOf(Seq(0L, 1L, 2L), Seq((1L, 0L, 1L), (2L, 1L, 9L), (3L, 9L, 2L)))
+    assert(Analytics.shortestPathCounts(ghost, 0L, maxIter = 4).collect()
+      .map(_.getLong(0)).toSet === Set(0L, 1L))
+    assert(both(ghost, 0L, 4) === ((Map(1L -> 0.0), Map(1L -> 0.0))))
   }
 
   test("richClub: hubs-wired fixture rises; histogram counts exact") {
