@@ -976,7 +976,7 @@ object Analytics {
   private def pathLayers(e: DataFrame, dist: DataFrame,
       sizes: Vector[Long]): Vector[DataFrame] = {
     val layer0 = dist.filter(col("d") === 0L)
-      .select(col("s"), col("id"), lit(0L).as("distance"), lit(1L).as("sigma"))
+      .select(col("s"), col("id"), col("d").as("distance"), lit(1L).as("sigma"))
     (1 until sizes.size).takeWhile(sizes(_) > 0).foldLeft(Vector(layer0)) { (layers, r) =>
       val prev = layers.last.select(col("s"), col("id").as("src"), col("sigma"))
       layers :+ e.join(hint(prev, sizes(r - 1)), Seq("src"))
@@ -1137,7 +1137,7 @@ object Analytics {
   }
 
   /** Multi-source BFS on [[relax]] — directed by default, both-orientation
-    * expansion with `undirected`: one (id, source, d) row per REACHED pair,
+    * expansion with `undirected`: one (source, id, d) row per REACHED pair,
     * one edges⨝frontier join per round regardless of |sources|. A repeated
     * source counts once per repetition, as in the oracle's VALUES list. */
   private def multiSourceBfs(g: PropertyGraph, sources: Seq[Long],
@@ -1150,9 +1150,9 @@ object Analytics {
       fwd.unionAll(g.edges.select(col("dst").as("src"), col("src").as("dst"))) else fwd)
     val (dist, _) = relax(opName, g, e, sources, maxIter)
     e.unpersist(false) // dist is the last round's settled checkpoint
-    val bfs = dist.select(col("id"), col("s").as("source"), col("d"))
-    if (sources.distinct.size == sources.size) bfs
-    else bfs.join(broadcast(sources.toDF("source")), Seq("source"))
+    // `source` comes from the local list's side, keeping its non-null flag
+    broadcast(sources.toDF("source"))
+      .join(dist.select(col("id"), col("s").as("source"), col("d")), Seq("source"))
   }
 
   /** Materialize the source→v id chain for EVERY vertex of a

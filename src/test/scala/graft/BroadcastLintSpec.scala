@@ -104,7 +104,7 @@ class BroadcastLintSpec extends AnyFunSuite {
       "count-gated: the iterative kernels' one hint helper; every call passes an explicit row bound `rows` (an upper bound on the frame's rows proved at the call site) and the hint applies only when rows <= spark.graft.broadcast.maxRows, or <= spark.graft.broadcast.maxEdgeRows for edge-shaped frames"),
     Allow("olap/Analytics.scala", "ids.join(raw, Seq(\"id\"), \"left\").crossJoin(broadcast(m))",
       "one-row aggregate (max norm)"),
-    Allow("olap/Analytics.scala", "else bfs.join(broadcast(sources.toDF(\"source\")), Seq(\"source\"))",
+    Allow("olap/Analytics.scala", "broadcast(sources.toDF(\"source\"))",
       "caller-bounded: pivot/source vertex list"),
     Allow("olap/Analytics.scala", ".crossJoin(broadcast(mTot))",
       "one-row aggregate (total edge count)"),

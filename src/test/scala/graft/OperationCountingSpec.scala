@@ -16,8 +16,22 @@ import org.scalatest.funsuite.AnyFunSuite
 class OperationCountingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.session
 
-  private def jobs: Int =
-    spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
+  // job STARTS seen by a listener, read after the bus drains. The status
+  // tracker's job list is capped (spark.ui.retainedJobs) and evicts its
+  // oldest 100 entries once the shared test session passes the cap, so a
+  // delta over that list can come out negative.
+  private lazy val started = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    })
+    n
+  }
+  private def jobs: Int = {
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    started.get
+  }
   private def countJobs[T](f: => T): (T, Int) = {
     val j0 = jobs; val r = f; (r, jobs - j0)
   }
