@@ -572,12 +572,6 @@ object Analytics {
       .filter(col("rank") <= k)
   }
 
-  /** Label propagation communities. */
-  def labelPropagation(g: PropertyGraph, maxIter: Int = 10): DataFrame = {
-    val lp = org.apache.spark.graphx.lib.LabelPropagation.run(g.toGraphXStructure, maxIter).vertices
-    toDF(g.spark, lp.map { case (id, l) => (id, l) }, "id", "community")
-  }
-
   /** Deterministic synchronous label propagation — `rounds` supersteps; each
     * vertex adopts the MOST FREQUENT label among its undirected neighbors,
     * ties broken by the smallest label. GraphX's LPA leaves ties to hash-map
@@ -620,35 +614,13 @@ object Analytics {
     * sums. Damping/iteration semantics follow the reference's
     * PageRankVertexProgram (tt/olap/PageRankVertexProgram.java:31-110,
     * damping 0.85, fixed iteration count; dangling mass is dropped, as in
-    * GraphX staticPageRank). Scale: each iteration is one edge-keyed join +
-    * one map-side-combinable integer sum — the same shuffle profile as
-    * message-passing BSP; the (src,dst,outdeg) projection is cached so the 10
-    * iterations reread a 16-byte-row table, not the full edge set. */
-  def pageRankFixedPoint(g: PropertyGraph, iterations: Int = 10): DataFrame = {
-    val S = 1000000000000L // 10^12
-    val e = g.edges.select(col("src"), col("dst"))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    // both frames are reread every iteration — served from the bounded
-    // per-session LRU so repeated calls reuse them without a per-call leak
-    val ed = graft.core.PlanCache.cached(g.spark,
-      graft.core.PlanCache.key("pagerank-edges", g.edges)) {
-      e.join(deg, Seq("src")).select(col("src"), col("dst"), col("__deg"))
-    }
-    val ids = graft.core.PlanCache.cached(g.spark,
-      graft.core.PlanCache.key("pagerank-ids", g.vertices)) {
-      g.vertices.select(col("id"))
-    }
-    var ranks = ids.select(col("id"), lit(S).as("r"))
-    (1 to iterations).foreach { _ =>
-      val msgs = ed.join(ranks, ed("src") === ranks("id"))
-        .select(col("dst").as("id"), expr("r DIV __deg").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("s"))
-      ranks = ids.join(msgs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(15L * (S / 100L)) + lit(85L) * expr("coalesce(s, 0L) DIV 100")).as("r"))
-    }
-    ranks.select(col("id"), col("r").as("rank_fp"))
-  }
+    * GraphX staticPageRank). Runs on [[powerIteration]] over the cached
+    * (src, dst, outdeg) projection ([[outDegreeEdges]]). */
+  def pageRankFixedPoint(g: PropertyGraph, iterations: Int = 10): DataFrame =
+    powerIteration("pagerank", g, iterations, lit(RankScale)) { (ids, ranks) =>
+      spread(ids, outDegreeEdges(g), ranks, expr("r DIV __deg"))(
+        lit(15L * (RankScale / 100L)) + lit(85L) * expr("s DIV 100"))
+    }.select(col("id"), col("r").as("rank_fp"))
 
   /** Edge-WEIGHTED PageRank in [[pageRankFixedPoint]]'s exact fixed-point
     * integer arithmetic: rank flows along each edge proportional to its
@@ -656,12 +628,10 @@ object Analytics {
     * decomposition (r DIV Σw)·w + ((r MOD Σw)·w) DIV Σw so hub ranks times
     * heavy weights never wrap. Weights must be positive Longs (quantities,
     * counts, capped scores — the probe uses lineitem quantities); zero or
-    * negative weights fail loudly. Same shuffle profile as the unweighted
-    * fixed point: one edges⨝ranks join + a map-side-combinable integer sum
-    * per iteration over a PlanCache-served 24-byte edge projection. */
+    * negative weights fail loudly. Same rounds as the unweighted fixed point
+    * over a PlanCache-served 24-byte edge projection. */
   def pageRankWeightedFixedPoint(g: PropertyGraph, weight: Column,
       iterations: Int = 10): DataFrame = {
-    val S = 1000000000000L
     // nulls coalesce to -1 so the positivity check below catches them; once
     // validation passes, the coalesce is an identity
     val e = g.edges.select(col("src"), col("dst"),
@@ -687,21 +657,10 @@ object Analytics {
       e.join(sw.select(col("src"), col("__sw")), Seq("src"))
         .select(col("src"), col("dst"), col("__w"), col("__sw"))
     }
-    val ids = graft.core.PlanCache.cached(g.spark,
-      graft.core.PlanCache.key("pagerank-ids", g.vertices)) {
-      g.vertices.select(col("id"))
-    }
-    var ranks = ids.select(col("id"), lit(S).as("r"))
-    (1 to iterations).foreach { _ =>
-      val msgs = ed.join(ranks, ed("src") === ranks("id"))
-        .select(col("dst").as("id"),
-          expr("(r DIV __sw) * __w + ((r % __sw) * __w) DIV __sw").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("s"))
-      ranks = ids.join(msgs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(15L * (S / 100L)) + lit(85L) * expr("coalesce(s, 0L) DIV 100")).as("r"))
-    }
-    ranks.select(col("id"), col("r").as("rank_fp"))
+    powerIteration("pagerank_weighted", g, iterations, lit(RankScale)) { (ids, ranks) =>
+      spread(ids, ed, ranks, expr("(r DIV __sw) * __w + ((r % __sw) * __w) DIV __sw"))(
+        lit(15L * (RankScale / 100L)) + lit(85L) * expr("s DIV 100"))
+    }.select(col("id"), col("r").as("rank_fp"))
   }
 
   /** Katz centrality in [[pageRankFixedPoint]]'s exact fixed-point integer
@@ -712,18 +671,13 @@ object Analytics {
     * mass. Converges iff α · max-in-degree < 1; the cache-miss validation
     * enforces exactly that (with the BigInt bound check that keeps every
     * intermediate under 2⁶³), so a graph too dense for the chosen α fails
-    * loudly instead of silently wrapping.
-    *
-    * Scale shape: identical to the PageRank fixed point — one edges⨝ranks
-    * equi-join plus a map-side-combinable integer sum per iteration over a
-    * PlanCache-served 16-byte edge projection; α applies ONCE post-sum
+    * loudly instead of silently wrapping. α applies ONCE post-sum
     * (⌊αnum·Σ/αden⌋), one floor per vertex per round, mirrored exactly by
     * the oracle. */
   def katzFixedPoint(g: PropertyGraph, alphaNum: Long = 1L,
       alphaDen: Long = 10000L, iterations: Int = 8): DataFrame = {
     require(alphaNum > 0 && alphaDen > alphaNum,
       "katzFixedPoint: need 0 < alpha = alphaNum/alphaDen < 1")
-    val S = 1000000000000L
     // alpha participates in the cache key: the divergence/overflow guard
     // below depends on it, so a cached projection validated for one alpha
     // must not silently serve a looser one
@@ -740,26 +694,15 @@ object Analytics {
         require(alphaNum * d < alphaDen,
           s"katzFixedPoint: alpha=$alphaNum/$alphaDen × max-in-degree=$d ≥ 1 — " +
             "the Katz series diverges; shrink alpha")
-        val bound = (BigInt(S) * alphaDen) / (BigInt(alphaDen) - BigInt(alphaNum) * d)
+        val bound = (BigInt(RankScale) * alphaDen) / (BigInt(alphaDen) - BigInt(alphaNum) * d)
         require(BigInt(alphaNum) * d * bound < BigInt(Long.MaxValue),
           s"katzFixedPoint: αnum·D·bound=${alphaNum * d}·$bound would overflow — shrink alpha")
       }
       ed
     }
-    val ids = graft.core.PlanCache.cached(g.spark,
-      graft.core.PlanCache.key("pagerank-ids", g.vertices)) {
-      g.vertices.select(col("id"))
-    }
-    var ranks = ids.select(col("id"), lit(S).as("r"))
-    (1 to iterations).foreach { _ =>
-      val msgs = e.join(ranks, e("src") === ranks("id"))
-        .select(col("dst").as("id"), col("r").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("s"))
-      ranks = ids.join(msgs, Seq("id"), "left")
-        .select(col("id"),
-          (lit(S) + expr(s"($alphaNum * coalesce(s, 0L)) DIV $alphaDen")).as("r"))
-    }
-    ranks.select(col("id"), col("r").as("katz_fp"))
+    powerIteration("katz", g, iterations, lit(RankScale)) { (ids, ranks) =>
+      spread(ids, e, ranks, col("r"))(lit(RankScale) + expr(s"($alphaNum * s) DIV $alphaDen"))
+    }.select(col("id"), col("r").as("katz_fp"))
   }
 
   /** HITS hubs-and-authorities in exact fixed-point integer arithmetic
@@ -769,40 +712,24 @@ object Analytics {
     * renormalized to a 10⁶ scale by integer division by the round's maximum
     * (floating-point L2 normalization is summation-order dependent; the
     * integer max-norm is bit-exact on any engine, so the result is
-    * hash-oracle-checkable). Scale shape: per iteration two edge-keyed
-    * joins + two map-side-combinable integer sums + a 1-row broadcast max —
-    * the message-passing profile — over a cached 16-byte edge projection;
-    * lazy checkpoints truncate the per-round lineage. */
+    * hash-oracle-checkable). One [[powerIteration]] round is both half-steps,
+    * each a [[spread]] with the 1-row maximum broadcast, each barriered. */
   def hitsFixedPoint(g: PropertyGraph, iterations: Int = 4): DataFrame = {
     val S = 1000000L
     val e = graft.core.PlanCache.cached(g.spark,
       graft.core.PlanCache.key("hits-edges", g.edges)) {
       g.edges.select(col("src"), col("dst"))
     }
-    val ids = graft.core.PlanCache.cached(g.spark,
-      graft.core.PlanCache.key("pagerank-ids", g.vertices)) {
-      g.vertices.select(col("id"))
+    val back = e.select(col("dst").as("src"), col("src").as("dst"))
+    val normalized = when(col("__m").isNull || col("__m") === 0L, lit(0L))
+      .otherwise(expr(s"s * BIGINT($S) DIV __m"))
+    var hub = rankIds(g).select(col("id"), lit(S).as("r"))
+    val auth = powerIteration("hits", g, iterations, lit(S)) { (ids, auth) =>
+      hub = roundBarrier(spread(ids, back, auth, col("r"), byMax = true)(normalized))
+      spread(ids, e, hub, col("r"), byMax = true)(normalized)
     }
-    def normalized(raw: DataFrame, valCol: String, outCol: String): DataFrame = {
-      val m = raw.agg(max(col(valCol)).as("__m"))
-      ids.join(raw, Seq("id"), "left").crossJoin(broadcast(m))
-        .select(col("id"),
-          when(col("__m").isNull || col("__m") === 0L, lit(0L))
-            .otherwise(expr(s"COALESCE($valCol, BIGINT(0)) * BIGINT(${S}) DIV __m"))
-            .as(outCol))
-        .transform(roundBarrier)
-    }
-    var auth = ids.select(col("id"), lit(S).as("a"))
-    var hub = ids.select(col("id"), lit(S).as("h"))
-    (1 to iterations).foreach { _ =>
-      val hraw = e.join(auth, e("dst") === auth("id"))
-        .groupBy(e("src").as("id")).agg(sum(col("a")).as("hr"))
-      hub = normalized(hraw, "hr", "h")
-      val araw = e.join(hub, e("src") === hub("id"))
-        .groupBy(e("dst").as("id")).agg(sum(col("h")).as("ar"))
-      auth = normalized(araw, "ar", "a")
-    }
-    hub.join(auth, Seq("id")).select(col("id"), col("h").as("hub"), col("a").as("auth"))
+    hub.select(col("id"), col("r").as("hub"))
+      .join(auth.select(col("id"), col("r").as("auth")), Seq("id"))
   }
 
   /** Personalized PageRank in the same exact fixed-point integer arithmetic
@@ -816,35 +743,60 @@ object Analytics {
     * across sources — deterministic and scale-free; divide by |sources|
     * downstream if a distribution is needed). Only vertices with non-zero
     * rank return — PPR mass is sparse, so at 100 TB the result is a small
-    * frame even when the graph is not. Identical shuffle profile to
-    * pageRankFixedPoint: one edge-keyed join + one map-side-combinable
-    * integer sum per iteration over a cached 16-byte-row projection. */
+    * frame even when the graph is not. Same rounds as pageRankFixedPoint. */
   def personalizedPageRankFixedPoint(g: PropertyGraph, sources: Seq[Long],
       iterations: Int = 10): DataFrame = {
     require(sources.nonEmpty, "personalized PageRank needs at least one source")
-    val S = 1000000000000L // 10^12
-    val e = g.edges.select(col("src"), col("dst"))
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
-    val ed = graft.core.PlanCache.cached(g.spark,
-      graft.core.PlanCache.key("pagerank-edges", g.edges)) {
-      e.join(deg, Seq("src")).select(col("src"), col("dst"), col("__deg"))
-    }
-    val ids = graft.core.PlanCache.cached(g.spark,
-      graft.core.PlanCache.key("pagerank-ids", g.vertices)) {
+    val isSrc = col("id").isin(sources: _*)
+    powerIteration("ppr", g, iterations, when(isSrc, lit(RankScale)).otherwise(lit(0L))) {
+      (ids, ranks) =>
+        spread(ids, outDegreeEdges(g), ranks, expr("r DIV __deg"))(
+          when(isSrc, lit(15L * (RankScale / 100L))).otherwise(lit(0L)) +
+            lit(85L) * expr("s DIV 100"))
+    }.filter(col("r") > 0L).select(col("id"), col("r").as("rank_ppr"))
+  }
+
+  /** The rank family's unit mass: rank 1.0 = 10¹². */
+  private val RankScale = 1000000000000L
+
+  /** The rank family's vertex-id frame, one PlanCache entry per vertex table. */
+  private def rankIds(g: PropertyGraph): DataFrame =
+    graft.core.PlanCache.cached(g.spark, graft.core.PlanCache.key("pagerank-ids", g.vertices)) {
       g.vertices.select(col("id"))
     }
-    val isSrc = col("id").isin(sources: _*)
-    var ranks = ids.select(col("id"), when(isSrc, lit(S)).otherwise(lit(0L)).as("r"))
-    (1 to iterations).foreach { _ =>
-      val msgs = ed.join(ranks, ed("src") === ranks("id"))
-        .select(col("dst").as("id"), expr("r DIV __deg").as("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("s"))
-      ranks = ids.join(msgs, Seq("id"), "left")
-        .select(col("id"),
-          (when(isSrc, lit(15L * (S / 100L))).otherwise(lit(0L)) +
-            lit(85L) * expr("coalesce(s, 0L) DIV 100")).as("r"))
+
+  /** (src, dst, __deg) with `__deg` the out-degree of `src`: the edge frame
+    * of PageRank and personalized PageRank, one PlanCache entry per edge table. */
+  private def outDegreeEdges(g: PropertyGraph): DataFrame =
+    graft.core.PlanCache.cached(g.spark, graft.core.PlanCache.key("pagerank-edges", g.edges)) {
+      val e = g.edges.select(col("src"), col("dst"))
+      e.join(e.groupBy(col("src")).agg(count(lit(1)).as("__deg")), Seq("src"))
+        .select(col("src"), col("dst"), col("__deg"))
     }
-    ranks.filter(col("r") > 0L).select(col("id"), col("r").as("rank_ppr"))
+
+  /** The one round loop of the rank family: `rounds` power-iteration rounds
+    * from (id, r = `init`) on [[Fixpoint.fixedRounds]]; `step(ids, ranks)`
+    * builds the next (id, r) frame, usually one [[spread]]. */
+  private def powerIteration(op: String, g: PropertyGraph, rounds: Int, init: Column)(
+      step: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val ids = rankIds(g)
+    Fixpoint.fixedRounds(op, rounds, ids.select(col("id"), init.as("r"))) { (ranks, _) =>
+      step(ids, ranks)
+    }
+  }
+
+  /** One power-iteration step: each edge of `edges` (src, dst, ...) carries
+    * `contrib` — over its columns and the rank `r` of its src — to its dst;
+    * the per-dst integer sum is `s`, 0 where nothing arrives, and every id's
+    * new rank is `update`. With `byMax`, `update` also reads the step's
+    * largest sum as `__m` (a 1-row broadcast; null when nothing arrives). */
+  private def spread(ids: DataFrame, edges: DataFrame, ranks: DataFrame, contrib: Column,
+      byMax: Boolean = false)(update: Column): DataFrame = {
+    val sums = edges.join(ranks, edges("src") === ranks("id"))
+      .groupBy(col("dst").as("id")).agg(sum(contrib).as("s"))
+    val all = ids.join(sums, Seq("id"), "left").withColumn("s", coalesce(col("s"), lit(0L)))
+    (if (byMax) all.crossJoin(broadcast(sums.agg(max(col("s")).as("__m")))) else all)
+      .select(col("id"), update.as("r"))
   }
 
   /** Synchronous Bellman-Ford hop-distance from `source` — `maxIter`
@@ -1162,20 +1114,21 @@ object Analytics {
     * the tree is the bounded artifact (3 longs/vertex); this explicit
     * materialization is O(V · path length) output by construction and meant
     * for diameter-bounded trees or an id-restricted subset — filter the
-    * tree first to materialize selected targets only. */
+    * tree first to materialize selected targets only. The pred pointers are
+    * persisted for the rounds, which gives the join their real size. */
   def shortestPaths(tree: DataFrame, maxSteps: Int = 8): DataFrame = {
-    var cur = tree.select(col("id"), col("distance"),
+    val preds = tree.select(col("id").as("__pid"), col("pred").as("__pp"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val start = tree.select(col("id"), col("distance"),
       col("pred").as("__p"), col("id").cast("string").as("path"))
-    for (_ <- 1 to maxSteps) {
-      cur = cur.join(tree.select(col("id").as("__pid"), col("pred").as("__pp")),
-          col("__p") === col("__pid"), "left")
+    Fixpoint.fixedRounds("shortest_paths", maxSteps, start, owned = Seq(preds)) { (cur, _) =>
+      cur.join(preds, col("__p") === col("__pid"), "left")
         .select(col("id"), col("distance"),
           col("__pp").as("__p"),
           when(col("__pid").isNotNull,
             concat(col("__pid").cast("string"), lit(","), col("path")))
             .otherwise(col("path")).as("path"))
-    }
-    cur.select(col("id"), col("distance"), col("path"))
+    }.select(col("id"), col("distance"), col("path"))
   }
 
   /** Weighted single-source shortest distance in exact integer arithmetic —
@@ -2376,21 +2329,21 @@ object Analytics {
     z2.bitwiseXOR(shiftleft(z2, 17))
   }
 
+  /** Barrier-call counter for the conf-gated periodic driver GC below —
+    * JVM-global (GC is), so interleaved kernels share the cadence. */
+  private val barrierCalls = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Per-round lineage barrier for the iterative kernels
-    * (`spark.graft.iter.barrier` = `lazy` | `eager` | `reliable`; default
-    * `lazy` = localCheckpoint materialized by the round's one action — the
-    * cheapest form and the historical pattern; `reliable` checkpoints to a
-    * dir auto-set under `spark.graft.checkpointDir` for executor-loss-safe
-    * cluster runs). EVERY mode then STRIPS the leaf statistics Spark 4's
+    * (`spark.graft.iter.barrier` = `lazy` | `reliable`; default `lazy` =
+    * localCheckpoint materialized by the round's one action — the cheapest
+    * form and the historical pattern; `reliable` checkpoints to a dir
+    * auto-set under `spark.graft.checkpointDir` for executor-loss-safe
+    * cluster runs). BOTH modes then STRIP the leaf statistics Spark 4's
     * checkpoint carries onto the new leaf — without the strip, the carried
     * sizeInBytes estimate compounds geometrically across rounds and
     * driver-side BigInteger stats arithmetic dominates wall time from
     * ~round 12, executors idle (found by the round-14 diameter
     * measurement; full analysis in [[org.apache.spark.sql.GraftSqlBridge]]). */
-  /** Barrier-call counter for the conf-gated periodic driver GC below —
-    * JVM-global (GC is), so interleaved kernels share the cadence. */
-  private val barrierCalls = new java.util.concurrent.atomic.AtomicLong(0L)
-
   private[graft] def roundBarrier(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     // SESSION PROPAGATION — SparkPlan nodes capture
@@ -2426,7 +2379,6 @@ object Analytics {
     val gcEvery = spark.conf.get("spark.graft.iter.gcEveryRounds", "0").toInt
     if (gcEvery > 0 && barrierCalls.incrementAndGet() % gcEvery == 0) System.gc()
     val ck = spark.conf.get("spark.graft.iter.barrier", "lazy") match {
-      case "eager" => df.localCheckpoint(true)
       case "reliable" =>
         if (spark.sparkContext.getCheckpointDir.isEmpty) {
           val dir = spark.conf.get("spark.graft.checkpointDir",
@@ -2572,7 +2524,7 @@ object Analytics {
     * use `spark.graft.broadcast.maxEdgeRows` (default maxRows/4), which
     * keeps the worst-case concurrent edge-broadcast bytes at or under one
     * vertex-cap relation. */
-  private def hint(df: DataFrame, rows: Long, edgeShaped: Boolean = false): DataFrame = {
+  private[olap] def hint(df: DataFrame, rows: Long, edgeShaped: Boolean = false): DataFrame = {
     val conf = df.sparkSession.conf
     val maxRows = conf.get("spark.graft.broadcast.maxRows", "10000000").toLong
     val cap = if (edgeShaped) conf.get("spark.graft.broadcast.maxEdgeRows",

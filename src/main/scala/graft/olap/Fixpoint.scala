@@ -1,5 +1,9 @@
 package graft.olap
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** How a budgeted fixpoint loop ended. `rounds` counts the rounds that ran;
@@ -99,23 +103,42 @@ private[graft] object Fixpoint {
   /** Conf-gated per-round telemetry: with `spark.graft.bench.roundLog=true`
     * every round prints one stderr line
     * `[graft-rounds] op=<op> round=<n> wall_ms=<t> jobs=<j> rdds=<r>` — wall
-    * time and Spark jobs since the previous tick, and the count of persisted
-    * RDDs (a monotone ramp means retired round frames are not released).
-    * Off by default: one conf read per loop, zero per-round cost. */
+    * time and Spark jobs started since the previous tick, and the count of
+    * persisted RDDs (a monotone ramp means retired round frames are not
+    * released). Off by default: one conf read per loop, zero per-round cost. */
   private final class RoundLog(spark: SparkSession, op: String) {
     private val enabled =
       spark.conf.get("spark.graft.bench.roundLog", "false").toBoolean
     private var t0 = System.nanoTime()
-    private def jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    private var j0 = if (enabled) jobs else 0
+    private var j0 = if (enabled) jobsStarted(spark.sparkContext) else 0L
     def tick(round: Int): Unit = if (enabled) {
       val now = System.nanoTime()
-      val j1 = jobs
+      val j1 = jobsStarted(spark.sparkContext)
       System.err.println(
         f"[graft-rounds] op=$op round=$round wall_ms=${(now - t0) / 1e6}%.1f jobs=${j1 - j0} " +
           s"rdds=${spark.sparkContext.getPersistentRDDs.size}")
       t0 = now
       j0 = j1
     }
+  }
+
+  private val jobStarts = new java.util.WeakHashMap[SparkContext, AtomicLong]()
+
+  /** Spark jobs started on `sc` since this first ran for it, counted by a
+    * listener. The status tracker's job list is no counter: Spark keeps only
+    * `spark.ui.retainedJobs` (1000) entries and trims the oldest 100 at a
+    * time, so past the cap its length stalls or drops. */
+  private def jobsStarted(sc: SparkContext): Long = {
+    val n = jobStarts.synchronized {
+      jobStarts.computeIfAbsent(sc, { _ =>
+        val n = new AtomicLong
+        sc.addSparkListener(new SparkListener {
+          override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
+        })
+        n
+      })
+    }
+    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(sc)
+    n.get
   }
 }

@@ -46,9 +46,14 @@ object GraphOps {
     partial.groupBy(col("__key")).agg(mergeAggs.head, mergeAggs.tail: _*)
   }
 
+  /** Salt count of the supernode routes (`VertexCentricQuery.edgeCount` and
+    * `propertyCount`, `Traversal.groupCount`) and [[saltedDegree]]'s default. */
+  private[graft] val SupernodeSalts = 64
+
   /** Salted degree count (the common case): exact per-vertex edge count with
     * bounded reducer load regardless of skew. */
-  def saltedDegree(g: PropertyGraph, direction: String = "out", salts: Int = 64): DataFrame = {
+  def saltedDegree(g: PropertyGraph, direction: String = "out",
+      salts: Int = SupernodeSalts): DataFrame = {
     val key = if (direction == "out") col("src") else col("dst")
     saltedAggregate(g.edges, key, salts,
       partialAggs = Seq(count(lit(1)).as("__c")),
@@ -117,10 +122,13 @@ object GraphOps {
     * PropertyGraph of the reached vertices plus exactly the edges with BOTH
     * endpoints reached.
     *
-    * Scale: k rounds of one edges⨝frontier semi-join each (the frontier is
-    * ids-only and broadcasts while small); the final induction is two
-    * semi-joins against the reached-id set. The reached set is checkpointed
-    * per round so the plan stays constant-size; unreachable ghosts never
+    * Scale: at most k rounds on [[Fixpoint.run]], each one edges⨝frontier
+    * semi-join. State is the reached ids, each flagged when the last round
+    * found it; a round expands only that frontier (re-probing the whole
+    * reached set would redo O(k·|ego|·deg) join work), and the loop stops
+    * early once a round finds nothing new. The frontier count is the
+    * residual and bounds the next round's broadcast. The final induction is
+    * two semi-joins against the reached-id set; unreachable ghosts never
     * enter (induction is against the VERTEX table). */
   def egoNetwork(g: PropertyGraph, seeds: Seq[Long], k: Int): PropertyGraph = {
     require(seeds.nonEmpty, "egoNetwork needs at least one seed")
@@ -129,25 +137,22 @@ object GraphOps {
     import spark.implicits._
     val und = g.edges.select(col("src").as("a"), col("dst").as("b"))
       .unionAll(g.edges.select(col("dst").as("a"), col("src").as("b")))
-    // expand only the DELTA frontier each round (re-probing the whole
-    // reached set would redo O(k·|ego|·deg) join work), and stop early once
-    // a round discovers nothing new
-    var reached = seeds.distinct.toDF("id").localCheckpoint(false)
-    var frontier = reached
-    var round = 0
     var frontierN = seeds.distinct.size.toLong
-    while (round < k && frontierN > 0) {
-      val next = und.join(frontier.select(col("id").as("__f")),
-          col("a") === col("__f"), "left_semi")
+    var reachedN = frontierN
+    val seeded = seeds.distinct.toDF("id").select(col("id"), lit(true).as("__new"))
+    val (reached, _) = Fixpoint.run("ego", k, seeded, frontierN) { (st, _) =>
+      val frontier = st.filter(col("__new")).select(col("id").as("__f"))
+      val next = und.join(Analytics.hint(frontier, frontierN), col("a") === col("__f"), "left_semi")
         .select(col("b").as("id")).distinct()
-        .join(reached, Seq("id"), "left_anti")
-        .localCheckpoint(false)
-      frontierN = next.count()
-      reached = reached.unionAll(next).localCheckpoint(false)
-      frontier = next
-      round += 1
+        .join(Analytics.hint(st.select(col("id")), reachedN), Seq("id"), "left_anti")
+      st.select(col("id"), lit(false).as("__new"))
+        .unionByName(next.select(col("id"), lit(true).as("__new")))
+    } { st =>
+      frontierN = st.filter(col("__new")).count()
+      reachedN += frontierN
+      frontierN
     }
-    val v = g.vertices.join(reached.select(col("id").as("__rid")),
+    val v = g.vertices.join(Analytics.hint(reached.select(col("id").as("__rid")), reachedN),
       col("id") === col("__rid"), "left_semi")
     // induct against the SURVIVING vertex set, not the raw reached ids — a
     // dangling (ghost) endpoint inside k hops must not smuggle its edge in

@@ -831,20 +831,14 @@ object TextAnalysis {
     // MEMORY_AND_DISK) and PlanCache's LRU is count-bounded (16 entries),
     // not size-bounded — a few large-corpus calls can pin substantial
     // block-manager storage for the session even after the call returns.
-    // `graft.dsir.cache=false` opts out: the occurrence frame then
-    // evaluates twice (model aggregate + scoring join — two explodes, the
-    // pre-r16 cost) with ZERO storage pinned. Default stays cached: the
-    // recompute costs a full corpus scan, the storage is spill-backed.
-    val useCache = docs.sparkSession.conf
-      .get("graft.dsir.cache", "true").toBoolean
-    def buildPerDoc =
+    // The storage is spill-backed; the recompute it saves is a full corpus
+    // scan.
+    val perDoc = graft.core.PlanCache.cached(docs.sparkSession,
+      graft.core.PlanCache.key("dsir-docbuckets", docs,
+        idCol, textCol, buckets, salt, targetPred.toString)) {
       dsirFeatures(docs, Seq(col(idCol), targetPred.as("__t")), buckets, textCol, salt)
         .groupBy(col(idCol), col("__t"), col("b")).agg(count(lit(1)).as("__n"))
-    val perDoc =
-      if (!useCache) buildPerDoc
-      else graft.core.PlanCache.cached(docs.sparkSession,
-        graft.core.PlanCache.key("dsir-docbuckets", docs,
-          idCol, textCol, buckets, salt, targetPred.toString))(buildPerDoc)
+    }
     val rawc = perDoc.groupBy(col("b")).agg(sum(col("__n")).as("cr"),
       sum(when(col("__t"), col("__n")).otherwise(0L)).as("ct"))
     val tot = rawc.agg(sum(col("cr")).as("totr"), sum(col("ct")).as("tott"))

@@ -193,9 +193,6 @@ final case class VertexCentricQuery(
     part.nonEmpty && frontierLabels.forall(_.exists(part.contains))
   }
 
-  private def saltCount: Int =
-    graph.spark.conf.get("spark.graft.supernode.salts", "64").toInt
-
   /** Per-vertex edge count; limit caps the count, as in the reference
     * (tc/core/TitanVertexQuery.java edgeCount).
     *
@@ -209,10 +206,11 @@ final case class VertexCentricQuery(
     * anchored on provably non-partitioned labels plans the plain single
     * aggregate. Windowed queries (orderBy/limit) already hash by vid for the
     * window, so the plain aggregation adds no second skew point there. Salt
-    * count comes from `spark.graft.supernode.salts` (default 64). */
+    * count is [[graft.olap.GraphOps.SupernodeSalts]]. */
   def edgeCount(): DataFrame =
     if (mayHitPartitioned && orders.isEmpty && limitN.isEmpty) {
-      graft.olap.GraphOps.saltedAggregate(edges(), col("vid"), saltCount,
+      graft.olap.GraphOps.saltedAggregate(edges(), col("vid"),
+        graft.olap.GraphOps.SupernodeSalts,
         partialAggs = Seq(count(lit(1)).as("__c")),
         mergeAggs = Seq(sum(col("__c")).as("count")))
         .withColumnRenamed("__key", "vid")
@@ -244,7 +242,8 @@ final case class VertexCentricQuery(
     * salted two-phase result is identical). */
   def propertyCount(keys: String*): DataFrame =
     if (mayHitPartitioned) {
-      graft.olap.GraphOps.saltedAggregate(properties(keys: _*), col("vid"), saltCount,
+      graft.olap.GraphOps.saltedAggregate(properties(keys: _*), col("vid"),
+        graft.olap.GraphOps.SupernodeSalts,
         partialAggs = Seq(count(lit(1)).as("__c")),
         mergeAggs = Seq(sum(col("__c")).as("count")))
         .withColumnRenamed("__key", "vid")

@@ -1200,8 +1200,7 @@ final case class Traversal(
   def groupCount(key: String): DataFrame = {
     val part = graph.schema.partitionedLabels
     if (part.nonEmpty && frontierLabels.forall(_.exists(part.contains))) {
-      val salts = graph.spark.conf.get("spark.graft.supernode.salts", "64").toInt
-      graft.olap.GraphOps.saltedAggregate(df, col(key), salts,
+      graft.olap.GraphOps.saltedAggregate(df, col(key), graft.olap.GraphOps.SupernodeSalts,
         partialAggs = Seq(F.count(lit(1)).as("__c")),
         mergeAggs = Seq(F.sum(col("__c")).as("count")))
         .withColumnRenamed("__key", key)

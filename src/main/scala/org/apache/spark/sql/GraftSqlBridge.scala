@@ -49,4 +49,9 @@ object GraftSqlBridge {
     }
     spark.internalCreateDataFrame(rdd, ds.schema)
   }
+
+  /** Blocks until every event posted to `sc`'s listener bus so far has been
+    * delivered, so a listener's counts cover every job already started. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

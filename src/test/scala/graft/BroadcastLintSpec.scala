@@ -102,7 +102,7 @@ class BroadcastLintSpec extends AnyFunSuite {
       "category-cardinality: min-degree histogram, one row per distinct degree"),
     Allow("olap/Analytics.scala", "if (rows <= cap) broadcast(df) else df",
       "count-gated: the iterative kernels' one hint helper; every call passes an explicit row bound `rows` (an upper bound on the frame's rows proved at the call site) and the hint applies only when rows <= spark.graft.broadcast.maxRows, or <= spark.graft.broadcast.maxEdgeRows for edge-shaped frames"),
-    Allow("olap/Analytics.scala", "ids.join(raw, Seq(\"id\"), \"left\").crossJoin(broadcast(m))",
+    Allow("olap/Analytics.scala", "all.crossJoin(broadcast(sums.agg(max(col(\"s\")).as(\"__m\"))))",
       "one-row aggregate (max norm)"),
     Allow("olap/Analytics.scala", "broadcast(sources.toDF(\"source\"))",
       "caller-bounded: pivot/source vertex list"),

@@ -2,8 +2,9 @@ package graft
 
 import graft.core.GraphSchema
 import graft.data.PropertyGraph
-import graft.olap.{Analytics, BudgetExhausted, Converged, Fixpoint, Outcome}
+import graft.olap.{Analytics, BudgetExhausted, Converged, Fixpoint, GraphOps, Outcome}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
@@ -49,13 +50,19 @@ class FixpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     spark.sparkContext.getPersistentRDDs.size
   }
 
+  /** [[settle]] until two reads agree: frames dropped just before are gone. */
+  private def steady(): Int = {
+    var before = settle()
+    var again = settle()
+    while (again != before) { before = again; again = settle() }
+    before
+  }
+
   /** The persisted-RDD count returns to its level before `body` once the
     * result is dropped: every setup frame is unpersisted and no retired
     * round checkpoint stays strongly reachable. */
   private def assertReleases(name: String)(body: => Unit): Unit = {
-    var before = settle()
-    var again = settle()
-    while (again != before) { before = again; again = settle() }
+    val before = steady()
     body
     var after = settle()
     var tries = 0
@@ -65,7 +72,7 @@ class FixpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   /** Persisted RDDs still reachable while the result of `body` is held. */
   private def heldBy(body: => DataFrame): Int = {
-    val before = settle()
+    val before = steady()
     val df = body
     df.collect()
     val held = settle() - before
@@ -98,7 +105,9 @@ class FixpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     ("sssp", b => Analytics.shortestHopsExact(chain(16), 1L, maxIter = b),
       _ => Analytics.shortestHopsExact(chain(16), 1L, maxIter = 20), 16),
     ("randomWalks", b => Analytics.randomWalks(chain(8), Seq(1L), steps = b),
-      _ => Analytics.randomWalks(chain(8), Seq(1L), steps = 10), 8)
+      _ => Analytics.randomWalks(chain(8), Seq(1L), steps = 10), 8),
+    ("ego", b => GraphOps.egoNetwork(chain(8), Seq(1L), k = b).vertices,
+      _ => GraphOps.egoNetwork(chain(8), Seq(1L), k = 20).vertices, 8)
   )
 
   for ((op, budgetOne, ample, rounds) <- cases)
@@ -116,6 +125,10 @@ class FixpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // pinned every round's checkpoint — retention grew with the round count
     for ((op, budgetOne, ample, _) <- cases if Set("cc", "kcore", "coreness", "coloring")(op))
       assert(heldBy(ample(0)) === heldBy(budgetOne(1)), s"$op retention grows with rounds")
+    val g = chain(12)
+    Analytics.pageRankFixedPoint(g, 1).collect() // its PlanCache frames outlive any call
+    assert(heldBy(Analytics.pageRankFixedPoint(g, 10)) ===
+      heldBy(Analytics.pageRankFixedPoint(g, 1)), "pagerank retention grows with rounds")
   }
 
   test("scc: the trim, color and backward loops each report an outcome on a 20-cycle") {
@@ -145,12 +158,42 @@ class FixpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally spark.conf.unset("spark.graft.msf.driverMergeMaxRows")
   }
 
-  test("labelPropagationExact: a fixed round count is semantics, never exhaustion") {
-    assertReleases("lpa") {
-      for (r <- Seq(1, 3))
-        assert(outcome("lpa")(Analytics.labelPropagationExact(chain(16), rounds = r)) ===
-          Converged(r))
+  test("fixed-round kernels: a fixed round count is semantics, never exhaustion") {
+    val g = chain(16)
+    val kernels: Seq[(String, Int => DataFrame)] = Seq(
+      "lpa" -> (r => Analytics.labelPropagationExact(g, rounds = r)),
+      "pagerank" -> (r => Analytics.pageRankFixedPoint(g, iterations = r)),
+      "pagerank_weighted" -> (r => Analytics.pageRankWeightedFixedPoint(g, lit(1L), iterations = r)),
+      "katz" -> (r => Analytics.katzFixedPoint(g, iterations = r)),
+      "ppr" -> (r => Analytics.personalizedPageRankFixedPoint(g, Seq(1L), iterations = r)),
+      "hits" -> (r => Analytics.hitsFixedPoint(g, iterations = r)),
+      "shortest_paths" -> (r => Analytics.shortestPaths(Analytics.shortestPathTree(g, 1L), r)))
+    // the rank family's PlanCache frames outlive any call: build them first
+    kernels.foreach { case (_, kernel) => kernel(1).collect() }
+    for ((op, kernel) <- kernels) assertReleases(op) {
+      for (r <- Seq(1, 3)) assert(outcome(op)(kernel(r)) === Converged(r), op)
     }
+  }
+
+  test("RoundLog counts a round's Spark jobs however many the session has run") {
+    // the status tracker keeps spark.ui.retainedJobs (1000) jobs and trims
+    // the oldest 100 at a time, so its list length stops counting past 1000
+    val sc = spark.sparkContext
+    def job(): Unit = sc.parallelize(Seq(1), 1).count()
+    (1 to 1100).foreach(_ => job())
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    spark.conf.set("spark.graft.bench.roundLog", "true")
+    System.setErr(new java.io.PrintStream(err, true))
+    try Fixpoint.fixedRounds("jobcount", 1, spark.range(1).toDF()) { (st, _) =>
+      (1 to 150).foreach(_ => job())
+      st
+    } finally {
+      System.setErr(stderr)
+      spark.conf.unset("spark.graft.bench.roundLog")
+    }
+    val line = err.toString.linesIterator.find(_.startsWith("[graft-rounds] op=jobcount"))
+    assert(line.exists(_.contains(" jobs=150 ")), s"round log: $line")
   }
 
   test("*Converged flags agree with the outcome; exhaustion carries a residual") {
