@@ -124,15 +124,6 @@ object Analytics {
           expr("2 * coalesce(ek, 0L) * 1000000L DIV (nk * (nk - 1))")).as("phi_x1e6"))
   }
 
-  /** PageRank with damping 0.85 — reference tt/olap/PageRankVertexProgram.java:31-110
-    * (damping constant :43, iterate until maxIter). GraphX staticPageRank:
-    * same fixed-point, message-combined. Returns (id, rank). */
-  def pageRank(g: PropertyGraph, iterations: Int = 20, damping: Double = 0.85): DataFrame = {
-    val gx = g.toGraphXStructure.partitionBy(PartitionStrategy.EdgePartition2D)
-    val ranks = gx.staticPageRank(iterations, resetProb = 1.0 - damping).vertices
-    toDF(g.spark, ranks.map { case (id, r) => (id, r) }, "id", "rank")
-  }
-
   /** Weighted single-source shortest distance — reference
     * tt/olap/ShortestDistanceVertexProgram.java:26-146 with its min-combiner
     * (ShortestDistanceMessageCombiner). GraphX Pregel with min merge. */
@@ -147,12 +138,6 @@ object Analytics {
         else Iterator.empty,
       mergeMsg = math.min)
     toDF(g.spark, res.vertices.filter(_._2 < Double.PositiveInfinity), "id", "distance")
-  }
-
-  /** Connected components (undirected). */
-  def connectedComponents(g: PropertyGraph): DataFrame = {
-    val cc = g.toGraphXStructure.connectedComponents().vertices
-    toDF(g.spark, cc.map { case (id, c) => (id, c) }, "id", "component")
   }
 
   /** Per-vertex triangle count (canonical orientation dedups). */

@@ -128,7 +128,7 @@ private[graft] object Fixpoint {
     * listener. The status tracker's job list is no counter: Spark keeps only
     * `spark.ui.retainedJobs` (1000) entries and trims the oldest 100 at a
     * time, so past the cap its length stalls or drops. */
-  private def jobsStarted(sc: SparkContext): Long = {
+  private[graft] def jobsStarted(sc: SparkContext): Long = {
     val n = jobStarts.synchronized {
       jobStarts.computeIfAbsent(sc, { _ =>
         val n = new AtomicLong

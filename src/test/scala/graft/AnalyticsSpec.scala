@@ -18,7 +18,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("connected components: one component covers all 12 gods") {
-    val cc = Analytics.connectedComponents(gods).collect()
+    val cc = Analytics.connectedComponentsExact(gods).collect()
     assert(cc.map(_.getAs[Long]("component")).distinct.length === 1)
     assert(cc.length === 12)
   }
@@ -40,8 +40,8 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("pageRank: sinks with many in-edges rank above leaves") {
-    val pr = Analytics.pageRank(gods, iterations = 15).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Double]("rank")).toMap
+    val pr = Analytics.pageRankFixedPoint(gods, iterations = 15).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("rank_fp")).toMap
     // tartarus receives 2 'lives' edges; sky receives 1 — more in-mass
     assert(pr(GraphOfTheGods.ids("tartarus")) > pr(GraphOfTheGods.ids("sky")))
   }

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Both are capped by construction (LRU unpersists on eviction); this spec
   * pins the cap under the churn pattern specifically — every round adds a
   * NEW key, the worst case for an LRU. The wall-clock/heap measurement arm
-  * lives in tools/RefShapes (`memstable_25x1000`, BASELINE.md row).
+  * is RefShapes in the `tools/` sub-project (`memstable_25x1000`, BASELINE.md
+  * row).
   */
 class ChurnBoundSpec extends AnyFunSuite {
   lazy val spark = TestSpark.session

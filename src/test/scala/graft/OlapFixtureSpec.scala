@@ -60,11 +60,13 @@ class OlapFixtureSpec extends AnyFunSuite {
     val verts = (1 to m + 1).map(i => (i.toLong, "node")).toDF("id", "label")
     val edges = (2 to m + 1).map(i => (i.toLong, i.toLong, 1L, "to")).toDF("id", "src", "dst", "label")
     val star = PropertyGraph(GraphSchema(), verts, edges)
-    val pr = Analytics.pageRank(star, iterations = 30).collect()
-      .map(r => r.getAs[Long]("id") -> r.getAs[Double]("rank")).toMap
-    // Fixed point (up to GraphX's sum-to-n normalization): leaf ∝ 0.15,
-    // center ∝ 0.15 + 0.85·m·0.15 ⇒ ratio = 1 + 0.85·m; all leaves equal.
-    assert(math.abs(pr(1L) / pr(2L) - (1 + 0.85 * m)) < 1e-3)
+    val pr = Analytics.pageRankFixedPoint(star, iterations = 30).collect()
+      .map(r => r.getAs[Long]("id") -> r.getAs[Long]("rank_fp")).toMap
+    // Fixed point at scale 10¹²: leaf = 0.15·10¹², center = leaf + 0.85·m·leaf
+    // ⇒ ratio = 1 + 0.85·m = 43.5, exact in the integer arithmetic
+    // (6.525e12 / 1.5e11); all leaves equal.
+    assert(pr(2L) === 150000000000L && pr(1L) === 6525000000000L)
+    assert(BigDecimal(pr(1L)) / BigDecimal(pr(2L)) === BigDecimal(1) + BigDecimal("0.85") * m)
     assert((2L to m + 1).map(pr).distinct.size === 1)
   }
 

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   *     30,000 elements (same total), plus a 1,500-element small-batch arc
   *     to expose per-commit overhead.
   *
-  * A measurement main like TimeQ/RoundScale — not part of the driver
+  * A measurement main like RoundScale — not part of the driver
   * contract. Prints REFSHAPES lines; numbers land in BASELINE.md. */
 object RefShapes {
   def main(args: Array[String]): Unit = {

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * `[graft-rounds]` stderr lines: the pointer-jumped floods must grow
   * ~log(n) (a constant addend per 10×), never linearly.
   *
-  * Not part of the driver contract — a measurement main like TimeQ. */
+  * Not part of the driver contract — a measurement main like RefShapes. */
 object RoundScale {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
