@@ -28,8 +28,9 @@ object Indexes {
     scoped.select((ix.keys.map(col) :+ col("id")): _*)
   }
 
-  /** Index-accelerated equality lookup: semi-join the materialized index on
-    * the key values, then fetch full rows by id. Equivalent plan shape to the
+  /** Index-accelerated equality lookup: filter the materialized index on
+    * the key values, then fetch full rows by id ([[gatedIdSemiJoin]]: a point
+    * read's few ids become an `id IN (…)` filter on the base scan). The
     * reference's composite point-read + element load. `element` selects the
     * base table the ids refer to — vertex and edge ids share the same tag
     * space, so fetching from the wrong table would silently return unrelated
@@ -42,58 +43,86 @@ object Indexes {
     gatedIdSemiJoin(base, matches.select(col("id")))
   }
 
-  /** Semi-join `base` against an index-matched ids-only frame, broadcasting
-    * ONLY when the id set is provably small. A forced broadcast() hint
-    * bypasses spark.sql.autoBroadcastJoinThreshold — composite point reads
-    * are selective by construction in the reference, but a low-selectivity
-    * value (or hot collection cell) makes the matched set unbounded here,
-    * and at 100× scale a forced broadcast of it is a driver/executor OOM.
-    * The gate is a cheap bounded probe (limit(cap+1).count() over ids only,
-    * the requireExactScale discipline): ≤ cap ⇒ broadcast hash semi-join,
-    * > cap ⇒ plain semi-join and AQE picks the runtime strategy from actual
-    * sizes. Cap via graft.index.broadcast.maxRows (rows of bare longs;
-    * 100k ≈ single-digit MB in the hash relation, well under default
-    * executor budgets).
+  /** Id sets of at most this many ids travel into plans as literals
+    * (`id IN (…)`) instead of as a join. 1,024 longs are a few KB of literals
+    * per task, far below Spark's 1000 KiB task-size warning, and a literal
+    * set is a filter the parquet scans push down. */
+  private[graft] val LiteralIds = 1024
+
+  /** Restrict `base` to the ids of an ids-only frame (column `id`), on one of
+    * three paths chosen by the number of id rows `n`, with
+    * `cap = graft.index.broadcast.maxRows` and `lim = min(LiteralIds, cap)`:
     *
-    * The probe DECISION is memoized per (session, ids-plan, cap) in a small
-    * LRU, so building many identical lookups in one pass (the q_ixp_matrix
-    * shape) pays the probe job once per distinct plan, not once per call.
-    * Only the boolean is cached — persisting the ids FRAME itself was
-    * measured SLOWER (a uniform +30-80 ms on every index-path bench query:
-    * block-manager writes on a frame whose filter re-runs in milliseconds;
-    * the same persist-vs-reprobe lesson as the r15 hub-gate experiment),
-    * so the subplan intentionally evaluates twice (probe + join) — both are
-    * pushed-filter index scans, cheaper than one materialization.
+    *  - n ≤ lim: `base.filter(id IN (…))` over the collected ids. No join, no
+    *    broadcast, and the filter reaches the parquet scan. A cap of 0 thus
+    *    turns the literal path off along with the broadcast one.
+    *  - lim < n ≤ cap: broadcast hash semi-join. A forced broadcast bypasses
+    *    spark.sql.autoBroadcastJoinThreshold, so it applies only under the
+    *    cap (rows of bare longs; 100k is single-digit MB of hash relation).
+    *  - n > cap: plain semi-join; AQE picks the strategy from actual sizes.
+    *    A low-selectivity value or a hot collection cell lands here.
     *
-    * Two hardenings (r17): (1) the memo stores the CANONICALIZED ids plan
-    * alongside the boolean and verifies structural equality on every hit —
-    * a 32-bit semanticHash collision between two different id-set plans
-    * would otherwise silently reuse the wrong decision and could
-    * force-broadcast an over-cap frame (the exact OOM class the broadcast
-    * lint guards); a mismatched hit re-probes and overwrites. (2) the memo
-    * has an invalidation hook ([[clearGateDecisions]]) wired to the same
-    * store sinks as PlanCache.invalidatePath, so overwriting index files
-    * mid-session flushes decisions instead of waiting for LRU turnover
-    * (perf-only staleness — the join result is identical either way — but
-    * a stale `small=true` after a data-growing overwrite is the OOM class
-    * again). */
+    * One Spark job decides ([[idsUpTo]]): it returns the ids when there are
+    * at most `lim`, else the row count (exact up to `cap`). The ids are read
+    * fresh on every call, because a memoized id list would be a stale
+    * snapshot. The broadcast/plain decision of an over-`lim` set is memoized
+    * per (session, ids plan, cap) in a small LRU, so many identical large
+    * lookups in one pass (the q_ixp_matrix shape) pay the decision job once;
+    * their ids subplan then runs once per call, in the join (persisting the
+    * ids frame instead measured 30–80 ms slower per query). The memo stores
+    * the canonicalized ids plan next to the decision and re-decides on a
+    * mismatch, so a 32-bit semanticHash collision cannot force-broadcast an
+    * over-cap frame. [[clearGateDecisions]] is wired to the store sinks next
+    * to PlanCache.invalidatePath, so overwriting index files flushes the
+    * decisions. A stale decision only picks a slower join, never other
+    * rows, but a stale broadcast after a data-growing overwrite is the OOM
+    * class again. */
   private[graft] def gatedIdSemiJoin(base: DataFrame, ids: DataFrame): DataFrame = {
     val spark = base.sparkSession
     val cap = spark.conf.get("graft.index.broadcast.maxRows", "100000").toLong
     val plan = ids.queryExecution.logical
     val key = (System.identityHashCode(spark), plan.semanticHash(), cap)
     val canon = plan.canonicalized
-    val hit = gateDecisions.synchronized(gateDecisions.get(key)) match {
-      case (stored, d: java.lang.Boolean) if stored == canon => d
-      case _ => null // miss, or a hash-collision hit on a DIFFERENT plan
+    val memo = gateDecisions.synchronized(gateDecisions.get(key)) match {
+      case (stored, d) if stored == canon => Some(d.booleanValue)
+      case _ => None // miss, or a hash-collision hit on a DIFFERENT plan
     }
-    val small = Option(hit).getOrElse {
-      val s = java.lang.Boolean.valueOf(
-        ids.limit(math.min(cap + 1L, Int.MaxValue.toLong).toInt).count() <= cap)
-      gateDecisions.synchronized(gateDecisions.put(key, (canon, s)))
-      s
+    def semiJoin(small: Boolean): DataFrame =
+      base.join(if (small) broadcast(ids) else ids, Seq("id"), "left_semi")
+    memo match {
+      case Some(small) => semiJoin(small)
+      case None => idsUpTo(ids, math.min(LiteralIds.toLong, cap).toInt, cap) match {
+        case Left(lits) => base.filter(col("id").isin(lits: _*))
+        case Right(n) =>
+          val small = n <= cap
+          gateDecisions.synchronized(gateDecisions.put(key, (canon, java.lang.Boolean.valueOf(small))))
+          semiJoin(small)
+      }
     }
-    base.join(if (small.booleanValue) broadcast(ids) else ids, Seq("id"), "left_semi")
+  }
+
+  /** One Spark job over a one-column frame of (long-castable) ids: the
+    * sorted distinct non-null ids when the frame has at most `lim` rows,
+    * else its row count, exact up to `cap` and above `cap` past it. Each
+    * task stops reading after `max(lim, cap) + 1` rows. Unlike
+    * `limit(n).collect()`, which scans partitions incrementally and may run
+    * several jobs, this reads every partition in the one job. */
+  private[graft] def idsUpTo(ids: DataFrame, lim: Int, cap: Long): Either[Seq[Long], Long] = {
+    val spark = ids.sparkSession
+    import spark.implicits._
+    val stop = math.max(lim.toLong, cap)
+    val parts = ids.select(col(ids.columns.head).cast("long")).mapPartitions { rows =>
+      var n = 0L
+      val kept = Array.newBuilder[Long]
+      while (n <= stop && rows.hasNext) {
+        val r = rows.next()
+        n += 1
+        if (n <= lim && !r.isNullAt(0)) kept += r.getLong(0)
+      }
+      Iterator((n, kept.result()))
+    }.collect()
+    val n = parts.map(_._1).sum
+    if (n <= lim) Left(parts.flatMap(_._2).distinct.sorted.toSeq) else Right(n)
   }
 
   // decision memo: (session, planHash, cap) → (canonicalized plan, ≤cap?).
@@ -110,7 +139,7 @@ object Indexes {
 
   /** Flush memoized broadcast-gate decisions for `spark` (every session when
     * null). Wired to the engine's store sinks next to PlanCache.invalidatePath;
-    * decisions re-probe on next use (one bounded limit-count job each). */
+    * decisions re-probe on next use (one bounded [[idsUpTo]] job each). */
   def clearGateDecisions(spark: org.apache.spark.sql.SparkSession = null): Unit =
     gateDecisions.synchronized {
       if (spark == null) gateDecisions.clear()

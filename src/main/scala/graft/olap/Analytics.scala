@@ -2376,6 +2376,10 @@ object Analytics {
     org.apache.spark.sql.GraftSqlBridge.resetStats(ck)
   }
 
+  /** Rows per task of [[classMergeMapping]]'s driver-built mapping: 16k
+    * pairs of longs serialize to a few hundred KiB. */
+  private val MergeSliceRows = 16384
+
   /** DUAL-REGIME min-label class merge over an undirected, distinct pair
     * frame `und` (cols a, b), shared by [[minimumSpanningForest]]'s label
     * merge and the streaming
@@ -2430,7 +2434,12 @@ object Analytics {
       .get("spark.graft.msf.driverMergeMaxRows", "5000000").toLong
     if (driverMerge) {
       val pairs = und.collect().map(r => (r.getLong(0), r.getLong(1)))
-      broadcast(minLabelUnionFind(pairs).toSeq.toDF("c", "l"))
+      // the mapping's rows ride inside the tasks that read them, and a local
+      // relation is one task: split them so no task nears Spark's 1000 KiB
+      // task-size warning
+      val mapping = minLabelUnionFind(pairs).toSeq
+      val slices = math.max(1, (mapping.size + MergeSliceRows - 1) / MergeSliceRows)
+      broadcast(spark.sparkContext.parallelize(mapping, slices).toDF("c", "l"))
     } else {
       val l0 = und.select(col("a").as("c")).distinct()
         .select(col("c"), col("c").as("l")).transform(roundBarrier)

@@ -198,8 +198,8 @@ final case class GraphQuery(
     }
   }
 
-  /** Semi-join the (possibly pre-filtered) element base against an
-    * index-matched id set — size-gated broadcast, see
+  /** Restrict the (possibly pre-filtered) element base to an index-matched
+    * id set — size-gated literal/broadcast/plain paths, see
     * [[graft.index.Indexes.gatedIdSemiJoin]]. */
   private def idSemiJoin(ids: DataFrame): DataFrame =
     graft.index.Indexes.gatedIdSemiJoin(target, ids)
@@ -245,8 +245,8 @@ final case class GraphQuery(
 
   /** Compile to a DataFrame plan. If a backed composite index covers the
     * equality conjuncts, the plan becomes: filter the (small) index table on
-    * the key values → size-gated (broadcast when provably small) semi-join
-    * ids against the base — the same
+    * the key values → size-gated restriction of the base to those ids
+    * (literal `id IN (…)`, broadcast or plain semi-join) — the same
     * shape as the reference's index point-read + element load
     * (IndexSerializer.java:511-546). ALL conditions are still applied as
     * residual filters, so an index can never change results, only access

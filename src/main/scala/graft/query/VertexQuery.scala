@@ -147,14 +147,21 @@ final case class VertexCentricQuery(
     adjacentId.fold(d)(v => d.filter(col("other") === v))
   }
 
-  /** The per-vertex slice: frontier semi-restriction, then window order/limit.
-    * Broadcast the frontier when it is small (the planner's AQE handles the
-    * general case; an explicit broadcast hint would pin it). */
+  /** The per-vertex slice: frontier restriction, then window order/limit.
+    * A frontier that is provably small ([[VertexCentricQuery.literalIds]])
+    * restricts as `vid IN (…)`: no join, and the filter reaches the edge
+    * scan (`src`/`dst`), whose `src`-sorted files can skip row groups. Any
+    * other frontier is a `left_semi` join on `vid`, its strategy left to
+    * AQE (an explicit broadcast hint would pin it). The window's exchange
+    * stays either way. */
   def edges(): DataFrame = {
     val o = oriented
     val restricted = frontier match {
       case None => o
-      case Some(f) => o.join(f.select(col("vid")).distinct(), Seq("vid"), "left_semi")
+      case Some(f) => VertexCentricQuery.literalIds(f) match {
+        case Some(ids) => o.filter(col("vid").isin(ids: _*))
+        case None => o.join(f.select(col("vid")).distinct(), Seq("vid"), "left_semi")
+      }
     }
     applyWindow(restricted)
   }
@@ -224,8 +231,11 @@ final case class VertexCentricQuery(
     val ks: Seq[String] = if (keys.nonEmpty) keys.toSeq else graph.vertexPropColumns
     val base = frontier match {
       case None => graph.vertices
-      case Some(f) => graph.vertices.join(
-        f.select(col("vid")).distinct(), col("id") === col("vid"), "left_semi")
+      case Some(f) => VertexCentricQuery.literalIds(f) match {
+        case Some(ids) => graph.vertices.filter(col("id").isin(ids: _*))
+        case None => graph.vertices.join(
+          f.select(col("vid")).distinct(), col("id") === col("vid"), "left_semi")
+      }
     }
     // single-scan unpivot — k filtered scans union'd would read the vertex
     // table k times at scale; a `_pts` cell-timestamp map (timestamped-log
@@ -252,4 +262,60 @@ final case class VertexCentricQuery(
 
 object VertexCentricQuery {
   def apply(g: PropertyGraph): VertexCentricQuery = new VertexCentricQuery(g)
+
+  /** The frontier's distinct non-null `vid`s (a LONG column), when they are
+    * provably at most [[graft.index.Indexes.LiteralIds]] without running the
+    * frontier:
+    *  - its optimized plan is a local relation (`onVertices`, a driver-built
+    *    id frame). The rows are on the driver, so this costs no job;
+    *  - a filter restricts its anchor column by `=`, `IN` or `InSet` over at
+    *    most that many literals, as an index lookup's literal path does.
+    *    Catalyst turns a one-element `IN` into `=` and a long one into
+    *    `InSet`. One bounded [[graft.index.Indexes.idsUpTo]] job reads the
+    *    exact ids, and a frontier with more rows than the bound falls back.
+    * None for any other frontier, which spends no job here. */
+  private[graft] def literalIds(frontier: DataFrame): Option[Seq[Long]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val lim = graft.index.Indexes.LiteralIds
+    val anchor = frontier.select(col("vid"))
+    if (anchor.schema.head.dataType != org.apache.spark.sql.types.LongType) None
+    else anchor.queryExecution.optimizedPlan match {
+      case lr: LocalRelation =>
+        Some(lr.data.filterNot(_.isNullAt(0)).map(_.getLong(0)).distinct)
+          .filter(_.size <= lim).map(_.sorted)
+      case p if literalBound(p, p.output.head.exprId, lim) =>
+        graft.index.Indexes.idsUpTo(anchor, lim, lim).left.toOption
+      case _ => None
+    }
+  }
+
+  /** True when every value of attribute `a` in `p`'s output is one of at
+    * most `lim` literals: a filter conjunct `a = lit`, `a IN (lits)` or
+    * `InSet(a, …)`, reached through filters and projections (renames). */
+  private def literalBound(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      a: org.apache.spark.sql.catalyst.expressions.ExprId, lim: Int): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    def bounds(e: Expression): Boolean = e match {
+      case EqualTo(x: Attribute, _: Literal) => x.exprId == a
+      case EqualTo(_: Literal, x: Attribute) => x.exprId == a
+      case In(x: Attribute, list) =>
+        x.exprId == a && list.size <= lim && list.forall(_.isInstanceOf[Literal])
+      case InSet(x: Attribute, set) => x.exprId == a && set.size <= lim
+      case _ => false
+    }
+    p match {
+      case Filter(cond, child) => conjuncts(cond).exists(bounds) || literalBound(child, a, lim)
+      case Project(list, child) => list.find(_.exprId == a) match {
+        case Some(Alias(x: Attribute, _)) => literalBound(child, x.exprId, lim)
+        case Some(x: Attribute) => literalBound(child, x.exprId, lim)
+        case _ => false
+      }
+      case _ => false
+    }
+  }
 }

@@ -108,11 +108,11 @@ class BroadcastLintSpec extends AnyFunSuite {
       "caller-bounded: pivot/source vertex list"),
     Allow("olap/Analytics.scala", ".crossJoin(broadcast(mTot))",
       "one-row aggregate (total edge count)"),
-    Allow("olap/Analytics.scala", "broadcast(minLabelUnionFind(pairs).toSeq.toDF(\"c\", \"l\"))",
+    Allow("olap/Analytics.scala", "broadcast(spark.sparkContext.parallelize(mapping, slices).toDF(\"c\", \"l\"))",
       "count-gated: driver union-find branch taken only when undRows <= spark.graft.msf.driverMergeMaxRows"),
     // ---- index, sketches, stream, zorder ----
-    Allow("index/Indexes.scala", "base.join(if (small.booleanValue) broadcast(ids) else ids, Seq(\"id\"), \"left_semi\")",
-      "count-gated: gatedIdSemiJoin probes |ids| <= graft.index.broadcast.maxRows"),
+    Allow("index/Indexes.scala", "base.join(if (small) broadcast(ids) else ids, Seq(\"id\"), \"left_semi\")",
+      "count-gated: gatedIdSemiJoin's one bounded job counts |ids| <= graft.index.broadcast.maxRows"),
     Allow("functions/Sketches.scala", ".join(broadcast(bitsTable), Seq(\"word\"), \"left\")",
       "param-bounded: bloom filter register table = words rows"),
     Allow("functions/ZOrder.scala", "df.crossJoin(broadcast(bounds))",

@@ -91,18 +91,71 @@ class OperationCountingSpec extends AnyFunSuite {
 
   test("repeating an identical index lookup skips the gate-probe job " +
       "(decision memoized, frame NOT persisted)") {
-    // r16: gatedIdSemiJoin memoizes the small/large DECISION per
-    // (session, ids-plan, cap). The q_ixp_matrix shape — many identical
-    // lookups in one pass — must pay the probe count once, so a repeat of
-    // the same lookup costs strictly fewer jobs than its first run.
-    val g0 = chain(400)
-    val ix = graft.core.IndexDef("byUid2", graft.core.ElementCategory.VERTEX, Seq("uid"))
+    // gatedIdSemiJoin memoizes the broadcast/plain DECISION of an id set
+    // over Indexes.LiteralIds per (session, ids-plan, cap). The q_ixp_matrix
+    // shape — many identical lookups in one pass — must pay the decision job
+    // once, so a repeat of the same lookup costs strictly fewer jobs than
+    // its first run. (A literal-path lookup re-reads its ids on every call
+    // by design: a memoized id list would be a stale snapshot.)
+    val over = graft.index.Indexes.LiteralIds + 2L
+    val g0 = {
+      val c = chain(2 * over)
+      c.copy(vertices = c.vertices.withColumn("grp", col("id") % 2L))
+    }
+    val ix = graft.core.IndexDef("byGrp2", graft.core.ElementCategory.VERTEX, Seq("grp"))
     val g = g0.copy(schema = g0.schema.copy(indexes = g0.schema.indexes + (ix.name -> ix)))
       .withIndexTable(ix.name, graft.index.Indexes.materialize(g0, ix))
-    def run(): Long = g.V().has("uid", 42L).forceIndex().vertices().count()
+    def run(): Long = g.V().has("grp", 0L).forceIndex().vertices().count()
     val (n1, j1) = countJobs(run())
     val (n2, j2) = countJobs(run())
-    assert(n1 == 1L && n2 == 1L)
+    assert(n1 == over && n2 == over)
     assert(j2 < j1, s"repeat lookup did not skip the probe: first=$j1 repeat=$j2")
+  }
+
+  // the perfbench mutate_read state: the benchmark's TPC-H tables (read
+  // from the repository root) as a graph saved, reloaded, and indexed with
+  // Indexes.materialize
+  private lazy val tpch: graft.data.PropertyGraph = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-opcount").toString
+    graft.data.GraphIO.save(graft.data.TpchGraph.load(spark, "perfbench/data/sf0.01"), dir, buckets = 4)
+    val g = graft.data.GraphIO.load(spark, dir, graft.data.TpchGraph.schema)
+    val ix = graft.data.TpchGraph.schema.indexes("byUid")
+    g.withIndexTable(ix.name, graft.index.Indexes.materialize(g, ix))
+  }
+
+  test("the indexed point read (lookup, collect, newest-2 placed slice) is at most 5 jobs") {
+    import graft.query.{Direction, VertexCentricQuery}
+    val g = tpch
+    val u = 1L
+    val cust = graft.core.GraphIds.vertexId(graft.data.TpchGraph.CustomerTag, u)
+    val placed = g.edges.filter(col("label") === "placed" && col("src") === cust).count()
+    assert(placed >= 2L)
+    val ((vs, es), j) = countJobs {
+      val hit = graft.index.Indexes.lookup(g, g.indexTables("byUid"), Map("uid" -> u))
+        .filter(col("label") === "customer")
+      val vs = hit.select(col("id"), col("label"), col("name")).collect()
+      val es = VertexCentricQuery(g).onFrontier(hit.select(col("id").as("vid")), Seq("customer"))
+        .labels("placed").direction(Direction.OUT).orderBy("orderdate", asc = false)
+        .limit(2).edges().select(col("other"), col("orderdate").cast("string")).collect()
+      (vs, es)
+    }
+    assert(vs.map(_.getLong(0)).toSeq == Seq(cust))
+    assert(es.length == 2)
+    assert(j <= 5, s"point read cost $j jobs")
+  }
+
+  test("an onVertices frontier spends no job on the frontier") {
+    import graft.query.{Direction, VertexCentricQuery}
+    val g = chain(300)
+    val (q, built) = countJobs {
+      VertexCentricQuery(g).onVertices(7L, 150L, 299L).direction(Direction.OUT).edges()
+    }
+    assert(built == 0, s"building the slice ran $built jobs")
+    // the frontier adds no job to the read: it costs what the same read of
+    // the whole edge table costs
+    val (rows, j) = countJobs(q.collect())
+    val (_, whole) = countJobs(VertexCentricQuery(g).direction(Direction.OUT).edges().collect())
+    assert(rows.map(_.getAs[Long]("vid")).sorted.toSeq == Seq(7L, 150L, 299L))
+    assert(j == whole, s"onVertices read $j jobs, the unrestricted read $whole")
   }
 }

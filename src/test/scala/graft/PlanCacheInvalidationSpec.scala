@@ -107,12 +107,14 @@ class PlanCacheInvalidationSpec extends AnyFunSuite {
   }
 
   test("gate-decision memo: clearGateDecisions flushes; hit verifies plan equality") {
-    val base = Seq(1L, 2L, 3L, 4L).toDF("id")
-    val ids = Seq(2L, 3L).toDF("id")
+    // only a set over Indexes.LiteralIds ids is decided through the memo
+    val over = graft.index.Indexes.LiteralIds + 2L
+    val base = spark.range(1L, over + 3L).toDF("id")
+    val ids = spark.range(2L, over + 2L).toDF("id")
     // memoized decision path: two identical calls, same result both times
     val r1 = graft.index.Indexes.gatedIdSemiJoin(base, ids).collect().map(_.getLong(0)).sorted
     val r2 = graft.index.Indexes.gatedIdSemiJoin(base, ids).collect().map(_.getLong(0)).sorted
-    assert(r1.toSeq === Seq(2L, 3L))
+    assert(r1.toSeq === (2L until over + 2L))
     assert(r2.toSeq === r1.toSeq)
     // flush (session-scoped and global) — purely perf-affecting, results hold
     graft.index.Indexes.clearGateDecisions(spark)

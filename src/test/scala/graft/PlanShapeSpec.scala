@@ -163,24 +163,33 @@ class PlanShapeSpec extends AnyFunSuite {
       "edge-label universe must not defeat vertex-label salting scope")
   }
 
+  /** The base scan is restricted by a literal id set (`id = …` or
+    * `id IN (…)` among its pushed filters): the index lookup's literal path,
+    * a semi-join against the matched ids that ran as one bounded job. */
+  private def idLiterals(p: String): Boolean =
+    p.linesIterator.exists(l => l.contains("PushedFilters") &&
+      (l.contains("EqualTo(id,") || l.contains("In(id,")))
+
   test("automatic index selection rewrites an equality query to an index semi-join") {
     // with a registered backing table the planner picks the byName composite
-    // index: filter the index table → broadcast semi-join ids against base
-    // (GraphCentricQueryBuilder.java:185-323 parity)
+    // index: filter the index table → semi-join ids against base
+    // (GraphCentricQueryBuilder.java:185-323 parity). One matched id is
+    // under Indexes.LiteralIds, so the semi-join is the literal `id` filter
+    // pushed into the base scan (the join shapes: PointReadLiteralSpec)
     val p = plan("q_index_auto")
-    assert(p.contains("LeftSemi"), p)
-    assert(p.contains("indexes/byName"), p)
+    assert(idLiterals(p) && !p.contains("LeftSemi"), p)
     // an unbacked index must NOT trigger the rewrite (it would double-scan)
     val raw = graft.data.TpchGraph.load(spark, dir)
     val p2 = raw.V().has("name", "NATION_5").dataframe.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(!p2.contains("LeftSemi"), p2)
+    assert(!p2.contains("LeftSemi") && !idLiterals(p2), p2)
   }
 
   test("label-scoped composite index is auto-selected only under a matching hasLabel") {
-    // hasLabel("customer") covers the index's onlyLabel scope → semi-join path
+    // hasLabel("customer") covers the index's onlyLabel scope → index path
+    // (the BUILDING customers are under Indexes.LiteralIds: literal ids)
     val p = plan("q_index_auto_scoped")
-    assert(p.contains("LeftSemi"), p)
+    assert(idLiterals(p), p)
     // the SAME equality WITHOUT the label constraint must NOT use the scoped
     // index: its table holds only customer rows, so the semi-join would drop
     // matching elements of every other label
@@ -191,26 +200,32 @@ class PlanShapeSpec extends AnyFunSuite {
       .withIndexTable(ix.name, graft.index.Indexes.materialize(g0, ix))
     val p2 = g.V().has("mktsegment", "BUILDING").dataframe.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(!p2.contains("LeftSemi"), p2)
+    assert(!p2.contains("LeftSemi") && !idLiterals(p2), p2)
   }
 
   test("index-path broadcast is size-gated: selective lookup broadcasts, " +
       "an over-cap id set compiles to a non-broadcast semi-join") {
+    // "selective" is under graft.index.broadcast.maxRows. A set of at most
+    // Indexes.LiteralIds ids (a point lookup) skips the join altogether, so
+    // the broadcast case here is an edge-index lookup of ~1/4 of the
+    // lineitems: more than LiteralIds ids, far fewer than the cap
+    import org.apache.spark.sql.functions.col
     val g0 = graft.data.TpchGraph.load(spark, dir)
-    val ix = graft.core.IndexDef("gateByName", graft.core.ElementCategory.VERTEX,
-      Seq("name"))
+    val ix = graft.core.IndexDef("gateByFlag", graft.core.ElementCategory.EDGE,
+      Seq("returnflag"))
     val g = g0.copy(schema = g0.schema.copy(indexes = g0.schema.indexes + (ix.name -> ix)))
       .withIndexTable(ix.name, graft.index.Indexes.materialize(g0, ix))
-    def p(): String = g.V().has("name", "NATION_5").dataframe.queryExecution
+    assert(g0.edges.filter(col("returnflag") === "A").count() > graft.index.Indexes.LiteralIds)
+    def p(): String = g.E().has("returnflag", "A").dataframe.queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     // isolate OUR hint from the planner's own size-based choice: with
     // autoBroadcastJoinThreshold disabled, a BroadcastExchange can only come
     // from the gate's explicit broadcast()
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // selective point lookup (1 matched id, under the default cap): the
-      // gate forces the classic broadcast hash semi-join — the reference's
-      // composite point-read shape survives even a conservative threshold
+      // under the default cap the gate forces the classic broadcast hash
+      // semi-join — the reference's composite point-read shape survives
+      // even a conservative threshold
       val sel = p()
       assert(sel.contains("LeftSemi") && sel.contains("BroadcastExchange"), sel)
       // cap forced to 0: every id set is "too big" — the hint must NOT be
@@ -442,14 +457,15 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("textContains auto-selects a backed mixed index (semi-join); unbacked stays a scan") {
     import org.apache.spark.sql.functions.col
+    // the widget parts are under Indexes.LiteralIds: literal ids
     val p = plan("q_index_auto_text")
-    assert(p.contains("LeftSemi"), p)
+    assert(idLiterals(p), p)
     // without a registered token table, the same query must NOT semi-join
     val g = graft.data.TpchGraph.load(spark, dir)
     val bare = g.V().has("name", graft.expr.P.textContains("widget")).dataframe
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(!bare.contains("LeftSemi"), bare)
+    assert(!bare.contains("LeftSemi") && !idLiterals(bare), bare)
   }
 
   test("indexed textContains matches the full scan, incl. duplicate condition tokens") {
