@@ -15,7 +15,7 @@ import org.apache.spark.storage.StorageLevel
   * this constantly — the logical plan is identical, so the second call can
   * serve the cached frame instead of recomputing the dominant stage).
   *
-  * Resolution: a small LRU keyed by (operator, input-plan semantic hash,
+  * Resolution: a small LRU keyed by (operator, canonicalized input plan,
   * params). A repeated call returns the already-persisted frame; once more
   * than `MaxEntries` distinct frames are live, the least-recently-used is
   * unpersisted — so total cached storage is bounded for any call pattern.
@@ -51,7 +51,17 @@ object PlanCache {
     * purely in-memory lineage — such entries never go stale by overwrite). */
   private final case class Entry(df: DataFrame, files: Array[String])
 
-  private type EntryMap = java.util.LinkedHashMap[String, Entry]
+  /** Cache key: operator tag, canonicalized input plan and operator
+    * parameters. Equality compares all three, so two inputs whose 32-bit
+    * `semanticHash` collides are two keys, and parameters compare as a
+    * sequence, never as a joined string. The hash is the input's
+    * `semanticHash` (the canonicalized plan's hash). */
+  final case class Key(op: String,
+      canon: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, params: Seq[Any]) {
+    override val hashCode: Int = canon.hashCode
+  }
+
+  private type EntryMap = java.util.LinkedHashMap[Key, Entry]
 
   private val caches =
     new java.util.LinkedHashMap[SparkSession, EntryMap](16, 0.75f, true) {
@@ -68,14 +78,13 @@ object PlanCache {
   private val listenerInstalled = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
 
-  /** Stable cache key: operator tag + semantic hash of the input plan +
-    * operator parameters. */
-  def key(op: String, input: DataFrame, params: Any*): String =
-    s"$op:${input.queryExecution.logical.semanticHash()}:${params.mkString(",")}"
+  /** Stable cache key: operator tag + input plan + operator parameters. */
+  def key(op: String, input: DataFrame, params: Any*): Key =
+    Key(op, input.queryExecution.logical.canonicalized, params.toList)
 
   /** Return the cached frame for `key`, or persist `build` and register it
     * (evicting + unpersisting the LRU entry past capacity). */
-  def cached(spark: SparkSession, cacheKey: String)(build: => DataFrame): DataFrame =
+  def cached(spark: SparkSession, cacheKey: Key)(build: => DataFrame): DataFrame =
     synchronized {
       sweepStopped()
       var m = caches.get(spark)
@@ -89,7 +98,7 @@ object PlanCache {
         }
         m = new EntryMap(16, 0.75f, true) {
           override def removeEldestEntry(
-              e: java.util.Map.Entry[String, Entry]): Boolean = {
+              e: java.util.Map.Entry[Key, Entry]): Boolean = {
             val evict = size() > MaxEntries
             if (evict) e.getValue.df.unpersist(false)
             evict
@@ -144,7 +153,7 @@ object PlanCache {
 
   /** Unpersist and forget one cached entry (use after overwriting the files
     * a cached operator read — see SNAPSHOT SEMANTICS above). */
-  def invalidate(spark: SparkSession, cacheKey: String): Unit = synchronized {
+  def invalidate(spark: SparkSession, cacheKey: Key): Unit = synchronized {
     val m = caches.get(spark)
     if (m != null) {
       val e = m.remove(cacheKey)

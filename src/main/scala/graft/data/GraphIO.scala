@@ -653,10 +653,11 @@ object GraphIO {
     * materializer the caller chose: (key,token,id) → materializeMixed,
     * (key,kind,value,id) → materializeTextString, (key,value,id) →
     * materializeString, (key,cellvalue,id) → materializeCollection,
-    * (key,numvalue,id) → materializeNumeric (its key
-    * subset is recorded in the table itself). Geo tables are DROPPED — the
-    * cell size is not recoverable from the layout — as is any unrecognized
-    * layout: the planner falls back to the pushed-down full scan, correct
+    * (key,numvalue,id) → materializeNumeric and (key,tsvalue,id) →
+    * materializeTemporal (their key subset is the table's distinct `key`
+    * values), (key,cell_deg,cell_lat,cell_lon,id) → materializeGeo (key
+    * and cell size are recorded in the table). An unrecognized layout is
+    * DROPPED: the planner falls back to the pushed-down full scan, correct
     * but unaccelerated until the caller re-materializes. */
   private[graft] def refreshIndexTables(g2: PropertyGraph): PropertyGraph = {
     if (g2.indexTables.isEmpty) return g2
@@ -680,15 +681,16 @@ object GraphIO {
               Some(name -> graft.index.Indexes.materializeString(g2, ix))
             else if (cols == Set("key", "cellvalue", "id"))
               Some(name -> graft.index.Indexes.materializeCollection(g2, ix))
-            else if (cols == Set("key", "numvalue", "id")) {
+            else if (cols == Set("key", "numvalue", "id") || cols == Set("key", "tsvalue", "id")) {
               // the caller's key subset is the table's distinct `key` set —
               // a tiny eager agg (key names, not data), like the other
               // eager enforcement jobs in applyMutations
               val ks = old.select(col("key")).distinct()
                 .collect().map(_.getString(0)).toSeq
-              if (ks.nonEmpty)
+              if (ks.isEmpty) None
+              else if (cols("numvalue"))
                 Some(name -> graft.index.Indexes.materializeNumeric(g2, ix, ks))
-              else None
+              else Some(name -> graft.index.Indexes.materializeTemporal(g2, ix, ks))
             } else if (cols == Set("key", "cell_deg", "cell_lat", "cell_lon", "id")) {
               // geo grid table is self-describing (key + cell size recorded
               // in the layout) — one 1-row control read recovers the

@@ -244,7 +244,7 @@ object Indexes {
 
   /** Shared lookup shape of every mixed-index family: filter the index table,
     * project ids, semi-join the element base. One join shape to maintain —
-    * the four public lookups differ only in their index-side predicate. */
+    * the public lookups differ only in their index-side predicate. */
   private def semiJoinIds(g: PropertyGraph, ids: DataFrame,
       element: ElementCategory): DataFrame = {
     val base = if (element == ElementCategory.VERTEX) g.vertices else g.edges
@@ -312,12 +312,9 @@ object Indexes {
 
   /** Range lookup [lo, hi) through a numeric mixed index. */
   def lookupRange(g: PropertyGraph, numIx: DataFrame, key: String, lo: Double, hi: Double,
-      element: ElementCategory = ElementCategory.VERTEX): DataFrame = {
-    val ids = numIx.filter(col("key") === key && col("numvalue") >= lo && col("numvalue") < hi)
-      .select(col("id"))
-    val base = if (element == ElementCategory.VERTEX) g.vertices else g.edges
-    base.join(ids, Seq("id"), "left_semi")
-  }
+      element: ElementCategory = ElementCategory.VERTEX): DataFrame =
+    semiJoinIds(g, numIx.filter(col("key") === key && col("numvalue") >= lo &&
+      col("numvalue") < hi), element)
 
   /** Materialize the TEMPORAL side of a mixed index: (key, tsvalue, id)
     * rows with tsvalue a NATIVE timestamp. Date and Instant are first-class
@@ -341,13 +338,9 @@ object Indexes {
     * bounds (any timestamp-castable literal lifts through `lit`). */
   def lookupTemporalRange(g: PropertyGraph, tsIx: DataFrame, key: String,
       lo: Column, hi: Column,
-      element: ElementCategory = ElementCategory.VERTEX): DataFrame = {
-    val ids = tsIx.filter(col("key") === key &&
-        col("tsvalue") >= lo.cast("timestamp") && col("tsvalue") < hi.cast("timestamp"))
-      .select(col("id"))
-    val base = if (element == ElementCategory.VERTEX) g.vertices else g.edges
-    base.join(ids, Seq("id"), "left_semi")
-  }
+      element: ElementCategory = ElementCategory.VERTEX): DataFrame =
+    semiJoinIds(g, tsIx.filter(col("key") === key &&
+      col("tsvalue") >= lo.cast("timestamp") && col("tsvalue") < hi.cast("timestamp")), element)
 
   /** Typed temporal range: java.time.Instant bounds. */
   def lookupTemporalRange(g: PropertyGraph, tsIx: DataFrame, key: String,
@@ -590,8 +583,7 @@ object Indexes {
     if (!fullLon)
       cand = cand.filter(
         col("cell_lon") >= cell(centerLon - lonDeg) && col("cell_lon") <= cell(centerLon + lonDeg))
-    val base = if (element == ElementCategory.VERTEX) g.vertices else g.edges
-    base.join(cand.select(col("id")), Seq("id"), "left_semi")
+    semiJoinIds(g, cand, element)
       .filter(Geo.within(pointCol, Geo.circle(centerLat, centerLon, radiusKm), roundScale))
   }
 

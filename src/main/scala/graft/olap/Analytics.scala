@@ -1558,13 +1558,16 @@ object Analytics {
     *
     * Scale: the deduped undirected edge list lays out ONCE partitioned by
     * the window/aggregation key `a`; in the broadcast regime (|V| within
-    * `spark.graft.broadcast.maxRows`) every per-round frame that touches it
-    * (frontier, delta set, c, h) is vertex-sized and broadcast, so the edge
-    * frame is NEVER exchanged after the initial layout — the h-index window
-    * sorts within the persisted partitions. Past the cap the c-join and the
-    * window each degrade to one |E| exchange per round — the floor any
-    * layout pays. Convergence detection rides the per-round action: Σc is
-    * monotone non-increasing, so an unchanged sum IS the fixed point. */
+    * `spark.graft.broadcast.maxRows`) both per-round frames that touch it
+    * (c and h) are vertex-sized and broadcast, so the edge frame is NEVER
+    * exchanged after the initial layout — the h-index window sorts within
+    * the persisted partitions. Every round recomputes h over the whole
+    * adjacency: restricting it to vertices with a changed neighbor cost
+    * more than it saved at every frontier size measured at sf0.1 (BENCH_AB.md
+    * r18). Past the cap the c-join and the window each degrade to one |E|
+    * exchange per round — the floor any layout pays. Convergence detection
+    * rides the per-round action: Σc is monotone non-increasing, so an
+    * unchanged sum IS the fixed point. */
   def coreness(g: PropertyGraph, maxRounds: Int = 10): DataFrame = {
     val (result, outcome) = corenessOutcome(g, maxRounds)
     Fixpoint.warnIfExhausted("coreness", outcome,
@@ -1581,7 +1584,7 @@ object Analytics {
   private def corenessOutcome(g: PropertyGraph, maxRounds: Int): (DataFrame, Outcome) = {
     // partition-once, iterate (see kCoreConverged): laid out by the
     // WINDOW/AGGREGATION key `a`, so in the broadcast regime the per-round
-    // plan exchanges NO edge-sized frame at all — the frontier/c/h frames
+    // plan exchanges NO edge-sized frame at all — the c/h frames
     // broadcast (checkpointed frames hide size stats from AQE, so the hints
     // are load-bearing), the h-index window sorts within the persisted
     // a-partitions, and groupBy(a) reuses the same layout. Past the
@@ -1600,83 +1603,31 @@ object Analytics {
       .select(col("id"), coalesce(col("__c"), lit(0L)).as("core"))
       .transform(roundBarrier)
     // one setup action: |V| (one static gate for every vertex-sized
-    // per-round frame — c, h, frontier, affected are all <= |V| rows) and
-    // the round-0 Σcore signature
+    // per-round frame — c and h are <= |V| rows) and the round-0 Σcore
+    // signature
     val setup = c0.agg(count(lit(1)), sum(col("core"))).head
     val vCount = setup.getLong(0)
     var prevSig = if (setup.isNullAt(1)) 0L else setup.getLong(1)
-    // round-0 core = degree, so Σcore = Σdeg = und's exact row count — the
-    // adaptive-delta volume gate needs no dedicated count action
-    val undRows = prevSig
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("a")).orderBy(col("__cb").desc, col("b").asc)
-    // ADAPTIVE delta restriction (r18, guide §1.2 "the distributed
-    // algorithm" + §2.4): h(a) depends only on the neighbors' cores, so a
-    // vertex need recompute ONLY when some neighbor changed last round. The
-    // delta machinery costs two broadcast builds, a distinct and a second
-    // pass over the persisted adjacency per round — which only pays when
-    // the SAVED work (the window sort over the unaffected adjacency) is
-    // larger than that fixed cost. Two data-driven gates, no extra actions
-    // for either:
-    //  - edge volume: below `deltaMinEdges` und rows a full-adjacency
-    //    window round is sub-second on any modern node and the machinery
-    //    always loses (measured at sf0.1, 1.2M und rows: never-delta 8.3 s
-    //    vs always-delta 12.8 s vs frontier-gated-only 10.1 s —
-    //    BENCH_AB.md r18). und's row count is FREE: round-0 core = degree,
-    //    so the initial Σcore signature equals Σdeg = |und rows| exactly.
-    //  - frontier fraction: early rounds change most vertices (affected ≈
-    //    V, base ≈ und), so even past the volume gate the restriction only
-    //    engages once last round's changed count (carried by the per-round
-    //    signature aggregate — no extra action) drops below
-    //    `deltaFrontierFrac` of |V|. Big-frontier rounds take the plain
-    //    full-window path; shrinking-frontier rounds at scale keep the
-    //    restriction that matters there.
-    val deltaFrac = g.spark.conf
-      .get("spark.graft.coreness.deltaFrontierFrac", "0.5").toDouble
-    val deltaMinEdges = g.spark.conf
-      .get("spark.graft.coreness.deltaMinEdges", "10000000").toLong
-    var frontierCount = vCount
-    // the loop state is (id, core, __chg): __chg marks last round's changes
-    val (state, outcome) = Fixpoint.run("coreness", maxRounds, c0, residual0 = prevSig,
-        owned = Seq(und)) { (state, round) =>
-      val c = state.select(col("id"), col("core"))
-      // und is SYMMETRIC, so "vertices with a changed neighbor" can read the
-      // b side after a semi-join on a — keyed on the persisted layout, the
-      // edge frame never moves (the b-keyed form exchanged |E| rows here).
-      // Round 1 skips the delta machinery outright: every vertex is
-      // "changed", so affected ⊇ every edge endpoint and base ≡ und exactly
-      // (h rows for ids outside c drop at the next-join either way) — the
-      // shortcut saves two broadcast builds + a distinct in the round that
-      // touches the most data.
-      def affected = und
-        .join(hint(state.filter(col("__chg")).select(col("id").as("a")), vCount),
-          Seq("a"), "left_semi")
-        .select(col("b").as("a")).distinct()
-      val base = if (round > 1 && undRows >= deltaMinEdges &&
-          frontierCount <= (deltaFrac * vCount).toLong)
-        und.join(hint(affected, vCount), Seq("a"), "left_semi") else und
-      val h = base
+    Fixpoint.run("coreness", maxRounds, c0, residual0 = prevSig, owned = Seq(und)) { (c, _) =>
+      val h = und
         .join(hint(c.select(col("id").as("b"), col("core").as("__cb")), vCount), Seq("b"))
         .select(col("a"), col("b"), col("__cb"))
         .withColumn("__rn", row_number().over(w).cast("long"))
         .groupBy(col("a")).agg(max(least(col("__cb"), col("__rn"))).as("__c"))
-      // untouched vertices KEEP their core (their h inputs are unchanged —
-      // recomputing would yield the identical value, so skipping is exact)
+      // vertices with no neighbor have no h row and keep their core (0)
       c.join(hint(h.select(col("a").as("id"), col("__c")), vCount), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__c"), col("core")).as("core"),
-          (col("__c").isNotNull && col("__c") =!= col("core")).as("__chg"))
+        .select(col("id"), coalesce(col("__c"), col("core")).as("core"))
     } { next =>
       // ONE action materializes the round: the monotone Σcore signature
-      // (equal sum = fixed point) plus the changed count — next round's
-      // frontier size for the adaptive delta gate, at zero extra jobs
-      val r = next.agg(sum(col("core")), count(when(col("__chg"), lit(1)))).head
+      // (equal sum = fixed point)
+      val r = next.agg(sum(col("core"))).head
       val s = if (r.isNullAt(0)) 0L else r.getLong(0)
-      frontierCount = if (r.isNullAt(1)) 0L else r.getLong(1)
       val residual = math.abs(prevSig - s)
       prevSig = s
       residual
     }
-    (state.select(col("id"), col("core")), outcome)
   }
 
   /** STRONGLY connected components — the directed twin of
@@ -2314,21 +2265,23 @@ object Analytics {
     z2.bitwiseXOR(shiftleft(z2, 17))
   }
 
-  /** Barrier-call counter for the conf-gated periodic driver GC below —
-    * JVM-global (GC is), so interleaved kernels share the cadence. */
-  private val barrierCalls = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Per-round lineage barrier for the iterative kernels
-    * (`spark.graft.iter.barrier` = `lazy` | `reliable`; default `lazy` =
-    * localCheckpoint materialized by the round's one action — the cheapest
-    * form and the historical pattern; `reliable` checkpoints to a dir
-    * auto-set under `spark.graft.checkpointDir` for executor-loss-safe
-    * cluster runs). BOTH modes then STRIP the leaf statistics Spark 4's
-    * checkpoint carries onto the new leaf — without the strip, the carried
+  /** Per-round lineage barrier for the iterative kernels. It follows
+    * Spark's own checkpoint setting, as GraphX's Pregel and MLlib's
+    * periodic checkpointer do: with a checkpoint directory set on the
+    * context (`SparkContext.setCheckpointDir`) the barrier is a reliable
+    * checkpoint that survives executor loss; without one it is a
+    * localCheckpoint materialized by the round's one action, the cheapest
+    * form. BOTH forms then STRIP the leaf statistics Spark 4's checkpoint
+    * carries onto the new leaf — without the strip, the carried
     * sizeInBytes estimate compounds geometrically across rounds and
     * driver-side BigInteger stats arithmetic dominates wall time from
     * ~round 12, executors idle (found by the round-14 diameter
-    * measurement; full analysis in [[org.apache.spark.sql.GraftSqlBridge]]). */
+    * measurement; full analysis in [[org.apache.spark.sql.GraftSqlBridge]]).
+    *
+    * Dead rounds' shuffle files are reclaimed once a driver GC collects
+    * their RDD references (see GraftSqlBridge.resetStats); on a
+    * disk-critical box, Spark's `spark.cleaner.periodicGC.interval` paces
+    * that GC. */
   private[graft] def roundBarrier(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     // SESSION PROPAGATION — SparkPlan nodes capture
@@ -2345,34 +2298,9 @@ object Analytics {
     // round on whatever thread runs it; setActiveSession is idempotent and
     // a plain thread-local write.
     SparkSession.setActiveSession(spark)
-    // Long iterative jobs accumulate one shuffle per round on executor
-    // local disk, and Spark's ContextCleaner can only reclaim a round's
-    // shuffle files after a DRIVER GC collects the dropped round-RDD
-    // references. Reclaimability itself is what GraftSqlBridge.resetStats'
-    // round-17 fix restored (pre-fix, wrapper partition arrays chained
-    // every round past checkpoint truncation — see its scaladoc); reclaim
-    // LATENCY then still depends on GC cadence, and Spark's own safety net
-    // (spark.cleaner.periodicGC.interval) fires every 30 MINUTES by
-    // default, far behind a tight kernel loop (measured: a 10⁷-vertex SCC
-    // run filled a ~70 GB /tmp with dead shuffle files and died —
-    // SCALE.md §"Volume axis", round 17). With
-    // `spark.graft.iter.gcEveryRounds` = N > 0, every Nth barrier forces a
-    // driver GC so reclaim keeps pace with the loop; a driver System.gc()
-    // is a few-hundred-ms pause amortized over N round jobs. Default 0 =
-    // off (short loops never accumulate enough to matter; clusters spread
-    // the spill across executors' local dirs).
-    val gcEvery = spark.conf.get("spark.graft.iter.gcEveryRounds", "0").toInt
-    if (gcEvery > 0 && barrierCalls.incrementAndGet() % gcEvery == 0) System.gc()
-    val ck = spark.conf.get("spark.graft.iter.barrier", "lazy") match {
-      case "reliable" =>
-        if (spark.sparkContext.getCheckpointDir.isEmpty) {
-          val dir = spark.conf.get("spark.graft.checkpointDir",
-            s"${System.getProperty("java.io.tmpdir")}/graft-ckpt-${spark.sparkContext.applicationId}")
-          spark.sparkContext.setCheckpointDir(dir)
-        }
-        df.checkpoint(true)
-      case _ => df.localCheckpoint(false) // lazy: the round's one action materializes it
-    }
+    val ck =
+      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
+      else df.localCheckpoint(false) // the round's one action materializes it
     org.apache.spark.sql.GraftSqlBridge.resetStats(ck)
   }
 
@@ -2515,14 +2443,11 @@ object Analytics {
     * hinted at two attach sites per round, so near the vertex cap they
     * would hold two concurrent several-hundred-MB broadcast relations —
     * the forced-broadcast OOM class the hubAntiJoin note warns about; they
-    * use `spark.graft.broadcast.maxEdgeRows` (default maxRows/4), which
-    * keeps the worst-case concurrent edge-broadcast bytes at or under one
-    * vertex-cap relation. */
+    * are capped at a quarter of that bound, which keeps the worst-case
+    * concurrent edge-broadcast bytes at or under one vertex-cap relation. */
   private[olap] def hint(df: DataFrame, rows: Long, edgeShaped: Boolean = false): DataFrame = {
-    val conf = df.sparkSession.conf
-    val maxRows = conf.get("spark.graft.broadcast.maxRows", "10000000").toLong
-    val cap = if (edgeShaped) conf.get("spark.graft.broadcast.maxEdgeRows",
-      (maxRows / 4L).toString).toLong else maxRows
+    val maxRows = df.sparkSession.conf.get("spark.graft.broadcast.maxRows", "10000000").toLong
+    val cap = if (edgeShaped) maxRows / 4L else maxRows
     if (rows <= cap) broadcast(df) else df
   }
 

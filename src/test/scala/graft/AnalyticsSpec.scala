@@ -736,34 +736,43 @@ class AnalyticsSpec extends AnyFunSuite {
       graft.data.PropertyGraph(graft.core.GraphSchema(), v, e2), maxRounds = 8)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m2 === m)
-    // the adaptive delta restriction (recompute only vertices with a changed
-    // neighbor) is exact: with its volume gate opened it lands on the same
-    // core numbers as the full-window rounds, on a denser random graph too —
-    // with a 10-vertex tail whose core-1 front creeps in one vertex per
-    // round, so later rounds run on a small frontier
-    val rv = (1L to 70L).map(id => (id, "v")).toDF("id", "label")
-    val re = ((1L to 400L).map(i =>
+    // a denser random graph, with a 10-vertex tail whose core-1 front creeps
+    // in one vertex per round, against the Batagelj–Zaversnik peeling
+    val pairs = (1L to 400L).map(i =>
       (i, math.abs(i * 2654435761L % 60L) + 1L, math.abs(i * 40503L % 60L) + 1L)) ++
-      (60L until 70L).map(i => (1000L + i, i, i + 1)))
-      .map { case (i, a, b) => (i, a, b, "e") }.toDF("id", "src", "dst", "label")
-    val rg = graft.data.PropertyGraph(graft.core.GraphSchema(), rv, re)
-    def cores(gr: graft.data.PropertyGraph) = {
-      val (res, conv) = Analytics.corenessConverged(gr, maxRounds = 12)
-      assert(conv)
-      res.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (60L until 70L).map(i => (1000L + i, i, i + 1))
+    val rv = (1L to 70L).map(id => (id, "v")).toDF("id", "label")
+    val re = pairs.map { case (i, a, b) => (i, a, b, "e") }.toDF("id", "src", "dst", "label")
+    val (rres, rconv) = Analytics.corenessConverged(
+      graft.data.PropertyGraph(graft.core.GraphSchema(), rv, re), maxRounds = 12)
+    assert(rconv)
+    val want = peelingCores(1L to 70L, pairs.map(p => (p._2, p._3)))
+    assert(want.values.toSet.size >= 2, "the tail and the body must differ in core")
+    assert(rres.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === want)
+  }
+
+  /** Batagelj–Zaversnik core decomposition (2003) on the simple undirected
+    * graph: repeatedly peel a vertex of least current degree; its degree
+    * when peeled is its core number. A sorted set stands in for the
+    * original's degree bins. */
+  private def peelingCores(vs: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    import scala.collection.mutable
+    val adj = mutable.Map(vs.map(_ -> mutable.Set.empty[Long]): _*)
+    for ((a, b) <- edges if a != b) { adj(a) += b; adj(b) += a }
+    val deg = mutable.Map(adj.toSeq.map { case (v, n) => v -> n.size.toLong }: _*)
+    val queue = mutable.TreeSet(deg.toSeq.map { case (v, d) => (d, v) }: _*)
+    val core = mutable.Map.empty[Long, Long]
+    while (queue.nonEmpty) {
+      val (d, v) = queue.head
+      queue -= ((d, v))
+      core(v) = d
+      for (u <- adj(v) if !core.contains(u) && deg(u) > d) {
+        queue -= ((deg(u), u))
+        deg(u) -= 1
+        queue += ((deg(u), u))
+      }
     }
-    val full = cores(rg)
-    try {
-      spark.conf.set("spark.graft.coreness.deltaMinEdges", "0")
-      assert(cores(rg) === full, "delta path (frontier-gated) differs")
-      assert(cores(g) === m)
-      spark.conf.set("spark.graft.coreness.deltaFrontierFrac", "1.0")
-      assert(cores(rg) === full, "delta path (every round from 2) differs")
-      assert(cores(g) === m)
-    } finally {
-      spark.conf.unset("spark.graft.coreness.deltaMinEdges")
-      spark.conf.unset("spark.graft.coreness.deltaFrontierFrac")
-    }
+    core.toMap
   }
 
   test("guards: absent sigma source, negative-id sentinel alias, walk id bounds") {

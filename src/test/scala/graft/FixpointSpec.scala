@@ -267,4 +267,27 @@ class FixpointSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(!sccBuilds.exists(_.contains("__lo")), s"SCC lost broadcast: $sccBuilds")
     } finally conf.foreach { case (k, _) => spark.conf.unset(k) }
   }
+
+  test("with a checkpoint directory set, round barriers checkpoint reliably; rows unchanged") {
+    val g = graph(12, (1L until 6L).map(i => (i, i + 1)) ++ Seq((7L, 8L), (8L, 9L), (9L, 7L)))
+    def rows(df: DataFrame) = (df.schema, df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq)
+    def cc = Analytics.connectedComponentsExact(g)
+    def pr = Analytics.pageRankFixedPoint(g, iterations = 4)
+    val (ccLocal, prLocal) = (rows(cc), rows(pr))
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    def rddDirs(): Int = dir.listFiles().toSeq.flatMap(d => Option(d.listFiles()).toSeq.flatten)
+      .count(_.getName.startsWith("rdd-"))
+    try {
+      spark.sparkContext.setCheckpointDir(dir.getPath)
+      assert(rows(cc) === ccLocal)
+      val afterCc = rddDirs()
+      assert(afterCc > 0, "connectedComponentsExact wrote no checkpoint")
+      assert(rows(pr) === prLocal)
+      assert(rddDirs() > afterCc, "pageRankFixedPoint wrote no checkpoint")
+    } finally {
+      org.apache.spark.CheckpointDirReset(spark.sparkContext)
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+    }
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+  }
 }

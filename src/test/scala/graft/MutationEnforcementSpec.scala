@@ -165,6 +165,29 @@ class MutationEnforcementSpec extends AnyFunSuite {
     assert(row(0).getAs[Int]("cell_lat") === 24 && row(0).getAs[Int]("cell_lon") === 19)
   }
 
+  test("mutations refresh temporal index tables (key, tsvalue, id)") {
+    val g0 = TpchGraph.load(spark, dir)
+    val day = 86400L
+    val withTs = g0.copy(vertices = g0.vertices.withColumn("seen",
+      when(col("label") === "supplier", timestamp_seconds(col("uid") * day))))
+    val ix = IndexDef("supSeen", ElementCategory.VERTEX, Seq("seen"),
+      composite = false, onlyLabel = Some("supplier"))
+    val g = withTs.copy(schema = withTs.schema.copy(indexes =
+        withTs.schema.indexes + ("supSeen" -> ix)))
+      .withIndexTable("supSeen", graft.index.Indexes.materializeTemporal(withTs, ix, Seq("seen")))
+    val newId = TpchGraph.SupplierTag * T + 9999L
+    val add = spark.range(1).select(lit(newId).as("id"), lit("supplier").as("label"),
+      lit(9999L).as("uid"), timestamp_seconds(lit(9999L * day)).as("seen"))
+    val m = GraphIO.applyMutations(g, addVertices = Some(add))
+    // still registered in its own layout, and the range lookup sees the new row
+    assert(m.indexTables.contains("supSeen"))
+    assert(m.indexTables("supSeen").columns.toSet === Set("key", "tsvalue", "id"))
+    val hit = graft.index.Indexes.lookupTemporalRange(m, m.indexTables("supSeen"), "seen",
+      timestamp_seconds(lit(9999L * day)), timestamp_seconds(lit(10000L * day)))
+      .select(col("id")).collect().map(_.getLong(0)).toSeq
+    assert(hit === Seq(newId))
+  }
+
   test("vertex-delete cascade cannot touch a static vertex's adjacency") {
     val g = staticRegionGraph
     // deleting nation 0 would cascade-remove its in_region edge — that edge

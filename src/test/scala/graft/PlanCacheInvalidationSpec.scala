@@ -124,4 +124,38 @@ class PlanCacheInvalidationSpec extends AnyFunSuite {
     val r4 = graft.index.Indexes.gatedIdSemiJoin(base, ids).collect().map(_.getLong(0)).sorted
     assert(r4.toSeq === r1.toSeq)
   }
+
+  test("a semanticHash collision between two inputs is a miss, not the other input's frame") {
+    val base = spark.range(100000).toDF("id")
+    def probe(c: Long) = base.filter(col("id") === lit(c))
+    // search for two literals whose filters hash alike: swapping the literal
+    // into one built plan costs microseconds where building a frame costs a
+    // millisecond, and the birthday bound puts a 32-bit repeat within ~10^5
+    // tries (the first pair from 0 is found at 33,866)
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val plan0 = probe(0L).queryExecution.logical
+    val seen = scala.collection.mutable.HashMap.empty[Int, Long]
+    var pair = Option.empty[(Long, Long)]
+    var c = 0L
+    while (pair.isEmpty && c < 1000000L) {
+      val h = plan0.transformAllExpressions {
+        case Literal(v, _) if v == 0L => Literal(c)
+      }.semanticHash()
+      seen.put(h, c).foreach(prev => pair = Some((prev, c)))
+      c += 1
+    }
+    val (a, b) = pair.getOrElse(fail("no semanticHash collision found"))
+    assert(probe(a).queryExecution.logical.semanticHash() ===
+      probe(b).queryExecution.logical.semanticHash(), "the search must yield a real collision")
+    val ka = PlanCache.key("spec-collide", probe(a))
+    val kb = PlanCache.key("spec-collide", probe(b))
+    assert(ka.hashCode === kb.hashCode && ka != kb)
+    val rowsA = PlanCache.cached(spark, ka)(probe(a)).collect().map(_.getLong(0)).toSeq
+    val rowsB = PlanCache.cached(spark, kb)(probe(b)).collect().map(_.getLong(0)).toSeq
+    assert(rowsA === Seq(a) && rowsB === Seq(b))
+    // parameters compare as a sequence, not as a joined string
+    assert(PlanCache.key("op", base, "a,b") != PlanCache.key("op", base, "a", "b"))
+    PlanCache.invalidate(spark, ka)
+    PlanCache.invalidate(spark, kb)
+  }
 }

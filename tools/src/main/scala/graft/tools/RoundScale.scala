@@ -24,10 +24,6 @@ object RoundScale {
       .config("spark.graft.bench.roundLog", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // ROUNDSCALE_GC=N → spark.graft.iter.gcEveryRounds=N (shuffle-reclaim
-    // pacing A/B for the long iterative arms; see roundBarrier's scaladoc)
-    sys.env.get("ROUNDSCALE_GC").foreach(n =>
-      spark.conf.set("spark.graft.iter.gcEveryRounds", n))
     val sizes = sys.env.getOrElse("ROUNDSCALE_SIZES", "10000,100000,1000000")
       .split(",").map(_.trim.toLong)
 
@@ -190,7 +186,8 @@ object RoundScale {
     // un-truncated wrapper RDDs cache pre-checkpoint partition arrays;
     // sort-merge-join partitions capture parent RDD references, chaining
     // every round's shuffles past lineage truncation. Fixed in
-    // GraftSqlBridge.resetStats; ROUNDSCALE_GC=N paces reclaim on top.
+    // GraftSqlBridge.resetStats; spark.cleaner.periodicGC.interval paces
+    // reclaim on top.
     if (kind("volscc")) sizes.foreach { n =>
       val g = mixGraph(n)
       g.edges.count()
