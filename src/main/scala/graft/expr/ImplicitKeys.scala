@@ -78,6 +78,34 @@ object ImplicitKeys {
     }
   }
 
+  /** Resolve a query key over an element frame, the same way on both query
+    * surfaces (GraphQuery and Traversal): `~`-prefixed keys through
+    * [[resolve]] (ImplicitKey.java:28-52). An UNDEFINED key reads as NULL
+    * for every element — the reference's semantics (testHasNot:
+    * hasNot('abcd') matches everything, has on an undefined key matches
+    * nothing), not an analysis error. */
+  private[graft] def keyColumn(schema: GraphSchema, df: DataFrame, key: String,
+      isVertex: Boolean): Column =
+    if (isImplicit(key)) resolve(schema, df, key, isVertex)
+    else if (columnDefined(df, key)) col(key)
+    else lit(null)
+
+  /** has(key): the element has a property ELEMENT under `key`
+    * (GraphCentricQueryBuilder.java:99-106) — an empty collection has none. */
+  private[graft] def present(schema: GraphSchema, df: DataFrame, key: String,
+      isVertex: Boolean): Column = {
+    val c = keyColumn(schema, df, key, isVertex)
+    if (isCollectionKey(schema, df, key)) c.isNotNull && size(c) > 0 else c.isNotNull
+  }
+
+  /** hasNot(key): the collection-aware complement of [[present]] (isNull OR
+    * empty on a SET/LIST key). */
+  private[graft] def absent(schema: GraphSchema, df: DataFrame, key: String,
+      isVertex: Boolean): Column = {
+    val c = keyColumn(schema, df, key, isVertex)
+    if (isCollectionKey(schema, df, key)) c.isNull || size(c) === 0 else c.isNull
+  }
+
   /** Resolve an implicit key to a Column over an element frame. */
   def resolve(schema: GraphSchema, df: DataFrame, key: String,
       isVertex: Boolean): Column = key match {

@@ -22,10 +22,13 @@ object Indexes {
     * At scale this is the broadcastable lookup side for selective equality
     * queries (the moral of GraphCentricQueryBuilder's index selection: prefer
     * the index whose key covers the most equality conjuncts). */
-  def materialize(g: PropertyGraph, ix: IndexDef): DataFrame = {
+  def materialize(g: PropertyGraph, ix: IndexDef): DataFrame =
+    scopedTable(g, ix).select((ix.keys.map(col) :+ col("id")): _*)
+
+  /** The element table an index covers, restricted to its `onlyLabel`. */
+  private def scopedTable(g: PropertyGraph, ix: IndexDef): DataFrame = {
     val table = if (ix.element == ElementCategory.VERTEX) g.vertices else g.edges
-    val scoped = ix.onlyLabel.map(l => table.filter(col("label") === l)).getOrElse(table)
-    scoped.select((ix.keys.map(col) :+ col("id")): _*)
+    ix.onlyLabel.map(l => table.filter(col("label") === l)).getOrElse(table)
   }
 
   /** Index-accelerated equality lookup: filter the materialized index on
@@ -157,8 +160,7 @@ object Indexes {
     * token for a broadcast/semi-join lookup side at scale. */
   def materializeMixed(g: PropertyGraph, ix: IndexDef): DataFrame = {
     require(!ix.composite, s"index '${ix.name}' is composite; use materialize")
-    val table = if (ix.element == ElementCategory.VERTEX) g.vertices else g.edges
-    val scoped = ix.onlyLabel.map(l => table.filter(col("label") === l)).getOrElse(table)
+    val scoped = scopedTable(g, ix)
     val textKeys = ix.keys.filter { k =>
       ix.mappings.getOrElse(k, graft.core.Mapping.DEFAULT) match {
         case graft.core.Mapping.TEXT | graft.core.Mapping.TEXTSTRING => true
@@ -185,8 +187,7 @@ object Indexes {
     * field where TEXT supports tokenized textContains). */
   def materializeString(g: PropertyGraph, ix: IndexDef): DataFrame = {
     require(!ix.composite, s"index '${ix.name}' is composite; use materialize")
-    val table = if (ix.element == ElementCategory.VERTEX) g.vertices else g.edges
-    val scoped = ix.onlyLabel.map(l => table.filter(col("label") === l)).getOrElse(table)
+    val scoped = scopedTable(g, ix)
     val stringKeys = ix.keys.filter { k =>
       ix.mappings.getOrElse(k, graft.core.Mapping.DEFAULT) match {
         case graft.core.Mapping.STRING | graft.core.Mapping.TEXTSTRING => true
@@ -219,8 +220,7 @@ object Indexes {
       keys: Seq[String] = Nil): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, StructType}
     require(!ix.composite, s"index '${ix.name}' is composite; use materialize")
-    val table = if (ix.element == ElementCategory.VERTEX) g.vertices else g.edges
-    val scoped = ix.onlyLabel.map(l => table.filter(col("label") === l)).getOrElse(table)
+    val scoped = scopedTable(g, ix)
     val ks = if (keys.nonEmpty) keys else ix.keys
     val types = scoped.schema.map(f => f.name -> f.dataType).toMap
     val parts = ks.flatMap { k =>
@@ -270,8 +270,7 @@ object Indexes {
     * family touches only its half. */
   def materializeTextString(g: PropertyGraph, ix: IndexDef): DataFrame = {
     require(!ix.composite, s"index '${ix.name}' is composite; use materialize")
-    val table = if (ix.element == ElementCategory.VERTEX) g.vertices else g.edges
-    val scoped = ix.onlyLabel.map(l => table.filter(col("label") === l)).getOrElse(table)
+    val scoped = scopedTable(g, ix)
     val tsKeys = ix.keys.filter(k =>
       ix.mappings.getOrElse(k, graft.core.Mapping.DEFAULT) == graft.core.Mapping.TEXTSTRING)
     require(tsKeys.nonEmpty, s"index '${ix.name}' has no TEXTSTRING-mapped keys")
@@ -302,8 +301,7 @@ object Indexes {
     * index's numeric fields. Persisted sorted-by-value, parquet min/max
     * stats prune range lookups to the matching row groups. */
   def materializeNumeric(g: PropertyGraph, ix: IndexDef, keys: Seq[String]): DataFrame = {
-    val table = if (ix.element == ElementCategory.VERTEX) g.vertices else g.edges
-    val scoped = ix.onlyLabel.map(l => table.filter(col("label") === l)).getOrElse(table)
+    val scoped = scopedTable(g, ix)
     keys.map { k =>
       scoped.filter(col(k).isNotNull)
         .select(lit(k).as("key"), col(k).cast("double").as("numvalue"), col("id"))
@@ -326,8 +324,7 @@ object Indexes {
     * table prunes by parquet min/max exactly like [[materializeNumeric]]. */
   def materializeTemporal(g: PropertyGraph, ix: IndexDef, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "materializeTemporal: at least one key")
-    val table = if (ix.element == ElementCategory.VERTEX) g.vertices else g.edges
-    val scoped = ix.onlyLabel.map(l => table.filter(col("label") === l)).getOrElse(table)
+    val scoped = scopedTable(g, ix)
     keys.map { k =>
       scoped.filter(col(k).isNotNull)
         .select(lit(k).as("key"), col(k).cast("timestamp").as("tsvalue"), col("id"))
@@ -542,8 +539,7 @@ object Indexes {
   def materializeGeo(g: PropertyGraph, ix: IndexDef, pointCol: Column,
       cellDeg: Double = 5.0): DataFrame = {
     require(cellDeg > 0, "cell size must be positive")
-    val table = if (ix.element == ElementCategory.VERTEX) g.vertices else g.edges
-    val scoped = ix.onlyLabel.map(l => table.filter(col("label") === l)).getOrElse(table)
+    val scoped = scopedTable(g, ix)
     val lat = pointCol.getField("coords").getItem(0)
     val lon = pointCol.getField("coords").getItem(1)
     scoped.select(

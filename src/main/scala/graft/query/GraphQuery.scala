@@ -34,17 +34,11 @@ final case class GraphQuery(
 
   def eqKeys: Set[String] = eqPairs.keySet
 
-  /** `~`-prefixed keys resolve through ImplicitKeys (~id/~label/~timestamp/
-    * ~visibility/~ttl — ImplicitKey.java:28-52). */
+  private def isVertex: Boolean = element == graft.core.ElementCategory.VERTEX
+
+  /** Keys resolve through ImplicitKeys.keyColumn, shared with Traversal. */
   private def keyCol(key: String): Column =
-    if (graft.expr.ImplicitKeys.isImplicit(key))
-      graft.expr.ImplicitKeys.resolve(graph.schema, target, key,
-        element == graft.core.ElementCategory.VERTEX)
-    // an UNDEFINED key reads as NULL for every element — the reference's
-    // semantics (testHasNot: hasNot('abcd') matches everything, has on an
-    // undefined key matches nothing), not an analysis error
-    else if (graft.expr.ImplicitKeys.columnDefined(target, key)) col(key)
-    else lit(null)
+    graft.expr.ImplicitKeys.keyColumn(graph.schema, target, key, isVertex)
 
   /** SET/LIST predicate semantics — shared with the traversal surface
     * (ImplicitKeys.cellPredicate): on a collection key the condition holds
@@ -91,13 +85,9 @@ final case class GraphQuery(
   /** has(key) — existence of a property ELEMENT (GraphCentricQueryBuilder
     * .java:99-106); an empty collection has none. */
   def has(key: String): GraphQuery =
-    copy(conds = conds :+ (if (isCollection(key))
-      keyCol(key).isNotNull && size(keyCol(key)) > 0
-    else keyCol(key).isNotNull))
+    copy(conds = conds :+ graft.expr.ImplicitKeys.present(graph.schema, target, key, isVertex))
   def hasNot(key: String): GraphQuery =
-    copy(conds = conds :+ (if (isCollection(key))
-      keyCol(key).isNull || size(keyCol(key)) === 0
-    else keyCol(key).isNull))
+    copy(conds = conds :+ graft.expr.ImplicitKeys.absent(graph.schema, target, key, isVertex))
   def hasNot(key: String, value: Any): GraphQuery = has(key, P.neq(value))
 
   def hasLabel(labels: String*): GraphQuery =

@@ -66,16 +66,9 @@ final case class Traversal(
   private def hasPath: Boolean = df.columns.contains("_path")
 
   // ---------- filter steps ----------
-  /** `~`-prefixed keys resolve through ImplicitKeys (~id/~label/~timestamp/
-    * ~visibility/~ttl — ImplicitKey.java:28-52). */
+  /** Keys resolve through ImplicitKeys.keyColumn, shared with GraphQuery. */
   private def keyCol(key: String): Column =
-    if (graft.expr.ImplicitKeys.isImplicit(key))
-      graft.expr.ImplicitKeys.resolve(graph.schema, df, key, isVertex)
-    // an UNDEFINED key reads as NULL for every element — the reference's
-    // semantics (testHasNot: hasNot('abcd') matches everything, has on an
-    // undefined key matches nothing), not an analysis error
-    else if (graft.expr.ImplicitKeys.columnDefined(df, key)) col(key)
-    else lit(null)
+    graft.expr.ImplicitKeys.keyColumn(graph.schema, df, key, isVertex)
   /** has(key, null) ≡ hasNot(key) (GraphCentricQueryBuilder.java:109-116) —
     * routed through hasNot so collection keys get the collection-aware
     * absence test (isNull OR empty) instead of cellPredicate's per-element
@@ -89,14 +82,10 @@ final case class Traversal(
     * has(key,null) rule. */
   def has(key: String, p: P): Traversal = if (p == null) hasNot(key) else copy(df = df.filter(
     graft.expr.ImplicitKeys.cellPredicate(graph.schema, df, key, keyCol(key), p.apply)))
-  def has(key: String): Traversal = copy(df = df.filter(
-    if (graft.expr.ImplicitKeys.isCollectionKey(graph.schema, df, key))
-      keyCol(key).isNotNull && F.size(keyCol(key)) > 0
-    else keyCol(key).isNotNull))
-  def hasNot(key: String): Traversal = copy(df = df.filter(
-    if (graft.expr.ImplicitKeys.isCollectionKey(graph.schema, df, key))
-      keyCol(key).isNull || F.size(keyCol(key)) === 0
-    else keyCol(key).isNull))
+  def has(key: String): Traversal =
+    copy(df = df.filter(graft.expr.ImplicitKeys.present(graph.schema, df, key, isVertex)))
+  def hasNot(key: String): Traversal =
+    copy(df = df.filter(graft.expr.ImplicitKeys.absent(graph.schema, df, key, isVertex)))
   def hasLabel(ls: String*): Traversal = {
     val filtered = if (ls.size == 1) df.filter(col("label") === ls.head)
                    else df.filter(col("label").isin(ls: _*))
@@ -122,21 +111,35 @@ final case class Traversal(
     copy(df = df.join(other.df.select(col(otherKey).as("__k")).distinct(),
       col(thisKey) === col("__k"), "left_anti"))
 
-  /** The ids of source elements for which `step` yields ≥1 result —
-    * the shared engine behind every traversal-valued predicate. Compiled as
-    * provenance-carrying sub-traversal + distinct on the source id; consumers
-    * semi/anti-join it (never a count — emptiness is all Gremlin asks). */
-  private def subMatches(step: Traversal => Traversal, tag: String): DataFrame =
-    step(this.as(tag)).df.select(col(s"_as_${tag}_id").as("__sid")).distinct()
+  /** Run `step` from this frontier with source provenance — the shared
+    * engine behind every traversal-valued predicate and branch. A reserved
+    * `as(tag)` rides through the hops; the result is the stepped traversal
+    * with the tag's carry columns dropped, and the distinct ids (`__sid`) of
+    * the source elements for which `step` yields ≥1 result. Consumers
+    * semi/anti-join those ids through [[splitOn]] (never a count —
+    * emptiness is all Gremlin asks). */
+  private def subRun(step: Traversal => Traversal, tag: String): (Traversal, DataFrame) = {
+    val stepped = step(this.as(tag))
+    val carry = stepped.df.columns.filter(_.startsWith(s"_as_${tag}_")).toSeq
+    (stepped.copy(df = stepped.df.drop(carry: _*)),
+      stepped.df.select(col(s"_as_${tag}_id").as("__sid")).distinct())
+  }
+
+  /** Split this frontier on [[subRun]]'s matched source ids: (the rows
+    * whose id matched, the rest) — a left-semi and a left-anti join on one
+    * id frame. */
+  private def splitOn(ids: DataFrame): (DataFrame, DataFrame) =
+    (df.join(ids, col("id") === col("__sid"), "left_semi"),
+      df.join(ids, col("id") === col("__sid"), "left_anti"))
 
   /** where(subTraversal) — keep traversers whose sub-traversal produces at
     * least one result (TinkerPop `where(out('knows'))`). */
   def whereSub(step: Traversal => Traversal): Traversal =
-    copy(df = df.join(subMatches(step, "__whr"), col("id") === col("__sid"), "left_semi"))
+    copy(df = splitOn(subRun(step, "__whr")._2)._1)
 
   /** where(not(subTraversal)) — the negated form (anti-join). */
   def whereNotSub(step: Traversal => Traversal): Traversal =
-    copy(df = df.join(subMatches(step, "__whr"), col("id") === col("__sid"), "left_anti"))
+    copy(df = splitOn(subRun(step, "__whr")._2)._2)
 
   /** where(sub.count().is(p)) — keep traversers whose sub-traversal yields a
     * RESULT COUNT satisfying `p` (TinkerPop `where(__.out().count().is(gt(2)))`
@@ -848,12 +851,8 @@ final case class Traversal(
     * carried through the step via a reserved `as` label so the unmatched set
     * is computed on source ids, not stepped ids. */
   def optional(step: Traversal => Traversal): Traversal = {
-    val stepped = step(this.as("__opt"))
-    val steppedClean = stepped.df.drop(
-      stepped.df.columns.filter(_.startsWith("_as___opt_")).toSeq: _*)
-    val matchedSrc = stepped.df.select(col("_as___opt_id").as("__sid")).distinct()
-    val unmatched = df.join(matchedSrc, col("id") === col("__sid"), "left_anti")
-    copy(df = steppedClean.unionByName(unmatched, allowMissingColumns = true))
+    val (stepped, matched) = subRun(step, "__opt")
+    copy(df = stepped.df.unionByName(splitOn(matched)._2, allowMissingColumns = true))
   }
 
   /** match()-style pattern conjunction (Gremlin match ⇒ multi-way join
@@ -899,11 +898,14 @@ final case class Traversal(
     * selectivity-ordered planning as the single-alias form. */
   def matchAllOn(aliases: Seq[String], patterns: Traversal*): Traversal = {
     require(patterns.nonEmpty)
-    def estSize(t: Traversal): BigInt =
-      t.df.queryExecution.optimizedPlan.stats.sizeInBytes
     val ordered = patterns.sortBy(estSize)
     ordered.tail.foldLeft(copy(df = ordered.head.df))((acc, p) => acc.matchOnAll(p, aliases))
   }
+
+  /** A pattern's estimated size from Catalyst's logical stats (no count job),
+    * the match planners' selectivity order. */
+  private def estSize(t: Traversal): BigInt =
+    t.df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** match with HETEROGENEOUS binding sets (TinkerPop MatchStep's general
     * case — patterns need not all carry the same variables): the FIRST
@@ -923,8 +925,6 @@ final case class Traversal(
         case c if c.startsWith("_as_") && c.endsWith("_id") =>
           c.stripPrefix("_as_").stripSuffix("_id")
       }.toSet
-    def estSize(t: Traversal): BigInt =
-      t.df.queryExecution.optimizedPlan.stats.sizeInBytes
     constraints.sortBy(estSize).foldLeft(copy(df = anchor.df)) { (acc, p) =>
       val shared = (aliases(acc.df) intersect aliases(p.df)).toSeq.sorted
       require(shared.nonEmpty,
@@ -950,11 +950,9 @@ final case class Traversal(
   def chooseSub(predStep: Traversal => Traversal)(
       trueStep: Traversal => Traversal,
       falseStep: Traversal => Traversal): Traversal = {
-    val matched = subMatches(predStep, "__chs")
-    val t = trueStep(copy(df = sackBranchEntry(
-      df.join(matched, col("id") === col("__sid"), "left_semi"))))
-    val f = falseStep(copy(df = sackBranchEntry(
-      df.join(matched, col("id") === col("__sid"), "left_anti"))))
+    val (hit, miss) = splitOn(subRun(predStep, "__chs")._2)
+    val t = trueStep(copy(df = sackBranchEntry(hit)))
+    val f = falseStep(copy(df = sackBranchEntry(miss)))
     mergeBranches(Seq(t, f))
   }
 
@@ -995,13 +993,10 @@ final case class Traversal(
     var remaining = this
     val branches = scala.collection.mutable.ArrayBuffer.empty[Traversal]
     steps.foreach { step =>
-      val stepped = step(remaining.copy(df = sackBranchEntry(remaining.df)).as("__coal"))
-      val clean = stepped.df.drop(
-        stepped.df.columns.filter(_.startsWith("_as___coal_")).toSeq: _*)
-      val matchedSrc = stepped.df.select(col("_as___coal_id").as("__sid")).distinct()
-      branches += stepped.copy(df = clean)
-      remaining = remaining.copy(df =
-        remaining.df.join(matchedSrc, col("id") === col("__sid"), "left_anti"))
+      val (stepped, matched) =
+        remaining.copy(df = sackBranchEntry(remaining.df)).subRun(step, "__coal")
+      branches += stepped
+      remaining = remaining.copy(df = remaining.splitOn(matched)._2)
     }
     mergeBranches(branches.toSeq)
   }
@@ -1210,81 +1205,81 @@ final case class Traversal(
     df.groupBy(col(key)).agg(F.collect_list(col(valueKey)).as("values"))
 
   // ---------- iteration ----------
-  /** Per-round lineage truncation for the repeat-family loops. A frontier
-    * referenced k≥2 times per round (exit-filter + continue-filter, or
-    * emit-accumulator + next step, or an until-subtraversal that hops from
-    * it again) grows the ANALYZED plan ~k^rounds without truncation —
-    * Catalyst re-walks the whole subtree per rule, so a 3-round
-    * until-subtraversal loop already costs MINUTES of driver CPU purely in
-    * analysis. A LAZY local checkpoint rewrites the logical plan to a
-    * LogicalRDD immediately (no job now; the RDD materializes with the first
-    * downstream action and stays persisted for the other references) — the
-    * per-superstep materialization every BSP engine performs, same mechanism
-    * as barrier(). Plain repeat(n) references its frontier once per round
-    * (linear plan growth) and skips the barrier. */
-  private def roundBarrier(t: Traversal): Traversal =
-    t.copy(df = t.df.localCheckpoint(false))
+  /** The one RepeatStep loop (Gremlin repeat() with its times/until/emit
+    * modulators) — a driver-side loop of `n` rounds of joins, each round one
+    * `step` of the whole frontier. `emit` picks the rows a frontier
+    * surfaces at a depth: the source at depth 0 when `emitFirst`
+    * (emit().repeat()), then each round's frontier at that round's depth.
+    * `until` splits a round's frontier into the rows that leave the loop
+    * and the traversal that keeps stepping. The result is the emitted rows
+    * when `emit` is given (leavers were already emitted), else the leavers
+    * plus the final frontier.
+    *
+    * Every variant but plain repeat(n) references its frontier twice per
+    * round (emit + next step, or leave + stay), which grows the analyzed
+    * plan ~2^rounds without truncation (a 3-round until-subtraversal loop
+    * spent minutes of driver CPU in analysis alone). So each round's
+    * frontier goes through [[barrier]]: a lazy local checkpoint turns the
+    * plan into a LogicalRDD leaf at once, and the RDD materializes with the
+    * first downstream action (the per-superstep materialization every BSP
+    * engine performs; no job now). Plain repeat(n) references its frontier
+    * once per round, grows linearly, skips the barrier and returns the
+    * stepped traversal itself. */
+  private def repeatLoop(n: Int, step: Traversal => Traversal,
+      emit: Option[(Traversal, Int) => DataFrame], emitFirst: Boolean = true,
+      until: Option[Traversal => (DataFrame, Traversal)] = None): Traversal =
+    if (emit.isEmpty && until.isEmpty) (1 to n).foldLeft(this)((t, _) => step(t))
+    else {
+      var out = if (emitFirst) emit.map(_(this, 0)) else None
+      def add(rows: DataFrame): Unit =
+        out = Some(out.fold(rows)(_.unionByName(rows, allowMissingColumns = true)))
+      var cur = this
+      (1 to n).foreach { d =>
+        cur = step(cur).barrier()
+        emit.foreach(e => add(e(cur, d)))
+        until.foreach { split =>
+          val (leave, stay) = split(cur)
+          if (emit.isEmpty) add(leave)
+          cur = stay
+        }
+      }
+      if (emit.isEmpty) add(cur.df)
+      copy(df = out.get)
+    }
+
+  /** until(cond) split: traversers satisfying `cond` leave; a NULL
+    * condition keeps stepping. */
+  private def untilCond(cond: Column)(t: Traversal): (DataFrame, Traversal) =
+    (t.df.filter(cond), t.copy(df = t.df.filter(!F.coalesce(cond, lit(false)))))
 
   /** repeat(n)(step) — bounded driver-side loop of joins (repeat().times(n));
     * unbounded/conditional iteration belongs to graft.olap (Pregel). */
-  def repeat(n: Int)(step: Traversal => Traversal): Traversal =
-    (1 to n).foldLeft(this)((t, _) => step(t))
+  def repeat(n: Int)(step: Traversal => Traversal): Traversal = repeatLoop(n, step, None)
 
   /** repeat(n).emit() — union every intermediate frontier with the final one
     * (Gremlin emit(): traversers surface at each loop turn). */
-  def repeatEmit(n: Int)(step: Traversal => Traversal): Traversal = {
-    var cur = this
-    var acc = this.df
-    (1 to n).foreach { _ =>
-      cur = roundBarrier(step(cur))
-      acc = acc.unionByName(cur.df, allowMissingColumns = true)
-    }
-    copy(df = acc)
-  }
-
-  /** Loop until the frontier empties (or maxIter). One Spark job per check —
-    * driver-coordinated BSP like the reference's FulgoraGraphComputer loop
-    * (FulgoraGraphComputer.java:151-189). */
-  def repeatUntilEmpty(maxIter: Int)(step: Traversal => Traversal): Traversal = {
-    var cur = this
-    var i = 0
-    while (i < maxIter && cur.df.limit(1).count() > 0) {
-      cur = roundBarrier(step(cur)); i += 1
-    }
-    cur
-  }
+  def repeatEmit(n: Int)(step: Traversal => Traversal): Traversal =
+    repeatLoop(n, step, Some((t, _) => t.df))
 
   /** repeat(step).until(cond) — DO-WHILE like Gremlin's RepeatStep with a
     * trailing until(): every traverser takes at least one step, then those
     * satisfying `cond` exit and are emitted; the rest keep stepping. After
-    * `maxIter` rounds the remaining frontier is emitted as-is (the
-    * times()-bounded until). Pure plan composition — no driver-side
+    * `maxIter` rounds (at least 1) the remaining frontier is emitted as-is
+    * (the times()-bounded until). Pure plan composition — no driver-side
     * counting; the loop unrolls to maxIter filtered step-unions. */
   def repeatUntil(cond: Column, maxIter: Int)(step: Traversal => Traversal): Traversal = {
-    var frontier = this
-    var done: Option[DataFrame] = None
-    (1 to maxIter).foreach { _ =>
-      frontier = roundBarrier(step(frontier))
-      val finished = frontier.df.filter(cond)
-      done = Some(done.fold(finished)(_.unionByName(finished, allowMissingColumns = true)))
-      frontier = frontier.copy(df = frontier.df.filter(!F.coalesce(cond, lit(false))))
-    }
-    copy(df = done.get.unionByName(frontier.df, allowMissingColumns = true))
+    require(maxIter >= 1, s"repeatUntil: maxIter must be at least 1, got $maxIter")
+    repeatLoop(maxIter, step, None, until = Some(untilCond(cond)))
   }
 
   /** repeat(step).emit().until(cond) — each round's frontier is emitted, and
     * traversers satisfying `cond` exit the loop (Gremlin's combined
     * emit()+until(): an element emitted at depth d keeps stepping while the
-    * until-condition fails, so its successors surface at depth d+1 too). */
+    * until-condition fails, so its successors surface at depth d+1 too).
+    * `maxIter` must be at least 1. */
   def repeatEmitUntil(cond: Column, maxIter: Int)(step: Traversal => Traversal): Traversal = {
-    var frontier = this
-    var acc: Option[DataFrame] = None
-    (1 to maxIter).foreach { _ =>
-      frontier = roundBarrier(step(frontier))
-      acc = Some(acc.fold(frontier.df)(_.unionByName(frontier.df, allowMissingColumns = true)))
-      frontier = frontier.copy(df = frontier.df.filter(!F.coalesce(cond, lit(false))))
-    }
-    copy(df = acc.get)
+    require(maxIter >= 1, s"repeatEmitUntil: maxIter must be at least 1, got $maxIter")
+    repeatLoop(maxIter, step, Some((t, _) => t.df), emitFirst = false, until = Some(untilCond(cond)))
   }
 
   /** repeat(n).emit() with the loop counter exposed — Gremlin's `loops()`
@@ -1293,16 +1288,8 @@ final case class Traversal(
     * (source = 0). The relational form of loops(): downstream filters/
     * projections read the column like any other (`has("_depth", …)`,
     * `values("_depth", …)`). */
-  def repeatEmitDepth(n: Int)(step: Traversal => Traversal): Traversal = {
-    var cur = this
-    var acc = this.df.withColumn("_depth", lit(0))
-    (1 to n).foreach { d =>
-      cur = roundBarrier(step(cur))
-      acc = acc.unionByName(cur.df.withColumn("_depth", lit(d)),
-        allowMissingColumns = true)
-    }
-    copy(df = acc)
-  }
+  def repeatEmitDepth(n: Int)(step: Traversal => Traversal): Traversal =
+    repeatLoop(n, step, Some((t, d) => t.df.withColumn("_depth", lit(d))))
 
   /** emit(predicate).repeat(step) — emit() with a FILTER: the source frontier
     * and each round's frontier surface ONLY where `emitCond` holds, but every
@@ -1311,53 +1298,30 @@ final case class Traversal(
     * predicate: `emit(hasLabel('person')).repeat(out())`; the until- and
     * emit-conditions are independent controls). `emitCond` must resolve on
     * every round's frontier — label/id and shared property columns do. */
-  def repeatEmitFilter(n: Int, emitCond: Column)(step: Traversal => Traversal): Traversal = {
-    var cur = this
-    var acc = this.df.filter(emitCond)
-    (1 to n).foreach { _ =>
-      cur = roundBarrier(step(cur))
-      acc = acc.unionByName(cur.df.filter(emitCond), allowMissingColumns = true)
-    }
-    copy(df = acc)
-  }
+  def repeatEmitFilter(n: Int, emitCond: Column)(step: Traversal => Traversal): Traversal =
+    repeatLoop(n, step, Some((t, _) => t.df.filter(emitCond)))
 
   /** emit(subTraversal).repeat(step) — the emit filter is a sub-traversal:
     * a traverser surfaces at a round iff its emit sub-traversal yields ≥1
     * result there (Gremlin `emit(__.out('created')).repeat(out())`). Same
     * per-round semi-join engine as [[whereSub]]/[[repeatUntilSub]]. */
   def repeatEmitSub(n: Int, emitStep: Traversal => Traversal)(
-      step: Traversal => Traversal): Traversal = {
-    def emitted(t: Traversal): DataFrame =
-      t.df.join(t.subMatches(emitStep, "__emt"), col("id") === col("__sid"), "left_semi")
-    var cur = this
-    var acc = emitted(this)
-    (1 to n).foreach { _ =>
-      cur = roundBarrier(step(cur))
-      acc = acc.unionByName(emitted(cur), allowMissingColumns = true)
-    }
-    copy(df = acc)
-  }
+      step: Traversal => Traversal): Traversal =
+    repeatLoop(n, step, Some((t, _) => t.splitOn(t.subRun(emitStep, "__emt")._2)._1))
 
   /** repeat(step).until(condTraversal) — traversers exit when their condition
     * sub-traversal becomes empty (`exitWhenEmpty=true` — Gremlin's
     * `until(__.out().count().is(0))`) or non-empty (`until(__.out('knows'))`).
-    * Same unrolled do-while as repeatUntil with the Column predicate replaced
-    * by a per-source semi/anti-join on the condition frame. */
+    * Same unrolled do-while as repeatUntil (`maxIter` at least 1) with the
+    * Column predicate replaced by a per-source semi/anti-join on the
+    * condition frame. */
   def repeatUntilSub(condStep: Traversal => Traversal, maxIter: Int,
       exitWhenEmpty: Boolean = true)(step: Traversal => Traversal): Traversal = {
-    val (exitType, stayType) =
-      if (exitWhenEmpty) ("left_anti", "left_semi") else ("left_semi", "left_anti")
-    var frontier = this
-    var done: Option[DataFrame] = None
-    (1 to maxIter).foreach { _ =>
-      frontier = roundBarrier(step(frontier))
-      val matched = frontier.subMatches(condStep, "__unt")
-      val finished = frontier.df.join(matched, col("id") === col("__sid"), exitType)
-      done = Some(done.fold(finished)(_.unionByName(finished, allowMissingColumns = true)))
-      frontier = frontier.copy(df =
-        frontier.df.join(matched, col("id") === col("__sid"), stayType))
-    }
-    copy(df = done.get.unionByName(frontier.df, allowMissingColumns = true))
+    require(maxIter >= 1, s"repeatUntilSub: maxIter must be at least 1, got $maxIter")
+    repeatLoop(maxIter, step, None, until = Some { t =>
+      val (hit, miss) = t.splitOn(t.subRun(condStep, "__unt")._2)
+      if (exitWhenEmpty) (miss, t.copy(df = hit)) else (hit, t.copy(df = miss))
+    })
   }
 
   def toDF: DataFrame = df

@@ -172,6 +172,20 @@ class TraversalModulationSpec extends AnyFunSuite {
     assert(plain.contains("customer")) // the until() is what cut depth 2
   }
 
+  test("until-variants reject maxIter < 1 and name the step") {
+    // an until loop emits its leavers plus the last frontier, so it needs
+    // at least one round; 0 used to end in None.get
+    val v = g.traversal.V().hasLabel("region")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "repeatUntil" -> (() => v.repeatUntil(col("label") === "nation", 0)(_.in())),
+      "repeatEmitUntil" -> (() => v.repeatEmitUntil(col("label") === "nation", 0)(_.in())),
+      "repeatUntilSub" -> (() => v.repeatUntilSub(_.in(), 0)(_.in())))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(name) && e.getMessage.contains("maxIter"), e.getMessage)
+    }
+  }
+
   test("repeatEmitFilter emits matching frontiers but steps everyone") {
     // filter: nations+suppliers. Depth 1 = nations (pass), depth 2 =
     // customers+suppliers (suppliers pass); customers are walked, not emitted
