@@ -103,34 +103,99 @@ final case class Traversal(
               else df.filter(col("id").isin(ids: _*)))
   def filterWhere(c: Column): Traversal = copy(df = df.filter(c))
 
-  /** where(exists subtraversal) / where(not(...)) — semi/anti join formulation. */
+  /** where(exists subtraversal) / where(not(...)) — semi/anti join formulation.
+    * A filter: every traverser, duplicates included, is kept or dropped on
+    * its own `thisKey`. */
   def whereExists(other: Traversal, thisKey: String = "id", otherKey: String = "id"): Traversal =
-    copy(df = df.join(other.df.select(col(otherKey).as("__k")).distinct(),
-      col(thisKey) === col("__k"), "left_semi"))
+    copy(df = splitOn(other.df.select(col(otherKey).as("__sid")).distinct(), thisKey)._1)
   def whereNotExists(other: Traversal, thisKey: String = "id", otherKey: String = "id"): Traversal =
-    copy(df = df.join(other.df.select(col(otherKey).as("__k")).distinct(),
-      col(thisKey) === col("__k"), "left_anti"))
+    copy(df = splitOn(other.df.select(col(otherKey).as("__sid")).distinct(), thisKey)._2)
 
   /** Run `step` from this frontier with source provenance — the shared
-    * engine behind every traversal-valued predicate and branch. A reserved
-    * `as(tag)` rides through the hops; the result is the stepped traversal
-    * with the tag's carry columns dropped, and the distinct ids (`__sid`) of
-    * the source elements for which `step` yields ≥1 result. Consumers
-    * semi/anti-join those ids through [[splitOn]] (never a count —
-    * emptiness is all Gremlin asks). */
-  private def subRun(step: Traversal => Traversal, tag: String): (Traversal, DataFrame) = {
-    val stepped = step(this.as(tag))
+    * engine behind every traversal-valued predicate, branch, by(), local()
+    * and project().by(). A reserved `as(tag)` rides through the hops; the
+    * result is the stepped traversal with the tag's carry columns dropped
+    * and the source element's id as `__sid`.
+    *
+    * `once` names the frontier columns whose distinct values spawn ONE
+    * sub-run each (TinkerPop runs a sub-traversal per traverser, and
+    * traversers alike in those columns yield the same rows). The default,
+    * `id`, runs the step once per source element, for the per-element
+    * values whose join-back keeps each traverser's own row; among same-id
+    * duplicates that differ in path/as/sack history, one representative row
+    * spawns the sub. A deduplicated run adds `__n`, the number of
+    * traversers in the group, and `__k`, the group's key, unless
+    * [[distinctIds]] proves there is nothing to deduplicate. With no
+    * columns every traverser spawns its own sub-run.
+    *
+    * A sub-step nested inside another of its kind (optional inside
+    * optional, local inside local) takes the tag with a `_` appended, so
+    * dropping its carry columns leaves the enclosing step's provenance. */
+  private def perSource(step: Traversal => Traversal, tag0: String,
+      once: Seq[String] = Seq("id")): Traversal = {
+    val tag = Iterator.iterate(tag0)(_ + "_")
+      .find(t => !df.columns.exists(_.startsWith(s"_as_${t}_"))).get
+    val (n, k) = (s"_as_${tag}_n", s"_as_${tag}_k")
+    val dedup = once.nonEmpty && !distinctIds
+    val rest = df.columns.filterNot(once.contains).toSeq.map(c => F.first(col(c)).as(c))
+    val from = if (!dedup) this else copy(df = df.groupBy(once.map(col): _*)
+      .agg(F.count(lit(1)).as(n), rest: _*).withColumn(k, F.struct(once.map(col): _*))
+      .select((df.columns :+ n :+ k).toSeq.map(col): _*))
+    val stepped = step(from.as(tag))
     val carry = stepped.df.columns.filter(_.startsWith(s"_as_${tag}_")).toSeq
-    (stepped.copy(df = stepped.df.drop(carry: _*)),
-      stepped.df.select(col(s"_as_${tag}_id").as("__sid")).distinct())
+    val prov = Map("__sid" -> col(s"_as_${tag}_id")) ++
+      (if (dedup) Map("__n" -> col(n), "__k" -> col(k)) else Map.empty)
+    stepped.copy(df = stepped.df.withColumns(prov).drop(carry: _*))
   }
 
-  /** Split this frontier on [[subRun]]'s matched source ids: (the rows
-    * whose id matched, the rest) — a left-semi and a left-anti join on one
-    * id frame. */
-  private def splitOn(ids: DataFrame): (DataFrame, DataFrame) =
-    (df.join(ids, col("id") === col("__sid"), "left_semi"),
-      df.join(ids, col("id") === col("__sid"), "left_anti"))
+  /** Whether this frontier provably holds each element at most once: it is
+    * a row subset of the vertex or edge table (whose ids are unique) —
+    * filters, sorts, limits and projections that keep `id` — or an
+    * id-dedup. V()/E() frontiers and their filters are; a hop's join is
+    * not. Skips a dedup shuffle that could change nothing. */
+  private def distinctIds: Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val tables = Seq(graph.vertices, graph.edges).map(_.queryExecution.analyzed)
+    def subset(p: LogicalPlan): Boolean = tables.exists(_.sameResult(p)) || (p match {
+      case d: Deduplicate => d.keys.map(_.name) == Seq("id")
+      case pr: Project => subset(pr.child) && pr.projectList
+        .collectFirst { case a: Attribute if a.name == "id" => a }.exists(pr.child.outputSet.contains)
+      case _: Filter | _: Sort | _: GlobalLimit | _: LocalLimit | _: Offset => subset(p.children.head)
+      case _ => false
+    })
+    subset(df.queryExecution.analyzed)
+  }
+
+  /** [[perSource]]'s per-traverser run split for the traversal-valued
+    * predicates and branches: the stepped traversal, and the distinct ids
+    * (`__sid`) of the source elements for which `step` yields ≥1 result.
+    * Consumers semi/anti-join those ids through [[splitOn]] (never a count
+    * — emptiness is all Gremlin asks). */
+  private def subRun(step: Traversal => Traversal, tag: String): (Traversal, DataFrame) = {
+    val stepped = perSource(step, tag, once = Nil)
+    (stepped.copy(df = stepped.df.drop("__sid")), stepped.df.select(col("__sid")).distinct())
+  }
+
+  /** Split this frontier on a frame of ids (`__sid`): (the rows whose `key`
+    * matched, the rest) — a left-semi and a left-anti join on one id
+    * frame. */
+  private def splitOn(ids: DataFrame, key: String = "id"): (DataFrame, DataFrame) =
+    (df.join(ids, col(key) === col("__sid"), "left_semi"),
+      df.join(ids, col(key) === col("__sid"), "left_anti"))
+
+  /** The per-source value with default: [[perSource]]'s rows folded by
+    * `value` per source element, left-joined onto every traverser of `on`
+    * (this frontier, or a frame built on it) as column `tag`. A source whose
+    * sub-run is empty gets `default` (Gremlin by(out().count()) yields 0
+    * there). One aggregate + one join — never a per-element subquery. */
+  private def perSourceValue(on: DataFrame, step: Traversal => Traversal, value: Column,
+      default: Column, tag: String): DataFrame = {
+    val vals = perSource(step, tag).df.groupBy(col("__sid")).agg(value.as(tag))
+    on.join(vals, col("id") === col("__sid"), "left")
+      .withColumn(tag, F.coalesce(col(tag), default))
+      .drop("__sid")
+  }
 
   /** where(subTraversal) — keep traversers whose sub-traversal produces at
     * least one result (TinkerPop `where(out('knows'))`). */
@@ -158,14 +223,9 @@ final case class Traversal(
     * [[whereSub]], the sub is treated as element-pure: among same-id
     * duplicates differing only in path/as history, one representative row
     * spawns the sub. */
-  def whereCount(p: graft.expr.P)(step: Traversal => Traversal): Traversal = {
-    val once = copy(df = df.dropDuplicates("id"))
-    val counts = step(once.as("__whc")).df
-      .groupBy(col("_as___whc_id").as("__sid")).agg(F.count(lit(1)).as("__n"))
-    copy(df = df.join(counts, col("id") === col("__sid"), "left")
-      .filter(p.apply(F.coalesce(col("__n"), lit(0L))))
-      .drop("__sid", "__n"))
-  }
+  def whereCount(p: graft.expr.P)(step: Traversal => Traversal): Traversal =
+    copy(df = perSourceValue(df, step, F.count(lit(1)), lit(0L), "__whc")
+      .filter(p.apply(col("__whc"))).drop("__whc"))
 
   /** where('a', P, 'b') — TinkerPop WherePredicateStep over two as-label
     * BINDINGS (`where("a", P.neq("b"))`): keep traversers whose `a` binding
@@ -176,10 +236,11 @@ final case class Traversal(
     * scope default TinkerPop applies inside where(), same as plain select);
     * FIRST pins the earliest occurrence (`where(select(Pop.first,'a')…)`).
     * Pop.ALL is not a single binding and is rejected, as in the reference.
-    * Pure per-row filter on carried id columns — no join, no shuffle. */
+    * Pure per-row filter on carried id columns — no join, no shuffle; every
+    * traverser, duplicates included, is tested on its own bindings. */
   def whereLabels(a: String, cmp: (Column, Column) => Column, b: String,
       popA: Pop = Pop.Last, popB: Pop = Pop.Last): Traversal =
-    copy(df = df.filter(cmp(popBinding(a, popA)._1, popBinding(b, popB)._1)))
+    copy(df = df.filter(cmp(single(a, popA)._1, single(b, popB)._1)))
 
   /** where('a', P, 'b').by(key) — the by()-MODULATED WherePredicateStep:
     * the predicate compares the two bindings' `key` property values instead
@@ -188,35 +249,57 @@ final case class Traversal(
     * back from its element table on the carried id (the same
     * resolve-at-use scheme as select().by()); both joins are equi-joins on
     * ids, broadcast/AQE-planned — never a per-traverser lookup. Pop
-    * resolution as in [[whereLabels]]. */
+    * resolution as in [[whereLabels]]. A per-row filter: every traverser,
+    * duplicates included, is tested on its own bindings. */
   def whereLabelsBy(a: String, cmp: (Column, Column) => Column, b: String,
       key: String, popA: Pop = Pop.Last, popB: Pop = Pop.Last): Traversal = {
-    val (ca, va) = popBinding(a, popA)
-    val (cb, vb) = popBinding(b, popB)
-    def side(isV: Boolean, tag: String) =
-      (if (isV) graph.vertices else graph.edges)
-        .select(col("id").as(s"__wb${tag}_id"), col(key).as(s"__wb${tag}_v"))
-    copy(df = df
-      .join(side(va, "a"), ca === col("__wba_id"))
-      .join(side(vb, "b"), cb === col("__wbb_id"))
-      .filter(cmp(col("__wba_v"), col("__wbb_v")))
-      .drop("__wba_id", "__wba_v", "__wbb_id", "__wbb_v"))
+    val joined = joinBinding(joinBinding(df, single(a, popA), Seq(key), "__wba_"),
+      single(b, popB), Seq(key), "__wbb_")
+    copy(df = joined.filter(cmp(col(s"__wba_$key"), col(s"__wbb_$key")))
+      .drop("__wba_id", s"__wba_$key", "__wbb_id", s"__wbb_$key"))
   }
 
-  /** Resolve one as-label binding under Pop: the occurrence's id column and
-    * whether that occurrence is a vertex. */
-  private def popBinding(name: String, pop: Pop): (Column, Boolean) = {
+  // ---------- as-label bindings ----------
+  /** The id column of as-label `name`'s latest occurrence; fails when the
+    * traversal carries no such label. */
+  private def bindingId(name: String): String = {
     val idc = s"_as_${name}_id"
-    val allc = s"_as_${name}_ids"
     require(df.columns.contains(idc), s"no as('$name') label in traversal")
+    idc
+  }
+
+  /** Resolve one as-label binding under Pop: the occurrence's column and
+    * whether that occurrence is a vertex. LAST is the latest occurrence's
+    * id, FIRST the earliest's (from the occurrence list a reused label
+    * carries), ALL the occurrence id list (one element when the label never
+    * repeats). */
+  private def popBinding(name: String, pop: Pop = Pop.Last): (Column, Boolean) = {
+    val idc = col(bindingId(name))
+    val all = s"_as_${name}_ids"
+    val reused = df.columns.contains(all)
     pop match {
-      case Pop.All => throw new IllegalArgumentException(
-        "where() compares single bindings; Pop.ALL is a list — use selectPop")
-      case Pop.First if df.columns.contains(allc) =>
-        (col(allc).getItem(0), asFirstMeta.getOrElse(name, true))
-      case Pop.First => (col(idc), asFirstMeta.getOrElse(name, true))
-      case _ => (col(idc), asMeta.getOrElse(name, true))
+      case Pop.All => (if (reused) col(all) else F.array(idc), asMeta.getOrElse(name, true))
+      case Pop.First => (if (reused) col(all).getItem(0) else idc, asFirstMeta.getOrElse(name, true))
+      case Pop.Last => (idc, asMeta.getOrElse(name, true))
     }
+  }
+
+  /** A single binding for where(): Pop.ALL is a list, not a binding. */
+  private def single(name: String, pop: Pop): (Column, Boolean) = {
+    require(pop != Pop.All, "where() compares single bindings; Pop.ALL is a list — use selectPop")
+    popBinding(name, pop)
+  }
+
+  /** Join a binding's element row back onto `on` by the carried id (the
+    * resolve-at-use half of [[as]]): `binding` is a [[popBinding]] pair,
+    * and the vertex or edge table's `id` and `keys` land as
+    * `<prefix><key>` columns. */
+  private def joinBinding(on: DataFrame, binding: (Column, Boolean), keys: Seq[String],
+      prefix: String): DataFrame = {
+    val (id, isV) = binding
+    val table = if (isV) graph.vertices else graph.edges
+    on.join(table.select(("id" +: keys).distinct.map(k => col(k).as(prefix + k)): _*),
+      id === col(prefix + "id"))
   }
 
   /** local(step.groupCount().by(key)) — the groupCount runs in PER-SOURCE-
@@ -226,13 +309,13 @@ final case class Traversal(
     * Sources whose sub-traversal is empty yield no rows (an empty local
     * map). Compiled as a single aggregate keyed by (carried source id,
     * key) — provenance rides as a carry column through the hops, never a
-    * per-element subquery. */
-  def localGroupCount(step: Traversal => Traversal, key: String): DataFrame = {
-    val stepped = step(this.as("__lgc"))
-    stepped.df
-      .groupBy(col("_as___lgc_id").as("source"), col(key).as(key))
+    * per-element subquery. Duplicate traversers on one element share its
+    * rows: the sub runs once per source element, and the element appears
+    * once. */
+  def localGroupCount(step: Traversal => Traversal, key: String): DataFrame =
+    perSource(step, "__lgc").df
+      .groupBy(col("__sid").as("source"), col(key).as(key))
       .agg(F.count(lit(1)).as("count"))
-  }
 
   // ---------- hops ----------
   def out(labels: String*): Traversal = hop(Direction.OUT, labels, toVertex = true)
@@ -380,25 +463,15 @@ final case class Traversal(
     * occurrence id list as one comma-joined string column `<name>_ids`
     * (stringified — list cells don't survive the driver's canonicalizer).
     * First/last resolution is the same id-carry + join-back-at-projection
-    * scheme as `select` — Pop costs nothing while the traversal streams. */
+    * scheme as `select` — Pop costs nothing while the traversal streams.
+    * One output row per traverser, duplicates included. */
   def selectPop(name: String, pop: Pop): DataFrame = {
-    val idc = s"_as_${name}_id"
-    val allc = s"_as_${name}_ids"
-    require(df.columns.contains(idc), s"no as('$name') label in traversal")
-    val occurs = df.columns.contains(allc)
-    pop match {
-      case Pop.All =>
-        val ids = if (occurs) col(allc) else F.array(col(idc))
-        df.select(F.concat_ws(",", ids.cast("array<string>")).as(s"${name}_ids"))
-      case Pop.First | Pop.Last =>
-        val isFirst = pop == Pop.First
-        val pick = if (isFirst && occurs) col(allc).getItem(0) else col(idc)
-        val isV = if (isFirst) asFirstMeta.getOrElse(name, true) else asMeta.getOrElse(name, true)
-        val keep = elementKeep(isV)
-        val base = (if (isV) graph.vertices else graph.edges)
-          .select(keep.map(c => col(c).as(s"__pop_$c")): _*)
-        df.join(base, pick === col("__pop_id"))
-          .select(keep.map(c => col(s"__pop_$c").as(s"${name}_$c")): _*)
+    val (pick, isV) = popBinding(name, pop)
+    if (pop == Pop.All) df.select(F.concat_ws(",", pick.cast("array<string>")).as(s"${name}_ids"))
+    else {
+      val keep = elementKeep(isV)
+      joinBinding(df, (pick, isV), keep, "__pop_")
+        .select(keep.map(c => col(s"__pop_$c").as(s"${name}_$c")): _*)
     }
   }
 
@@ -408,59 +481,33 @@ final case class Traversal(
 
   /** select('a','b') → flat columns `<name>_<col>` per saved step. Each label
     * joins the graph's element table back on the carried id — ids stream
-    * through the traversal, full rows materialize only here. */
+    * through the traversal, full rows materialize only here. One output row
+    * per traverser, duplicates included. */
   def select(names: String*): DataFrame = {
-    var cur = df
-    val out = Seq.newBuilder[Column]
-    names.foreach { n =>
-      val idc = s"_as_${n}_id"
-      require(cur.columns.contains(idc), s"no as('$n') label in traversal")
-      val keep = elementKeep(asMeta.getOrElse(n, true))
-      val base = (if (asMeta.getOrElse(n, true)) graph.vertices else graph.edges)
-        .select(keep.map(c => col(c).as(s"__sel_${n}_$c")): _*)
-      cur = cur.join(base, col(idc) === col(s"__sel_${n}_id"))
-      out ++= keep.map(c => col(s"__sel_${n}_$c").as(s"${n}_$c"))
-    }
-    cur.select(out.result(): _*)
+    val bound = names.map(n => (n, popBinding(n)))
+    bound.foldLeft(df) { case (cur, (n, b)) => joinBinding(cur, b, elementKeep(b._2), s"__sel_${n}_") }
+      .select(bound.flatMap { case (n, (_, isV)) =>
+        elementKeep(isV).map(c => col(s"__sel_${n}_$c").as(s"${n}_$c")) }: _*)
   }
 
   /** select('a').by('name') — by-modulated select (TinkerPop SelectStep with
     * by()): each label contributes only the named property. Indexed join
-    * aliases allow the same label twice with different keys. */
+    * aliases allow the same label twice with different keys. One output row
+    * per traverser, duplicates included. */
   def selectBy(pairs: (String, String)*): DataFrame = {
-    var cur = df
-    val out = Seq.newBuilder[Column]
-    pairs.zipWithIndex.foreach { case ((n, k), i) =>
-      val idc = s"_as_${n}_id"
-      require(cur.columns.contains(idc), s"no as('$n') label in traversal")
-      val base = (if (asMeta.getOrElse(n, true)) graph.vertices else graph.edges)
-        .select(col("id").as(s"__sb${i}_id"), col(k).as(s"__sb${i}_v"))
-      cur = cur.join(base, col(idc) === col(s"__sb${i}_id"))
-      out += col(s"__sb${i}_v").as(s"${n}_$k")
-    }
-    cur.select(out.result(): _*)
+    val keyed = pairs.zipWithIndex
+    keyed.foldLeft(df) { case (cur, ((n, k), i)) =>
+      joinBinding(cur, popBinding(n), Seq(k), s"__sb${i}_") }
+      .select(keyed.map { case ((n, k), i) => col(s"__sb${i}_$k").as(s"${n}_$k") }: _*)
   }
 
   // ---------- by()-modulation (traversal-valued by) ----------
-  /** Correlated by()-core: run `step` from this frontier with id provenance,
-    * aggregate `value` per source element, left-join the scalar back onto the
-    * frontier as `__byv`. Sources whose sub-traversal is empty get `default`
-    * (Gremlin by(out().count()) yields 0 there). One aggregate + one join —
-    * never a per-element subquery. */
-  private def bySubValue(step: Traversal => Traversal, value: Column,
-      default: Column): DataFrame = {
-    val stepped = step(this.as("__by"))
-    val vals = stepped.df.groupBy(col("_as___by_id").as("__bid"))
-      .agg(value.as("__byv"))
-    df.join(vals, col("id") === col("__bid"), "left")
-      .withColumn("__byv", F.coalesce(col("__byv"), default))
-      .drop("__bid")
-  }
-
   /** order().by(subTraversal) — traversal-valued ordering (TinkerPop
     * `order().by(outE().count(), desc)`): each element sorts by an aggregate
     * over a sub-traversal rooted at it; ties break on id. `value` is the
-    * aggregate over the stepped frontier (count, sum('weight'), …). */
+    * aggregate over the stepped frontier (count, sum('weight'), …).
+    * Duplicate traversers each sort by ONE sub-run's value (the sub runs
+    * once per source element), and every duplicate stays in the stream. */
   def orderBySub(step: Traversal => Traversal, value: Column = F.count(lit(1)),
       asc: Boolean = true, default: Column = lit(0L)): Traversal = {
     // the sort value stays aboard as a carry column so a following
@@ -468,21 +515,23 @@ final case class Traversal(
     // id; a prior orderBySub's carry is dropped first (re-ordering replaces
     // the order — two same-named columns would be ambiguous). range/skip
     // retire the column once the slice is taken.
-    val withV = bySubValue(step, value, default)
-      .drop("_by_ord").withColumnRenamed("__byv", "_by_ord")
+    val withV = perSourceValue(df, step, value, default, "__by")
+      .drop("_by_ord").withColumnRenamed("__by", "_by_ord")
     val o = Seq(if (asc) col("_by_ord").asc else col("_by_ord").desc, col("id").asc)
     copy(df = withV.orderBy(o: _*), lastOrder = o)
   }
 
   /** group().by(key).by(subTraversal) — keys from the element, per-element
     * values computed by a sub-traversal, folded per group (TinkerPop
-    * `group().by('k').by(out().count())` shape, group fold ⇒ `groupAgg`). */
+    * `group().by('k').by(out().count())` shape, group fold ⇒ `groupAgg`).
+    * Each traverser, duplicates included, contributes ONE sub-run's value
+    * to its group (the sub runs once per source element). */
   def groupBySub(key: String, step: Traversal => Traversal,
       value: Column = F.count(lit(1)), groupAgg: Column => Column = F.sum,
       default: Column = lit(0L)): DataFrame =
-    bySubValue(step, value, default)
+    perSourceValue(df, step, value, default, "__by")
       .groupBy(keyCol(key).as(key))
-      .agg(groupAgg(col("__byv")).as("value"))
+      .agg(groupAgg(col("__by")).as("value"))
 
   /** group().by(keySubTraversal) — by-modulation on the group KEY, not the
     * value (TinkerPop `group().by(out('placed').count())`): each element's
@@ -490,12 +539,14 @@ final case class Traversal(
     * per computed key. `keyValue` is that per-element aggregate (elements
     * with an empty sub-traversal key as `default`); `groupAgg` folds each
     * group (count of members by default). Same one-aggregate-plus-one-join
-    * compilation as every by()-modulation — never a per-element subquery. */
+    * compilation as every by()-modulation — never a per-element subquery.
+    * Each traverser, duplicates included, is a member keyed by ONE sub-run's
+    * value (the sub runs once per source element). */
   def groupByKeySub(keyStep: Traversal => Traversal,
       keyValue: Column = F.count(lit(1)), default: Column = lit(0L),
       groupAgg: Column = F.count(lit(1))): DataFrame =
-    bySubValue(keyStep, keyValue, default)
-      .groupBy(col("__byv").as("key"))
+    perSourceValue(df, keyStep, keyValue, default, "__by")
+      .groupBy(col("__by").as("key"))
       .agg(groupAgg.as("value"))
 
   /** group().by(outerKey).by(group().by(innerKey).by(valueAgg)) — the NESTED
@@ -507,17 +558,19 @@ final case class Traversal(
     * (outerKey(source), innerKey(destination)) with the folded value — a
     * SINGLE two-key aggregate after the sub-traversal, never a per-element
     * subquery or a map-merge loop. `value` is the inner by()-modulated fold
-    * (count by default; any aggregate over the destination frontier). */
+    * (count by default; any aggregate over the destination frontier).
+    * Duplicate traversers each feed their own sub-run into the fold; the
+    * source's outer key is looked up once per element. */
   def groupNested(outerKey: String, step: Traversal => Traversal,
       innerKey: String, value: Column = F.count(lit(1))): DataFrame = {
-    val stepped = step(this.as("__gn"))
-    // recover the SOURCE element's outer key by id-join (the sub-traversal's
-    // frontier carries provenance ids, not source properties — same shape
-    // as projectSubs); then one (outer, inner) aggregate
-    val src = df.select(col("id").as("__gnid"), keyCol(outerKey).as("key"))
+    val stepped = perSource(step, "__gn", once = Nil)
+    // the sub-traversal's frontier carries provenance ids, not source
+    // properties: the outer key joins back from the id-deduplicated frontier
+    val keys = df.select(col("id").as("__gnid"), keyCol(outerKey).as("key"))
+    val src = if (distinctIds) keys else keys.dropDuplicates("__gnid")
     stepped.df
       .withColumn("__gnk", stepped.keyCol(innerKey))
-      .join(src, col("_as___gn_id") === col("__gnid"))
+      .join(src, col("__sid") === col("__gnid"))
       .groupBy(col("key"), col("__gnk").as("key2"))
       .agg(value.as("value"))
   }
@@ -526,20 +579,16 @@ final case class Traversal(
     * field, each a per-element aggregate of its own sub-traversal (TinkerPop
     * by-modulated project). Sub-traversals run independently and join back on
     * the element id — k fields cost k aggregate-joins, never a k-way
-    * cartesian. Plain-column fields use `project` directly. */
+    * cartesian. Plain-column fields use `project` directly. One output row
+    * per traverser, duplicates included, each with ONE sub-run's values
+    * (the subs run once per source element). */
   def projectSubs(idField: (String, Column),
       fields: (String, Traversal => Traversal, Column, Column)*): DataFrame = {
-    val withVals = fields.zipWithIndex.foldLeft(df) {
-      case (cur, ((_, step, value, default), i)) =>
-        val stepped = step(this.as(s"__pj$i"))
-        val vals = stepped.df.groupBy(col(s"_as___pj${i}_id").as(s"__pjk$i"))
-          .agg(value.as(s"__pjv$i"))
-        cur.join(vals, col("id") === col(s"__pjk$i"), "left")
-          .withColumn(s"__pjv$i", F.coalesce(col(s"__pjv$i"), default))
-          .drop(s"__pjk$i")
+    val withVals = fields.zipWithIndex.foldLeft(df) { case (cur, ((_, step, value, default), i)) =>
+      perSourceValue(cur, step, value, default, s"__pj$i")
     }
     withVals.select(idField._2.as(idField._1) +:
-      fields.zipWithIndex.map { case ((n, _, _, _), i) => col(s"__pjv$i").as(n) }: _*)
+      fields.zipWithIndex.map { case ((n, _, _, _), i) => col(s"__pj$i").as(n) }: _*)
   }
 
   def path(): DataFrame = df.select(col("_path").as("path"))
@@ -685,27 +734,44 @@ final case class Traversal(
     * the limit applies PER SOURCE ELEMENT, not globally (Gremlin LocalStep's
     * canonical use). Compiled as a provenance-window top-n: row_number over
     * the source element id with a deterministic order, pre-shuffle-limited by
-    * Spark's WindowGroupLimit. */
+    * Spark's WindowGroupLimit. `n` must be at least 0. Duplicate traversers
+    * each get their element's first `n` results, as in [[localRange]]. */
   def localLimit(n: Int, orderCols: Seq[Column] = Seq(col("id").asc))(
-      step: Traversal => Traversal): Traversal =
+      step: Traversal => Traversal): Traversal = {
+    checkSlice("localLimit", 0, n)
     localRange(0, n, orderCols)(step)
+  }
 
   /** local(step).range(lo, hi) — the per-source-element slice [lo, hi),
     * 0-based (the reference's `local(__.outE().range(10, 20))` — LocalStep
     * over a RangeGlobalStep, TitanGraphTest.java
-    * testTinkerPopOptimizationStrategies). Same provenance-window
-    * compilation as the limit form: row_number over the source element id,
-    * WindowGroupLimit pre-limits both exchange sides at `hi`. */
+    * testTinkerPopOptimizationStrategies), with 0 <= lo <= hi. Same
+    * provenance-window compilation as the limit form: row_number over the
+    * source element id, WindowGroupLimit pre-limits both exchange sides at
+    * `hi`. Each traverser gets its source's slice: duplicates alike in
+    * everything the slice's rows carry (element, path, as-labels, sack)
+    * share one sub-run and one slice. The result is the stepped traversal
+    * (an `outE()` step yields edges). */
   def localRange(lo: Int, hi: Int, orderCols: Seq[Column] = Seq(col("id").asc))(
       step: Traversal => Traversal): Traversal = {
-    val stepped = step(this.as("__local"))
-    val w = Window.partitionBy(col("_as___local_id"))
+    checkSlice("localRange", lo, hi)
+    // a slice's rows carry their traverser's history (path, as-labels,
+    // sack), so traversers differing in anything but element columns each
+    // take their own sub-run
+    val element = (if (isVertex) graph.vertices else graph.edges).columns.toSet - "id"
+    val stepped = perSource(step, "__local", once = df.columns.filterNot(element).toSeq)
+    val grouped = stepped.df.columns.contains("__k")
+    val w = Window.partitionBy(col(if (grouped) "__k" else "__sid"))
       .orderBy(orderCols.map(Traversal.normalizeOrder): _*)
-    val limited = stepped.df.withColumn("__rn", F.row_number().over(w))
-      .filter(col("__rn") > lo && col("__rn") <= hi).drop("__rn")
-    val clean = limited.drop(limited.columns.filter(_.startsWith("_as___local_")).toSeq: _*)
-    copy(df = clean)
+    val slice = stepped.df.withColumn("__rn", F.row_number().over(w))
+      .filter(col("__rn") > lo && col("__rn") <= hi)
+    val each = if (!grouped) slice
+      else slice.withColumn("__rn", F.explode(F.sequence(lit(1L), col("__n"))))
+    stepped.copy(df = each.drop("__rn", "__sid", "__n", "__k"))
   }
+
+  private def checkSlice(step: String, lo: Int, hi: Int): Unit =
+    require(lo >= 0 && hi >= lo, s"$step: needs 0 <= lo <= hi, got lo=$lo, hi=$hi")
 
   /** sample(n) — deterministic pseudo-random sample: order by the md5 of the
     * element id + seed, take n. Gremlin's sample is random per run; a
@@ -756,11 +822,13 @@ final case class Traversal(
   def orderBy(cols: Column*): Traversal = copy(df = df.orderBy(cols: _*), lastOrder = cols)
   def limit(n: Int): Traversal = copy(df = df.limit(n))
 
-  /** range(lo,hi) — zero-based slice [lo,hi); deterministic when preceded by
-    * `order` (uses the last order; Gremlin contract is the same). Compiles to
-    * sort + offset + limit (distributed GlobalLimit/Offset), not a
-    * single-partition global window. */
+  /** range(lo,hi) — zero-based slice [lo,hi) with 0 <= lo <= hi;
+    * deterministic when preceded by `order` (uses the last order; Gremlin
+    * contract is the same). Compiles to sort + offset + limit (distributed
+    * GlobalLimit/Offset), not a single-partition global window. A slice of
+    * the traverser stream: duplicate traversers take one position each. */
   def range(lo: Int, hi: Int): Traversal = {
+    checkSlice("range", lo, hi)
     val ord = if (lastOrder.nonEmpty) lastOrder.map(Traversal.normalizeOrder)
               else Seq(col("id").asc)
     // the orderBySub carry is retired with the slice; lastOrder must not
@@ -789,15 +857,11 @@ final case class Traversal(
     * order-free, so the relational contract is ONE representative per
     * tuple — the binding columns themselves are deterministic, the rest of
     * the representative row is not (same caveat as Spark's dropDuplicates).
-    * Bindings resolve Pop.last, the scope default. */
+    * Bindings resolve Pop.last, the scope default. Duplicate traversers
+    * with the same bindings collapse like any other. */
   def dedupLabels(names: String*): Traversal = {
     require(names.nonEmpty, "dedupLabels needs at least one label")
-    val cols = names.map { n =>
-      val idc = s"_as_${n}_id"
-      require(df.columns.contains(idc), s"no as('$n') label in traversal")
-      idc
-    }
-    copy(df = df.dropDuplicates(cols))
+    copy(df = df.dropDuplicates(names.map(bindingId)))
   }
   def dedupBy(keys: String*): Traversal = copy(df = df.dropDuplicates(keys))
 
@@ -871,15 +935,14 @@ final case class Traversal(
     * every shared variable — the reference runs MatchStep through its
     * TinkerPop integration, AbstractTitanGraphProvider.java:57). One
     * multi-column left-semi hash join; the distinct binding projection is
-    * id-only and AQE-broadcastable. */
+    * id-only and AQE-broadcastable. A filter: every traverser, duplicates
+    * included, is kept or dropped on its own bindings. */
   def matchOnAll(other: Traversal, aliases: Seq[String]): Traversal = {
     require(aliases.nonEmpty, "matchOnAll needs at least one shared alias")
-    val keys = aliases.map(a => s"_as_${a}_id")
-    val bindings = other.df
-      .select(keys.zipWithIndex.map { case (k, i) => col(k).as(s"__m$i") }: _*)
-      .distinct()
-    val cond = keys.zipWithIndex
-      .map { case (k, i) => col(k) === col(s"__m$i") }.reduce(_ && _)
+    val keys = aliases.zipWithIndex.map { case (a, i) =>
+      (popBinding(a)._1, other.popBinding(a)._1, s"__m$i") }
+    val bindings = other.df.select(keys.map { case (_, o, m) => o.as(m) }: _*).distinct()
+    val cond = keys.map { case (k, _, m) => k === col(m) }.reduce(_ && _)
     copy(df = df.join(bindings, cond, "left_semi"))
   }
 
@@ -1144,12 +1207,11 @@ final case class Traversal(
       direction: Direction = Direction.OUT,
       props: Seq[String] = Nil, enforce: Boolean = true): Traversal = {
     require(isVertex, "addE: frontier must be vertices")
-    val idc = s"_as_${stepLabel}_id"
-    require(df.columns.contains(idc), s"no as('$stepLabel') label in traversal")
-    require(asMeta.getOrElse(stepLabel, true), s"addE: as('$stepLabel') must mark a vertex step")
+    val (saved, savedIsVertex) = popBinding(stepLabel)
+    require(savedIsVertex, s"addE: as('$stepLabel') must mark a vertex step")
     val (srcC, dstC) = direction match {
-      case Direction.OUT => (col("id"), col(idc))
-      case Direction.IN  => (col(idc), col("id"))
+      case Direction.OUT => (col("id"), saved)
+      case Direction.IN  => (saved, col("id"))
       case Direction.BOTH =>
         throw new IllegalArgumentException("addE: direction must be IN or OUT (edges are directed)")
     }

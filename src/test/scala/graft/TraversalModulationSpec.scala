@@ -186,6 +186,25 @@ class TraversalModulationSpec extends AnyFunSuite {
     }
   }
 
+  test("range, localRange and localLimit reject lo < 0 and hi < lo and name the step") {
+    // unchecked, range(2,1) fails in Spark's analyzer (INVALID_LIMIT_LIKE_EXPRESSION)
+    // and the local forms return no rows
+    val v = g.traversal.V().hasLabel("customer")
+    val calls: Seq[(String, () => Any)] = Seq(
+      "range" -> (() => v.range(2, 1).toDF.collect()),
+      "range" -> (() => v.range(-1, 2).toDF.collect()),
+      "localRange" -> (() => v.localRange(2, 1)(_.out("placed")).toDF.collect()),
+      "localRange" -> (() => v.localRange(1, -1)(_.out("placed")).toDF.collect()),
+      "localRange" -> (() => v.localRange(-1, 1)(_.out("placed")).toDF.collect()),
+      "localLimit" -> (() => v.localLimit(-1)(_.out("placed")).toDF.collect()))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(s"$name:"), e.getMessage)
+    }
+    // the empty slice stays legal
+    assert(v.range(1, 1).toDF.isEmpty && v.localLimit(0)(_.out("placed")).toDF.isEmpty)
+  }
+
   test("repeatEmitFilter emits matching frontiers but steps everyone") {
     // filter: nations+suppliers. Depth 1 = nations (pass), depth 2 =
     // customers+suppliers (suppliers pass); customers are walked, not emitted
